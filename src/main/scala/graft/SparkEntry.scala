@@ -556,6 +556,29 @@ object SparkEntry {
       |         epoch_us(ts)//1000000 AS ts_epoch, CAST(ts AS DATE) AS day
       |  FROM events)""".stripMargin
 
+  /** Daily VWAP `v(symbol, day, vwap, day_volume, n_ticks)` over
+    * [[finQuoteCte]], exact like `Finance.vwapOf`: the decimal
+    * price·volume sum in integer micro-units, divided by the volume
+    * with integer HALF_UP rounding (away from zero on a tie) at 6
+    * decimals. A DOUBLE quotient rounded by ROUND would round some
+    * half-way ties down (exact 11.0871875 divides to
+    * 11.087187499999999).
+    */
+  private val finVwapCte: String =
+    finQuoteCte + """,
+      |vb AS (
+      |  SELECT symbol, day,
+      |    CAST(CAST(SUM(CAST(price AS DECIMAL(18,6)) * CAST(volume AS DECIMAL(18,6)))
+      |      AS DECIMAL(38,6)) * 1000000 AS HUGEINT) AS pv_u,
+      |    SUM(volume) AS vol,
+      |    COUNT(*) AS n_ticks
+      |  FROM q GROUP BY symbol, day HAVING SUM(volume) > 0),
+      |v AS (
+      |  SELECT symbol, day,
+      |    CAST(SIGN(pv_u) * ((2 * ABS(pv_u) + vol) // (2 * vol)) AS DOUBLE) / 1e6 AS vwap,
+      |    vol::BIGINT AS day_volume, n_ticks
+      |  FROM vb)""".stripMargin
+
   /** Per-gram-size CTE block for the contamination sweep oracle —
     * the same PolyHash replication as x_decontaminate, parameterized
     * by gram width `n`. */
@@ -1561,12 +1584,7 @@ object SparkEntry {
 
     // top day-over-day VWAP movers off the engine-exact round-6 dailies
     "x_top_movers" ->
-      (finQuoteCte + """,
-        |v AS (
-        |  SELECT symbol, day,
-        |    ROUND(CAST(CAST(SUM(CAST(price AS DECIMAL(18,6)) * CAST(volume AS DECIMAL(18,6)))
-        |      AS VARCHAR) AS DOUBLE) / SUM(volume), 6) AS vwap
-        |  FROM q GROUP BY symbol, day HAVING SUM(volume) > 0),
+      (finVwapCte + """,
         |d AS (SELECT symbol, day, vwap,
         |        LAG(vwap) OVER (PARTITION BY symbol ORDER BY day) AS prev_vwap
         |      FROM v),
@@ -3871,13 +3889,8 @@ object SparkEntry {
         |FROM r GROUP BY symbol, day ORDER BY symbol, day""".stripMargin),
 
     "x_vwap" ->
-      (finQuoteCte + """
-        |SELECT symbol, day,
-        |  ROUND(CAST(CAST(SUM(CAST(price AS DECIMAL(18,6)) * CAST(volume AS DECIMAL(18,6)))
-        |    AS VARCHAR) AS DOUBLE) / SUM(volume), 6) AS vwap,
-        |  SUM(volume)::BIGINT AS day_volume,
-        |  COUNT(*) AS n_ticks
-        |FROM q GROUP BY symbol, day HAVING SUM(volume) > 0
+      (finVwapCte + """
+        |SELECT symbol, day, vwap, day_volume, n_ticks FROM v
         |ORDER BY symbol, day""".stripMargin),
 
     "x_volatility" ->

@@ -86,9 +86,21 @@ object Finance {
       .filter(col("day_volume") > 0)
       .select(
         col("symbol"), col("day"),
-        round(col("pv").cast("double") / col("day_volume"), 6).as("vwap"),
+        vwapOf(col("pv"), col("day_volume")).as("vwap"),
         col("day_volume"), col("n_ticks"))
       .orderBy("symbol", "day")
+
+  /** The VWAP division shared by [[vwap]] and its streaming twin
+    * [[graft.streaming.StreamingOhlc.vwapBars]]: the exact price·volume
+    * sum divided in DECIMAL and rounded once, HALF_UP at 6 decimals. A
+    * double quotient can land just below a half-way tie at the 7th
+    * decimal (pv 17140.53 / 160 = 107.1283125 divides to
+    * 107.12831249999999 and would round down). `pv` has at most 6
+    * decimals (decimal(18,6) prices times integer volumes), so the cast
+    * is exact and leaves the quotient at scale 6.
+    */
+  def vwapOf(pv: Column, volume: Column): Column =
+    round(pv.cast("decimal(38,6)") / volume, 6).cast("double")
 
   /** Per-symbol log-return volatility: r_t = ln(p_t / p_{t-1}) over the
     * total tick order, then stddev_samp per symbol. The lag window and

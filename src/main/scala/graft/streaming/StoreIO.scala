@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 
 /** Shared store I/O for the streaming twins' parquet side-stores.
@@ -15,6 +16,21 @@ import org.apache.spark.sql.types.StructType
   * object stores; `java.io.File(path).exists()` (the pattern this
   * replaces) is always false for `hdfs://`/`s3a://` URIs and would
   * silently read a populated store as empty.
+  *
+  * Exactly-once contract: a micro-batch can be replayed (a failure
+  * between its store write and the checkpoint commit runs the same
+  * `batchId` again over the same rows). Every store row therefore
+  * carries the `batch_id` that wrote it, and [[writeBatch]] lands a
+  * batch's rows in its own `batch_id=N` partition with DYNAMIC
+  * partition overwrite: a replay overwrites its own partition with
+  * identical content instead of appending a second copy, and never
+  * touches another batch's rows. This is what keeps additive state
+  * (counters, pair deltas, partial sums — exactly the state that
+  * silently corrupts under at-least-once) correct, and why such
+  * stores hold per-batch partials summed at serve time rather than a
+  * read-modify-write upsert. A sink that reads its own store while
+  * writing must read it through [[readOthers]], so a replay never
+  * sees its own previous (possibly partial) attempt.
   */
 object StoreIO {
 
@@ -34,4 +50,21 @@ object StoreIO {
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType.fromDDL(ddl))
+
+  /** The store as [[readOrEmpty]] reads it, minus the partition that
+    * `batchId` itself writes — the replay-safe read.
+    */
+  def readOthers(spark: SparkSession, path: String, ddl: String,
+                 batchId: Long): DataFrame =
+    readOrEmpty(spark, path, ddl).filter(col("batch_id") =!= batchId)
+
+  /** Write `df` as micro-batch `batchId`'s partition of the store at
+    * `path`, overwriting only that partition (the replay-idempotent
+    * write of the contract above).
+    */
+  def writeBatch(df: DataFrame, batchId: Long, path: String): Unit =
+    df.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id").parquet(path)
 }

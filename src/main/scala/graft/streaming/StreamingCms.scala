@@ -17,11 +17,7 @@ import graft.operators.TextAnalysis
   * where the vocabulary no longer fits a shuffle but depth x width
   * counters always fit one executor.
   *
-  * Exactly-once: partials land partitioned by batch_id with dynamic
-  * partition overwrite, so a replayed micro-batch overwrites its own
-  * partition with identical content instead of double-counting
-  * ([[StreamingDedup]]'s idempotence contract — additive state is
-  * exactly the state that silently corrupts on at-least-once).
+  * Exactly-once: per-batch partials, [[StoreIO]]'s contract.
   */
 object StreamingCms {
 
@@ -30,11 +26,7 @@ object StreamingCms {
   /** foreachBatch body: write this batch's partial counter table. */
   def counterSink(ctrPath: String): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      TextAnalysis.cmsCountersFrom(batch)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(ctrPath)
+      StoreIO.writeBatch(TextAnalysis.cmsCountersFrom(batch), batchId, ctrPath)
       ()
   }
 

@@ -26,9 +26,7 @@ import graft.operators.CorpusOps
   * (thousands of docs, not corpus-scale) — it broadcasts into a
   * left-semi probe, so the arriving shard never shuffles for the
   * probe; the only shuffle is the per-doc count aggregate, keyed on
-  * doc_id. Batch replay is idempotent: output is partitioned by
-  * batch_id with dynamic partition overwrite, so a replayed batch
-  * overwrites itself ([[StreamingDedup]]'s contract).
+  * doc_id. Exactly-once: [[StoreIO]]'s contract.
   */
 object StreamingDecontam {
 
@@ -76,13 +74,10 @@ object StreamingDecontam {
       // by the eval suite, not the corpus (same hint as the batch op)
       val hits = rows.join(broadcast(bench), Seq("gh"), "left_semi")
         .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
-      sizes.join(hits, Seq("doc_id"))
-        .withColumn("contamination",
-          round(col("n_shared").cast("double") / col("n_grams"), 6))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(reportPath)
+      StoreIO.writeBatch(sizes.join(hits, Seq("doc_id"))
+          .withColumn("contamination",
+            round(col("n_shared").cast("double") / col("n_grams"), 6)),
+        batchId, reportPath)
       ()
   }
 }

@@ -22,11 +22,7 @@ import org.apache.spark.sql.functions._
   * join is co-located, and the pattern is the standard idempotent
   * foreachBatch upsert.
   *
-  * Exactly-once: a replayed micro-batch (failure between the write and
-  * the checkpoint commit) must not duplicate store rows, so each
-  * batch's additions land in a `batch_id=N` partition via DYNAMIC
-  * partition overwrite — the replay overwrites its own partition
-  * instead of appending a second copy ([[survivorSink]] is therefore
+  * Exactly-once: [[StoreIO]]'s contract ([[survivorSink]] is
   * idempotent per (batch, id), unit-tested by calling it twice).
   */
 object StreamingDedup {
@@ -52,17 +48,9 @@ object StreamingDedup {
       val batchSurv = batch
         .groupBy(md5(encode(col("text"), "UTF-8")).as("content_hash"))
         .agg(min(col("doc_id")).as("keep_id"))
-      val seen = readStore(spark, storePath)
-        // a replayed batch must not anti-join against its own previous
-        // (possibly partial) attempt — it overwrites that partition
-        .filter(col("batch_id") =!= batchId)
+      val seen = StoreIO.readOthers(spark, storePath, StoreSchema, batchId)
         .select("content_hash")
-      batchSurv.join(seen, Seq("content_hash"), "left_anti")
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(storePath)
+      StoreIO.writeBatch(batchSurv.join(seen, Seq("content_hash"), "left_anti"), batchId, storePath)
   }
 
   /** Current survivors `(content_hash, keep_id)`, the streaming analog

@@ -31,11 +31,9 @@ import org.apache.spark.sql.functions._
   * At 100 TB cadence the standard move applies: periodically compact
   * the store by writing `capped` back as a single baseline partition.
   *
-  * Exactly-once: a replayed micro-batch overwrites its own
-  * `batch_id=N` partition via dynamic partition overwrite (idempotent
-  * per batch, unit-tested by re-running a sink call), and `capped` is
-  * insensitive to a doc appearing in two batches (candidate dedup on
-  * (source, doc_id)) — the [[StreamingDedup]] durability contract.
+  * Exactly-once: [[StoreIO]]'s contract (unit-tested by re-running a
+  * sink call), and `capped` is insensitive to a doc appearing in two
+  * batches (candidate dedup on (source, doc_id)).
   */
 object StreamingDomainCap {
 
@@ -55,23 +53,19 @@ object StreamingDomainCap {
       import org.apache.spark.sql.expressions.Window
       graft.functions.PolyHash.register(batch.sparkSession)
       val w = Window.partitionBy("source").orderBy(col("h"), col("doc_id"))
-      batch
-        .select(col("doc_id"), col("source"),
-          call_function(graft.functions.PolyHash.Name,
-            col("doc_id").cast("string")).as("h"))
-        // a doc resent WITHIN one micro-batch must hold one rank slot,
-        // not several: duplicate rows rank consecutively (identical
-        // (h, doc_id) key) and would evict a distinct doc from the
-        // batch-local top-cap that the read-side dedup cannot recover
-        .dropDuplicates("source", "doc_id")
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= cap)
-        .drop("rk")
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(storePath)
+      StoreIO.writeBatch(batch
+          .select(col("doc_id"), col("source"),
+            call_function(graft.functions.PolyHash.Name,
+              col("doc_id").cast("string")).as("h"))
+          // a doc resent WITHIN one micro-batch must hold one rank slot,
+          // not several: duplicate rows rank consecutively (identical
+          // (h, doc_id) key) and would evict a distinct doc from the
+          // batch-local top-cap that the read-side dedup cannot recover
+          .dropDuplicates("source", "doc_id")
+          .withColumn("rk", row_number().over(w))
+          .filter(col("rk") <= cap)
+          .drop("rk"),
+        batchId, storePath)
   }
 
   /** The current kept set `(source, rk, doc_id)` — column-identical to

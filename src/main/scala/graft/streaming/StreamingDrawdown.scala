@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Finance.maxDrawdown]] — the
   * live risk monitor: per-symbol state is the single running peak, and
@@ -30,19 +29,12 @@ object StreamingDrawdown {
 
   def withDrawdown(ticks: Dataset[Tick]): Dataset[DdOut] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[PeakState, DdOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sym: String, rows: Iterator[Tick], state: GroupState[PeakState]) =>
-          val ordered = rows.toSeq.sortBy(t => (t.ts.getTime, t.id))
-          var peak = state.getOption.map(_.peak).getOrElse(0.0)
-          val out = ordered.filter(_.price > 0).map { t =>
-            peak = math.max(peak, t.price)
-            DdOut(sym, t.id, t.price, peak, (peak - t.price) / peak)
-          }
-          if (peak > 0) state.update(PeakState(peak))
-          out.iterator
-      }
+    KeyedScan.scan(ticks)(_.symbol, t => (t.ts.getTime, t.id),
+        PeakState(0.0)) { (st, t) =>
+      if (t.price > 0) {
+        val peak = math.max(st.peak, t.price)
+        (PeakState(peak), Some(DdOut(t.symbol, t.id, t.price, peak, (peak - t.price) / peak)))
+      } else (st, None)
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Analytics
 
@@ -37,35 +36,19 @@ object StreamingEma {
   final case class EmaOut(user_id: Long, event_id: Long,
                           value: Double, ema: Double)
 
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** round(value·100) with the batch expression's HALF_UP semantics. */
-  private def toCents(v: Double): Long =
-    BigDecimal(v * 100).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-
   def withEma(events: Dataset[Ev]): Dataset[EmaOut] = {
     import events.sparkSession.implicits._
     val taps = Analytics.EmaTaps
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[EmaState, EmaOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, rows: Iterator[Ev], state: GroupState[EmaState]) =>
-          val ordered = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var buf = state.getOption.map(_.cents).getOrElse(Nil)
-          val out = ordered.map { e =>
-            buf = (buf :+ toCents(e.value)).takeRight(taps)
-            val m = buf.size
-            // age a = 0 is the newest element: weight 2^(taps-1-a)
-            val num = buf.zipWithIndex
-              .map { case (c, i) => c << (taps - 1 - (m - 1 - i)) }.sum
-            val den = (0 until m).map(a => 1L << (taps - 1 - a)).sum
-            EmaOut(e.user_id, e.event_id, e.value,
-              round6(num.toDouble / (den * 100L)))
-          }
-          state.update(EmaState(buf))
-          out.iterator
-      }
+    KeyedScan.scan(events)(_.user_id, e => (e.ts.getTime, e.event_id),
+        EmaState(Nil)) { (st, e) =>
+      val buf = (st.cents :+ KeyedScan.cents(e.value)).takeRight(taps)
+      val m = buf.size
+      // age a = 0 is the newest element: weight 2^(taps-1-a)
+      val num = buf.zipWithIndex
+        .map { case (c, i) => c << (taps - 1 - (m - 1 - i)) }.sum
+      val den = (0 until m).map(a => 1L << (taps - 1 - a)).sum
+      (EmaState(buf), Some(EmaOut(e.user_id, e.event_id, e.value,
+        KeyedScan.round6(num.toDouble / (den * 100L)))))
+    }
   }
 }

@@ -27,20 +27,13 @@ import org.apache.spark.sql.functions._
   * their join keys (ok / (pa, pb)) so every maintenance join
   * co-locates.
   *
-  * Exactly-once: both stores use the `batch_id=N` dynamic-partition-
-  * overwrite idiom ([[StreamingDedup]]): a replayed batch filters its
-  * own partition out of the read and overwrites it in the write, so
-  * replay is idempotent — and pair counts live as per-batch DELTAS
-  * (summed at serve time) precisely so the store stays append-shaped
-  * under that idiom instead of needing a read-modify-write upsert.
+  * Exactly-once: both stores follow [[StoreIO]]'s contract, which is
+  * why pair counts live as per-batch DELTAS summed at serve time.
   */
 object StreamingGraph {
 
   private val ItemSchema = "ok BIGINT, pk BIGINT, batch_id BIGINT"
   private val PairSchema = "pa BIGINT, pb BIGINT, delta_n BIGINT, batch_id BIGINT"
-
-  def readItems(spark: SparkSession, itemPath: String): DataFrame =
-    StoreIO.readOrEmpty(spark, itemPath, ItemSchema)
 
   def readPairs(spark: SparkSession, pairPath: String): DataFrame =
     StoreIO.readOrEmpty(spark, pairPath, PairSchema)
@@ -54,10 +47,7 @@ object StreamingGraph {
       val b = batch
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
-      val prevItems = readItems(spark, itemPath)
-        // a replayed batch must not see its own previous (possibly
-        // partial) attempt — it overwrites that partition below
-        .filter(col("batch_id") =!= batchId)
+      val prevItems = StoreIO.readOthers(spark, itemPath, ItemSchema, batchId)
         .select("ok", "pk")
       // genuinely-new items; checkpointed because three joins and the
       // item write all consume it
@@ -73,16 +63,8 @@ object StreamingGraph {
                 greatest(col("a.pk"), col("b.pk")).as("pb"))
       val delta = nn.unionAll(no)
         .groupBy("pa", "pb").agg(count(lit(1)).as("delta_n"))
-      delta.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(pairPath)
-      fresh.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(itemPath)
+      StoreIO.writeBatch(delta, batchId, pairPath)
+      StoreIO.writeBatch(fresh, batchId, itemPath)
   }
 
   /** Current thresholded edge set `(pa, pb)` — the streaming analog of

@@ -29,8 +29,7 @@ import org.apache.spark.sql.functions._
   * vocabulary-sized min aggregate, and assembles the <= buckets-row
   * growth table through the SAME
   * [[graft.operators.TextAnalysis.heapsAssemble]] code path as batch.
-  * Batch replay is idempotent: both stores partition by batch_id with
-  * dynamic partition overwrite ([[StreamingDedup]]'s contract).
+  * Exactly-once: [[StoreIO]]'s contract.
   */
 object StreamingHeaps {
 
@@ -45,16 +44,9 @@ object StreamingHeaps {
       val toks = batch
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
         .filter(length(col("tok")) > 0)
-      toks.groupBy("doc_id").agg(count(lit(1)).as("n_toks"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(docStore)
-      toks.groupBy("tok").agg(min(col("doc_id")).as("min_doc"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(tokStore)
+      StoreIO.writeBatch(toks.groupBy("doc_id").agg(count(lit(1)).as("n_toks")), batchId, docStore)
+      StoreIO.writeBatch(toks.groupBy("tok").agg(min(col("doc_id")).as("min_doc")),
+        batchId, tokStore)
       ()
   }
 

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.streaming.KeyedScan.{cents, round6}
 
 /** Streaming twins of the two sliding-frame indicators
   * [[graft.operators.Finance.rsi]] (Cutler 14-period) and
@@ -51,8 +52,9 @@ object StreamingIndicators {
                            sma20: Double, upper_band: Double, lower_band: Double,
                            breach_up: Boolean, breach_dn: Boolean)
 
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  /** The tick order every indicator twin folds in: the batch window's
+    * exact (ts, id) ordering. */
+  private def tickOrder(t: Tick): (Long, Long) = (t.ts.getTime, t.id)
 
   /** Spark's StddevSamp over a window frame: the CentralMomentAgg
     * recurrence in frame row order, then sqrt(m2 / (n − 1)).
@@ -71,72 +73,44 @@ object StreamingIndicators {
 
   def withRsi(ticks: Dataset[Tick], period: Int = 14): Dataset[RsiOut] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[RsiState, RsiOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Tick], state: GroupState[RsiState]) =>
-          val ordered = rows.toSeq.sortBy(t => (t.ts.getTime, t.id))
-          var st = state.getOption.getOrElse(RsiState(Double.NaN, Nil, 0L))
-          val out = Seq.newBuilder[RsiOut]
-          ordered.foreach { t =>
-            val n = st.n + 1
-            val deltas =
-              if (st.n == 0) Nil
-              else (st.deltas :+ (t.price - st.prev)).takeRight(period)
-            st = RsiState(t.price, deltas, n)
-            // batch gate rn >= period + 1: the frame holds `period`
-            // non-null deltas exactly
-            if (n >= period + 1) {
-              // avg over the frame: double sum in frame order / count
-              val ag = deltas.map(d => math.max(d, 0.0)).sum / period
-              val al = deltas.map(d => math.max(-d, 0.0)).sum / period
-              val rsi =
-                if (ag + al == 0.0) 50.0
-                else 100.0 * ag / (ag + al)
-              out += RsiOut(t.symbol, t.id, t.price, round6(rsi))
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    KeyedScan.scan(ticks)(_.symbol, tickOrder, RsiState(Double.NaN, Nil, 0L)) { (st, t) =>
+      val n = st.n + 1
+      val deltas =
+        if (st.n == 0) Nil
+        else (st.deltas :+ (t.price - st.prev)).takeRight(period)
+      // batch gate rn >= period + 1: the frame holds `period`
+      // non-null deltas exactly
+      val out = if (n >= period + 1) {
+        // avg over the frame: double sum in frame order / count
+        val ag = deltas.map(d => math.max(d, 0.0)).sum / period
+        val al = deltas.map(d => math.max(-d, 0.0)).sum / period
+        val rsi =
+          if (ag + al == 0.0) 50.0
+          else 100.0 * ag / (ag + al)
+        Some(RsiOut(t.symbol, t.id, t.price, round6(rsi)))
+      } else None
+      (RsiState(t.price, deltas, n), out)
+    }
   }
 
   def withBollinger(ticks: Dataset[Tick], nTicks: Int = 20): Dataset[BollOut] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[BollState, BollOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Tick], state: GroupState[BollState]) =>
-          val ordered = rows.toSeq.sortBy(t => (t.ts.getTime, t.id))
-          var st = state.getOption.getOrElse(BollState(Nil, 0L))
-          val out = Seq.newBuilder[BollOut]
-          ordered.foreach { t =>
-            val prices = (st.prices :+ t.price).takeRight(nTicks)
-            val n = st.n + 1
-            st = BollState(prices, n)
-            if (n >= nTicks) {
-              // the batch expression sequence: round sma/sd FIRST,
-              // then the ±2σ arithmetic, then round the edges
-              val sma = round6(prices.sum / nTicks)
-              val sd = round6(stddevSamp(prices))
-              val upper = round6(sma + sd * 2)
-              val lower = round6(sma - sd * 2)
-              out += BollOut(t.symbol, t.id, t.price, sma, upper, lower,
-                t.price > upper, t.price < lower)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    KeyedScan.scan(ticks)(_.symbol, tickOrder, BollState(Nil, 0L)) { (st, t) =>
+      val prices = (st.prices :+ t.price).takeRight(nTicks)
+      val n = st.n + 1
+      val out = if (n >= nTicks) {
+        // the batch expression sequence: round sma/sd FIRST,
+        // then the ±2σ arithmetic, then round the edges
+        val sma = round6(prices.sum / nTicks)
+        val sd = round6(stddevSamp(prices))
+        val upper = round6(sma + sd * 2)
+        val lower = round6(sma - sd * 2)
+        Some(BollOut(t.symbol, t.id, t.price, sma, upper, lower,
+          t.price > upper, t.price < lower))
+      } else None
+      (BollState(prices, n), out)
+    }
   }
-
-  /** Spark's `round(x, 0)` on a double then bigint cast — the batch
-    * cents projection `round(price * 100).cast("bigint")`.
-    */
-  private def cents(price: Double): Long =
-    BigDecimal(price * 100).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
   /** The batch truncated-EMA chain ([[graft.operators.Finance.macd]]):
     * sum_j COALESCE(lag_j * w_j, 0) / sum_j (w_j if lag_j present) —
@@ -175,28 +149,16 @@ object StreamingIndicators {
     val fastW = graft.operators.Finance.MacdFastW
     val slowW = graft.operators.Finance.MacdSlowW
     val sigW  = graft.operators.Finance.MacdSignalW
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[MacdState, MacdOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Tick], state: GroupState[MacdState]) =>
-          val ordered = rows.toSeq.sortBy(t => (t.ts.getTime, t.id))
-          var st = state.getOption.getOrElse(MacdState(Nil, Nil))
-          val out = Seq.newBuilder[MacdOut]
-          ordered.foreach { t =>
-            val ms = (st.ms :+ cents(t.price).toDouble).takeRight(lags)
-            val ring = ms.toIndexedSeq
-            val macdRaw = truncEma(ring, fastW) - truncEma(ring, slowW)
-            val macds = (st.macds :+ macdRaw).takeRight(lags)
-            val signal = truncEma(macds.toIndexedSeq, sigW)
-            st = MacdState(ms, macds)
-            out += MacdOut(t.symbol, t.id, t.price,
-              round6(macdRaw / 100), round6(signal / 100),
-              round6((macdRaw - signal) / 100))
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    KeyedScan.scan(ticks)(_.symbol, tickOrder, MacdState(Nil, Nil)) { (st, t) =>
+      val ms = (st.ms :+ cents(t.price).toDouble).takeRight(lags)
+      val ring = ms.toIndexedSeq
+      val macdRaw = truncEma(ring, fastW) - truncEma(ring, slowW)
+      val macds = (st.macds :+ macdRaw).takeRight(lags)
+      val signal = truncEma(macds.toIndexedSeq, sigW)
+      (MacdState(ms, macds), Some(MacdOut(t.symbol, t.id, t.price,
+        round6(macdRaw / 100), round6(signal / 100),
+        round6((macdRaw - signal) / 100))))
+    }
   }
 
   /** rings of the last ≤MacdLags cents, e1 and e2 values, oldest-first. */
@@ -218,29 +180,21 @@ object StreamingIndicators {
     import ticks.sparkSession.implicits._
     val lags = graft.operators.Finance.MacdLags
     val w = graft.operators.Finance.TrixW
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[TrixState, TrixOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Tick], state: GroupState[TrixState]) =>
-          val ordered = rows.toSeq.sortBy(t => (t.ts.getTime, t.id))
-          var st = state.getOption.getOrElse(TrixState(Nil, Nil, Nil, 0.0, false))
-          val out = Seq.newBuilder[TrixOut]
-          ordered.foreach { t =>
-            val ms  = (st.ms :+ cents(t.price).toDouble).takeRight(lags)
-            val e1  = truncEma(ms.toIndexedSeq, w)
-            val e1s = (st.e1s :+ e1).takeRight(lags)
-            val e2  = truncEma(e1s.toIndexedSeq, w)
-            val e2s = (st.e2s :+ e2).takeRight(lags)
-            val e3  = truncEma(e2s.toIndexedSeq, w)
-            if (st.hasPrev && st.prevE3 != 0.0)
-              out += TrixOut(t.symbol, t.id, t.price, round6(e3 / 100),
-                round6(10000.0 * (e3 - st.prevE3) / st.prevE3))
-            st = TrixState(ms, e1s, e2s, e3, hasPrev = true)
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    KeyedScan.scan(ticks)(_.symbol, tickOrder,
+        TrixState(Nil, Nil, Nil, 0.0, false)) { (st, t) =>
+      val ms  = (st.ms :+ cents(t.price).toDouble).takeRight(lags)
+      val e1  = truncEma(ms.toIndexedSeq, w)
+      val e1s = (st.e1s :+ e1).takeRight(lags)
+      val e2  = truncEma(e1s.toIndexedSeq, w)
+      val e2s = (st.e2s :+ e2).takeRight(lags)
+      val e3  = truncEma(e2s.toIndexedSeq, w)
+      val out =
+        if (st.hasPrev && st.prevE3 != 0.0)
+          Some(TrixOut(t.symbol, t.id, t.price, round6(e3 / 100),
+            round6(10000.0 * (e3 - st.prevE3) / st.prevE3)))
+        else None
+      (TrixState(ms, e1s, e2s, e3, hasPrev = true), out)
+    }
   }
 
   /** ring of the last ≤16 cents (oldest-first) plus running
@@ -263,40 +217,28 @@ object StreamingIndicators {
     import ticks.sparkSession.implicits._
     val ks = List(1, 2, 4, 8, 16)
     val ln2 = 0.6931471805599453
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[HurstState, HurstOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sym: String, rows: Iterator[Tick], state: GroupState[HurstState]) =>
-          val ordered = rows.toSeq.sortBy(t => (t.ts.getTime, t.id))
-          var st = state.getOption.getOrElse(
-            HurstState(Nil, List.fill(5)(0L), List.fill(5)(0L), List.fill(5)(0L)))
-          val out = Seq.newBuilder[HurstOut]
-          ordered.foreach { t =>
-            val m = cents(t.price)
-            val (ns, ss, qs) = (st.ns.toArray, st.ss.toArray, st.qs.toArray)
-            ks.zipWithIndex.foreach { case (k, i) =>
-              if (st.ring.length >= k) {
-                val d = m - st.ring(st.ring.length - k)
-                ns(i) += 1; ss(i) += d; qs(i) += d * d
-              }
-            }
-            st = HurstState((st.ring :+ m).takeRight(16),
-              ns.toList, ss.toList, qs.toList)
-            val varNums = (0 until 5).map(i => ns(i) * qs(i) - ss(i) * ss(i))
-            if (ns(4) >= 2 && varNums.forall(_ > 0)) {
-              val ys = (0 until 5).map(i =>
-                math.log(varNums(i).toDouble / (ns(i) * (ns(i) - 1)).toDouble))
-              val sy  = ys.reduce(_ + _)
-              val sxy = ys.zipWithIndex.map { case (y, i) => y * i.toDouble }
-                .reduce(_ + _)
-              out += HurstOut(sym, t.id, ns(0),
-                round6((5.0 * sxy - 10.0 * sy) / 50.0 / (2.0 * ln2)))
-            }
-          }
-          state.update(st)
-          out.result().iterator
+    KeyedScan.scan(ticks)(_.symbol, tickOrder,
+        HurstState(Nil, List.fill(5)(0L), List.fill(5)(0L), List.fill(5)(0L))) { (st, t) =>
+      val m = cents(t.price)
+      val (ns, ss, qs) = (st.ns.toArray, st.ss.toArray, st.qs.toArray)
+      ks.zipWithIndex.foreach { case (k, i) =>
+        if (st.ring.length >= k) {
+          val d = m - st.ring(st.ring.length - k)
+          ns(i) += 1; ss(i) += d; qs(i) += d * d
+        }
       }
+      val varNums = (0 until 5).map(i => ns(i) * qs(i) - ss(i) * ss(i))
+      val out = if (ns(4) >= 2 && varNums.forall(_ > 0)) {
+        val ys = (0 until 5).map(i =>
+          math.log(varNums(i).toDouble / (ns(i) * (ns(i) - 1)).toDouble))
+        val sy  = ys.reduce(_ + _)
+        val sxy = ys.zipWithIndex.map { case (y, i) => y * i.toDouble }
+          .reduce(_ + _)
+        Some(HurstOut(t.symbol, t.id, ns(0),
+          round6((5.0 * sxy - 10.0 * sy) / 50.0 / (2.0 * ln2))))
+      } else None
+      (HurstState((st.ring :+ m).takeRight(16), ns.toList, ss.toList, qs.toList), out)
+    }
   }
 
   /** prev cents + prev move (for the lagged product) and the running
@@ -315,36 +257,27 @@ object StreamingIndicators {
     */
   def withRollSpread(ticks: Dataset[Tick]): Dataset[RollOut] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[RollState, RollOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sym: String, rows: Iterator[Tick], state: GroupState[RollState]) =>
-          val ordered = rows.toSeq.sortBy(t => (t.ts.getTime, t.id))
-          var st = state.getOption.getOrElse(
-            RollState(0L, false, 0L, false, 0L, 0L, 0L, 0L))
-          val out = Seq.newBuilder[RollOut]
-          ordered.foreach { t =>
-            val m = cents(t.price)
-            if (st.hasM) {
-              val x = m - st.prevM
-              if (st.hasX) {
-                st = st.copy(n = st.n + 1, sx = st.sx + x, sy = st.sy + st.prevX,
-                  sxy = st.sxy + x * st.prevX)
-              }
-              st = st.copy(prevX = x, hasX = true)
-            }
-            st = st.copy(prevM = m, hasM = true)
-            val num = st.n * st.sxy - st.sx * st.sy
-            if (st.n >= 2 && num < 0) {
-              val cov = num.toDouble / (st.n * (st.n - 1)).toDouble
-              out += RollOut(sym, t.id, st.n, round6(cov),
-                round6(2.0 * math.sqrt(-cov) / 100.0))
-            }
-          }
-          state.update(st)
-          out.result().iterator
+    KeyedScan.scan(ticks)(_.symbol, tickOrder,
+        RollState(0L, false, 0L, false, 0L, 0L, 0L, 0L)) { (st0, t) =>
+      var st = st0
+      val m = cents(t.price)
+      if (st.hasM) {
+        val x = m - st.prevM
+        if (st.hasX) {
+          st = st.copy(n = st.n + 1, sx = st.sx + x, sy = st.sy + st.prevX,
+            sxy = st.sxy + x * st.prevX)
+        }
+        st = st.copy(prevX = x, hasX = true)
       }
+      st = st.copy(prevM = m, hasM = true)
+      val num = st.n * st.sxy - st.sx * st.sy
+      val out = if (st.n >= 2 && num < 0) {
+        val cov = num.toDouble / (st.n * (st.n - 1)).toDouble
+        Some(RollOut(t.symbol, t.id, st.n, round6(cov),
+          round6(2.0 * math.sqrt(-cov) / 100.0)))
+      } else None
+      (st, out)
+    }
   }
 
   /** Open bar (epoch day, close cents), previous close, signed-move
@@ -364,40 +297,28 @@ object StreamingIndicators {
     */
   def withCmo(ticks: Dataset[Tick], period: Int = 14): Dataset[CmoOut] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[CmoState, CmoOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sym: String, rows: Iterator[Tick], state: GroupState[CmoState]) =>
-          val ordered = rows.toSeq.sortBy(t => (t.ts.getTime, t.id))
-          var st = state.getOption.getOrElse(
-            CmoState(Long.MinValue, 0L, 0L, false, Nil, 0L))
-          val out = Seq.newBuilder[CmoOut]
-          def closeBar(): Unit = if (st.day != Long.MinValue) {
-            if (st.hasPrev) {
-              val ds = (st.ds :+ (st.cl - st.prevCl)).takeRight(period)
-              val nMoves = st.nMoves + 1
-              val up = ds.collect { case d if d > 0 => d }.sum
-              val dn = ds.collect { case d if d < 0 => -d }.sum
-              if (nMoves >= period && up + dn > 0)
-                out += CmoOut(sym,
-                  java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(st.day)),
-                  round6(100.0 * (up - dn).toDouble / (up + dn).toDouble))
-              st = st.copy(prevCl = st.cl, ds = ds, nMoves = nMoves)
-            } else st = st.copy(prevCl = st.cl, hasPrev = true)
-          }
-          ordered.foreach { t =>
-            val m = cents(t.price)
-            val day = t.ts.toInstant.atZone(java.time.ZoneOffset.UTC)
-              .toLocalDate.toEpochDay
-            if (day != st.day) {
-              closeBar()
-              st = st.copy(day = day, cl = m)
-            } else st = st.copy(cl = m)
-          }
-          state.update(st)
-          out.result().iterator
+    KeyedScan.scan(ticks)(_.symbol, tickOrder,
+        CmoState(Long.MinValue, 0L, 0L, false, Nil, 0L)) { (st, t) =>
+      val m = cents(t.price)
+      val day = utcDay(t)
+      if (day == st.day) (st.copy(cl = m), None)
+      else if (st.day == Long.MinValue) (st.copy(day = day, cl = m), None)
+      else if (!st.hasPrev)
+        (st.copy(day = day, cl = m, prevCl = st.cl, hasPrev = true), None)
+      else {
+        // close the open bar: its signed close-to-close move joins the ring
+        val ds = (st.ds :+ (st.cl - st.prevCl)).takeRight(period)
+        val nMoves = st.nMoves + 1
+        val up = ds.collect { case d if d > 0 => d }.sum
+        val dn = ds.collect { case d if d < 0 => -d }.sum
+        val out =
+          if (nMoves >= period && up + dn > 0)
+            Some(CmoOut(t.symbol, epochDate(st.day),
+              round6(100.0 * (up - dn).toDouble / (up + dn).toDouble)))
+          else None
+        (st.copy(day = day, cl = m, prevCl = st.cl, ds = ds, nMoves = nMoves), out)
       }
+    }
   }
 
   /** ring of the last ≤14 cents and the last ≤3 %K values (both
@@ -415,33 +336,22 @@ object StreamingIndicators {
     */
   def withStochastic(ticks: Dataset[Tick], period: Int = 14): Dataset[StochOut] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[StochState, StochOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Tick], state: GroupState[StochState]) =>
-          val ordered = rows.toSeq.sortBy(t => (t.ts.getTime, t.id))
-          var st = state.getOption.getOrElse(StochState(Nil, Nil, 0L))
-          val out = Seq.newBuilder[StochOut]
-          ordered.foreach { t =>
-            val m = cents(t.price)
-            val ms = (st.ms :+ m).takeRight(period)
-            val mn = ms.min; val mx = ms.max
-            val k =
-              if (mx == mn) 50.0
-              else round6(100.0 * (m - mn) / (mx - mn))
-            val ks = (st.ks :+ k).takeRight(3)
-            val n = st.n + 1
-            st = StochState(ms, ks, n)
-            if (n >= period + 2) {
-              // batch order: (current + lag1 + lag2) / 3
-              val d = round6((ks(2) + ks(1) + ks(0)) / 3)
-              out += StochOut(t.symbol, t.id, t.price, k, d)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    KeyedScan.scan(ticks)(_.symbol, tickOrder, StochState(Nil, Nil, 0L)) { (st, t) =>
+      val m = cents(t.price)
+      val ms = (st.ms :+ m).takeRight(period)
+      val mn = ms.min; val mx = ms.max
+      val k =
+        if (mx == mn) 50.0
+        else round6(100.0 * (m - mn) / (mx - mn))
+      val ks = (st.ks :+ k).takeRight(3)
+      val n = st.n + 1
+      // batch order: (current + lag1 + lag2) / 3
+      val out =
+        if (n >= period + 2)
+          Some(StochOut(t.symbol, t.id, t.price, k, round6((ks(2) + ks(1) + ks(0)) / 3)))
+        else None
+      (StochState(ms, ks, n), out)
+    }
   }
 
   /** prev price (for the next return) and the ring of the last
@@ -459,31 +369,19 @@ object StreamingIndicators {
   def withEwmaVol(ticks: Dataset[Tick]): Dataset[EwmaVolOut] = {
     import ticks.sparkSession.implicits._
     val w = graft.operators.Finance.EwmaVolW
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[EwmaVolState, EwmaVolOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Tick], state: GroupState[EwmaVolState]) =>
-          val ordered = rows.toSeq.sortBy(t => (t.ts.getTime, t.id))
-          var st = state.getOption.getOrElse(EwmaVolState(Double.NaN, false, Nil))
-          val out = Seq.newBuilder[EwmaVolOut]
-          ordered.foreach { t =>
-            if (t.price > 0) {
-              if (st.hasPrev) {
-                val ret = math.log(t.price / st.prev)
-                val rsqs = (st.rsqs :+ ret * ret)
-                  .takeRight(graft.operators.Finance.MacdLags)
-                st = EwmaVolState(t.price, true, rsqs)
-                out += EwmaVolOut(t.symbol, t.id, t.price,
-                  round6(math.sqrt(truncEma(rsqs.toIndexedSeq, w))))
-              } else st = EwmaVolState(t.price, true, Nil)
-            }
-            // price <= 0 ticks are dropped BEFORE the return lag in
-            // batch, so they neither emit nor advance prev
-          }
-          state.update(st)
-          out.result().iterator
+    KeyedScan.scan(ticks)(_.symbol, tickOrder,
+        EwmaVolState(Double.NaN, false, Nil)) { (st, t) =>
+      // price <= 0 ticks are dropped BEFORE the return lag in
+      // batch, so they neither emit nor advance prev
+      if (t.price <= 0) (st, None)
+      else if (!st.hasPrev) (EwmaVolState(t.price, true, Nil), None)
+      else {
+        val ret = math.log(t.price / st.prev)
+        val rsqs = (st.rsqs :+ ret * ret).takeRight(graft.operators.Finance.MacdLags)
+        (EwmaVolState(t.price, true, rsqs), Some(EwmaVolOut(t.symbol, t.id, t.price,
+          round6(math.sqrt(truncEma(rsqs.toIndexedSeq, w))))))
       }
+    }
   }
 
   final case class VTick(symbol: String, id: Long,
@@ -501,27 +399,17 @@ object StreamingIndicators {
     */
   def withObv(ticks: Dataset[VTick]): Dataset[ObvOut] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[ObvState, ObvOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[VTick], state: GroupState[ObvState]) =>
-          val ordered = rows.toSeq.sortBy(t => (t.ts.getTime, t.id))
-          var st = state.getOption.getOrElse(ObvState(0L, false, 0L))
-          val out = Seq.newBuilder[ObvOut]
-          ordered.foreach { t =>
-            val m = cents(t.price)
-            val sv =
-              if (!st.hasPrev) 0L
-              else if (m > st.prev) t.volume
-              else if (m < st.prev) -t.volume
-              else 0L
-            st = ObvState(m, true, st.obv + sv)
-            out += ObvOut(t.symbol, t.id, t.price, st.obv)
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    KeyedScan.scan(ticks)(_.symbol, t => (t.ts.getTime, t.id),
+        ObvState(0L, false, 0L)) { (st, t) =>
+      val m = cents(t.price)
+      val sv =
+        if (!st.hasPrev) 0L
+        else if (m > st.prev) t.volume
+        else if (m < st.prev) -t.volume
+        else 0L
+      val obv = st.obv + sv
+      (ObvState(m, true, obv), Some(ObvOut(t.symbol, t.id, t.price, obv)))
+    }
   }
 
   /** ring of the last ≤25 (cents, absolute tick index), oldest-first. */
@@ -538,33 +426,22 @@ object StreamingIndicators {
     */
   def withAroon(ticks: Dataset[Tick], period: Int = 25): Dataset[AroonOut] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[AroonState, AroonOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Tick], state: GroupState[AroonState]) =>
-          val ordered = rows.toSeq.sortBy(t => (t.ts.getTime, t.id))
-          var st = state.getOption.getOrElse(AroonState(Nil, Nil, 0L))
-          val out = Seq.newBuilder[AroonOut]
-          ordered.foreach { t =>
-            val n = st.n + 1
-            val ms = (st.ms :+ cents(t.price)).takeRight(period)
-            val rns = (st.rns :+ n).takeRight(period)
-            st = AroonState(ms, rns, n)
-            if (n >= period) {
-              val pairs = ms.zip(rns)
-              // batch pack max(m·2^33 + rn): highest price, latest tick
-              val (_, rnHi) = pairs.maxBy { case (m0, rn0) => (m0, rn0) }
-              // batch pack min(m·2^33 + (2^33−1−rn)): lowest, latest
-              val (_, rnLo) = pairs.minBy { case (m0, rn0) => (m0, -rn0) }
-              val up = 4L * (period - (n - rnHi))
-              val dn = 4L * (period - (n - rnLo))
-              out += AroonOut(t.symbol, t.id, up, dn, up - dn)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    KeyedScan.scan(ticks)(_.symbol, tickOrder, AroonState(Nil, Nil, 0L)) { (st, t) =>
+      val n = st.n + 1
+      val ms = (st.ms :+ cents(t.price)).takeRight(period)
+      val rns = (st.rns :+ n).takeRight(period)
+      val out = if (n >= period) {
+        val pairs = ms.zip(rns)
+        // batch pack max(m·2^33 + rn): highest price, latest tick
+        val (_, rnHi) = pairs.maxBy { case (m0, rn0) => (m0, rn0) }
+        // batch pack min(m·2^33 + (2^33−1−rn)): lowest, latest
+        val (_, rnLo) = pairs.minBy { case (m0, rn0) => (m0, -rn0) }
+        val up = 4L * (period - (n - rnHi))
+        val dn = 4L * (period - (n - rnLo))
+        Some(AroonOut(t.symbol, t.id, up, dn, up - dn))
+      } else None
+      (AroonState(ms, rns, n), out)
+    }
   }
 
   /** prev cents, current run direction and length. */
@@ -584,26 +461,14 @@ object StreamingIndicators {
     */
   def withStreaks(ticks: Dataset[Tick]): Dataset[StreakOut] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[StreakState, StreakOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Tick], state: GroupState[StreakState]) =>
-          val ordered = rows.toSeq.sortBy(t => (t.ts.getTime, t.id))
-          var st = state.getOption.getOrElse(StreakState(0L, false, 2L, 0L))
-          val out = Seq.newBuilder[StreakOut]
-          ordered.foreach { t =>
-            val m = cents(t.price)
-            if (st.hasPrev) {
-              val d = java.lang.Long.signum(m - st.prev).toLong
-              val len = if (st.len > 0 && d == st.dir) st.len + 1 else 1L
-              st = StreakState(m, true, d, len)
-              out += StreakOut(t.symbol, t.id, d, len)
-            } else st = StreakState(m, true, st.dir, 0L)
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    KeyedScan.scan(ticks)(_.symbol, tickOrder, StreakState(0L, false, 2L, 0L)) { (st, t) =>
+      val m = cents(t.price)
+      if (st.hasPrev) {
+        val d = java.lang.Long.signum(m - st.prev).toLong
+        val len = if (st.len > 0 && d == st.dir) st.len + 1 else 1L
+        (StreakState(m, true, d, len), Some(StreakOut(t.symbol, t.id, d, len)))
+      } else (StreakState(m, true, st.dir, 0L), None)
+    }
   }
 
   final case class UlcerDdOut(symbol: String, id: Long, dd6: Double)
@@ -618,24 +483,13 @@ object StreamingIndicators {
     */
   def withUlcerDd(ticks: Dataset[Tick]): Dataset[UlcerDdOut] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[Long, UlcerDdOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Tick], state: GroupState[Long]) =>
-          val ordered = rows.toSeq.sortBy(t => (t.ts.getTime, t.id))
-          var peak = state.getOption.getOrElse(0L)
-          val out = Seq.newBuilder[UlcerDdOut]
-          ordered.foreach { t =>
-            val m = cents(t.price)
-            peak = math.max(peak, m)
-            if (peak > 0)
-              out += UlcerDdOut(t.symbol, t.id,
-                round6(100.0 * (peak - m).toDouble / peak))
-          }
-          state.update(peak)
-          out.result().iterator
-      }
+    KeyedScan.scan(ticks)(_.symbol, tickOrder, 0L) { (peak0, t) =>
+      val m = cents(t.price)
+      val peak = math.max(peak0, m)
+      (peak, if (peak > 0)
+        Some(UlcerDdOut(t.symbol, t.id, round6(100.0 * (peak - m).toDouble / peak)))
+        else None)
+    }
   }
 
   /** Open bar (epoch day, hi, lo, close cents), previous close, TR
@@ -659,40 +513,36 @@ object StreamingIndicators {
     */
   def withAtr(ticks: Dataset[Tick], period: Int = 14): Dataset[AtrOut] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[AtrState, AtrOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sym: String, rows: Iterator[Tick], state: GroupState[AtrState]) =>
-          val ordered = rows.toSeq.sortBy(t => (t.ts.getTime, t.id))
-          var st = state.getOption.getOrElse(
-            AtrState(Long.MinValue, 0L, 0L, 0L, 0L, false, Nil, 0L))
-          val out = Seq.newBuilder[AtrOut]
-          def closeBar(): Unit = if (st.day != Long.MinValue) {
-            val tr =
-              if (!st.hasPrev) st.hi - st.lo
-              else math.max(st.hi - st.lo,
-                math.max(math.abs(st.hi - st.prevCl), math.abs(st.lo - st.prevCl)))
-            val trs = (st.trs :+ tr).takeRight(period)
-            val nDays = st.nDays + 1
-            if (nDays >= period)
-              out += AtrOut(sym,
-                java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(st.day)),
-                tr, round6(trs.sum.toDouble / period / 100.0))
-            st = st.copy(prevCl = st.cl, hasPrev = true, trs = trs, nDays = nDays)
-          }
-          ordered.foreach { t =>
-            val m = cents(t.price)
-            val day = t.ts.toInstant.atZone(java.time.ZoneOffset.UTC)
-              .toLocalDate.toEpochDay
-            if (day != st.day) {
-              closeBar()
-              st = st.copy(day = day, hi = m, lo = m, cl = m)
-            } else
-              st = st.copy(hi = math.max(st.hi, m), lo = math.min(st.lo, m), cl = m)
-          }
-          state.update(st)
-          out.result().iterator
+    KeyedScan.scan(ticks)(_.symbol, tickOrder,
+        AtrState(Long.MinValue, 0L, 0L, 0L, 0L, false, Nil, 0L)) { (st, t) =>
+      val m = cents(t.price)
+      val day = utcDay(t)
+      if (day == st.day)
+        (st.copy(hi = math.max(st.hi, m), lo = math.min(st.lo, m), cl = m), None)
+      else if (st.day == Long.MinValue) (st.copy(day = day, hi = m, lo = m, cl = m), None)
+      else {
+        // close the open bar: its true range joins the TR ring
+        val tr =
+          if (!st.hasPrev) st.hi - st.lo
+          else math.max(st.hi - st.lo,
+            math.max(math.abs(st.hi - st.prevCl), math.abs(st.lo - st.prevCl)))
+        val trs = (st.trs :+ tr).takeRight(period)
+        val nDays = st.nDays + 1
+        val out =
+          if (nDays >= period)
+            Some(AtrOut(t.symbol, epochDate(st.day), tr,
+              round6(trs.sum.toDouble / period / 100.0)))
+          else None
+        (AtrState(day, m, m, m, st.cl, true, trs, nDays), out)
       }
+    }
   }
+
+  /** The UTC calendar day of a tick, as an epoch day. */
+  private def utcDay(t: Tick): Long =
+    t.ts.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate.toEpochDay
+
+  private def epochDate(day: Long): java.sql.Date =
+    java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(day))
+
 }

@@ -28,8 +28,7 @@ import org.apache.spark.sql.functions._
   * rows per batch (sufficient statistics, not data); the assignment
   * is the same broadcast-centroid distance join + `min(struct)`
   * hash aggregate as the batch trainer (no window, no cross
-  * product). Batch replay is idempotent: partitioned by batch_id
-  * with dynamic partition overwrite ([[StreamingDedup]]'s contract).
+  * product). Exactly-once: [[StoreIO]]'s contract.
   */
 object StreamingKmeansStats {
 
@@ -84,13 +83,10 @@ object StreamingKmeansStats {
       val asg = d2.groupBy("vec_id")
         .agg(min(struct(col("d2"), col("cid"))).as("m"))
         .select(col("vec_id"), col("m.cid").as("cid"))
-      asg.join(vq, Seq("vec_id"))
-        .groupBy("cid", "pos")
-        .agg(sum(col("vq")).as("sum_vq"), count(lit(1)).as("n"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(statsPath)
+      StoreIO.writeBatch(asg.join(vq, Seq("vec_id"))
+          .groupBy("cid", "pos")
+          .agg(sum(col("vq")).as("sum_vq"), count(lit(1)).as("n")),
+        batchId, statsPath)
       graft.Caches.release(spark, vqIds)
       ()
   }

@@ -23,9 +23,8 @@ import graft.operators.TextAnalysis
   * Scale shape: the model is langs x profileK rows — it broadcasts
   * into every micro-batch's scoring join, the batch's trigram explode
   * never shuffles for it, and there is ZERO cross-batch state: this
-  * is the one twin whose store is pure output. Predictions land
-  * partitioned by batch_id with dynamic partition overwrite
-  * ([[StreamingDedup]]'s idempotence contract).
+  * is the one twin whose store is pure output. Exactly-once:
+  * [[StoreIO]]'s contract.
   */
 object StreamingLangId {
 
@@ -49,11 +48,8 @@ object StreamingLangId {
   def predSink(profilePath: String, predsPath: String): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
-      TextAnalysis.langIdPredict(batch, readProfile(spark, profilePath))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(predsPath)
+      StoreIO.writeBatch(TextAnalysis.langIdPredict(batch, readProfile(spark, profilePath)),
+        batchId, predsPath)
       ()
   }
 

@@ -29,9 +29,8 @@ import graft.operators.Dedup
   * probe is an equi-join on (band, 16-bit key) between the batch's
   * O(batch) band rows and the index's band rows (at 100 TB the index
   * would be stored banded — here it is banded on read, same join).
-  * Batch replay is idempotent: both the index and the pair output are
-  * partitioned by batch_id with dynamic partition overwrite, so a
-  * replayed batch overwrites itself ([[StreamingDedup]]'s contract).
+  * Exactly-once: the index and the pair output follow [[StoreIO]]'s
+  * contract.
   */
 object StreamingNearDup {
 
@@ -75,10 +74,7 @@ object StreamingNearDup {
       // unpersist handle — the Caches contract)
       val (fps, fpsIds) = graft.Caches.trackedCheckpoint(
         Dedup.simhashDocs64From(batch))
-      // a replayed batch must not pair against its own previous
-      // attempt's index rows — it overwrites that partition
-      val index = read(spark, indexPath, IndexSchema)
-        .filter(col("batch_id") =!= batchId)
+      val index = StoreIO.readOthers(spark, indexPath, IndexSchema, batchId)
         .select("doc_id", "sim_lo", "sim_hi")
       val nb = bands(fps)
       val ib = bands(index)
@@ -99,14 +95,8 @@ object StreamingNearDup {
                " + bit_count(a.sim_hi ^ b.sim_hi) as bigint)").as("hamming"))
         .filter(col("hamming") <= maxHamming)
         .distinct()
-      cand.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(pairsPath)
-      fps.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(indexPath)
+      StoreIO.writeBatch(cand, batchId, pairsPath)
+      StoreIO.writeBatch(fps, batchId, indexPath)
       graft.Caches.release(spark, fpsIds)
       ()
   }

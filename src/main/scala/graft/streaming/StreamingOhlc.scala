@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Finance
+
 /** Streaming twin of [[graft.operators.Finance.ohlcBars]]: daily OHLC
   * candlesticks as a watermarked event-time tumbling-window
   * aggregation. Batch picks open/close with two row_numbers (one
@@ -58,7 +60,7 @@ object StreamingOhlc {
         count(lit(1)).as("n_ticks"))
       .filter(col("day_volume") > 0)
       .select(col("symbol"), to_date(col("window.start")).as("day"),
-        round(col("pv").cast("double") / col("day_volume"), 6).as("vwap"),
+        Finance.vwapOf(col("pv"), col("day_volume")).as("vwap"),
         col("day_volume"), col("n_ticks"))
 
   def streamingVwap(quotes: DataFrame, lateness: String = "1 hour"): DataFrame =

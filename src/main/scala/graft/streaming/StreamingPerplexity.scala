@@ -23,9 +23,8 @@ import graft.operators.TextAnalysis
   *
   * Scale shape: zero cross-batch state (the [[StreamingLangId]]
   * class of twin — the store is pure output); the seen-bigram side of
-  * the model is vocabulary-sized and AQE-sizes its scoring join;
-  * scores land partitioned by batch_id with dynamic partition
-  * overwrite ([[StreamingDedup]]'s idempotence contract).
+  * the model is vocabulary-sized and AQE-sizes its scoring join.
+  * Exactly-once: [[StoreIO]]'s contract.
   */
 object StreamingPerplexity {
 
@@ -48,11 +47,8 @@ object StreamingPerplexity {
   def scoreSink(modelPath: String, scoresPath: String): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
-      TextAnalysis.bigramScore(batch, readModel(spark, modelPath))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(scoresPath)
+      StoreIO.writeBatch(TextAnalysis.bigramScore(batch, readModel(spark, modelPath)),
+        batchId, scoresPath)
       ()
   }
 

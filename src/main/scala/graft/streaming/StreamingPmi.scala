@@ -22,9 +22,8 @@ import graft.operators.TextAnalysis
   *
   * Scale shape: per-batch counts are map-side-combined aggregates of
   * the batch only; stores grow with VOCABULARY (vocab² bigrams,
-  * vocab unigrams), not stream length, partitioned by `batch_id` for
-  * the idempotent-replay overwrite ([[StreamingDedup]]'s contract);
-  * the serve-side re-sum is a vocabulary-bounded aggregate.
+  * vocab unigrams), not stream length (exactly-once: [[StoreIO]]'s
+  * contract); the serve-side re-sum is a vocabulary-bounded aggregate.
   */
 object StreamingPmi {
 
@@ -36,18 +35,12 @@ object StreamingPmi {
     */
   def countsSink(bigPath: String, uniPath: String): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      TextAnalysis.bigramRowsFrom(batch)
-        .groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(bigPath)
-      TextAnalysis.unigramRowsFrom(batch)
-        .groupBy("tok").agg(count(lit(1)).as("c"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(uniPath)
+      StoreIO.writeBatch(TextAnalysis.bigramRowsFrom(batch)
+          .groupBy("a", "b").agg(count(lit(1)).as("c_ab")),
+        batchId, bigPath)
+      StoreIO.writeBatch(TextAnalysis.unigramRowsFrom(batch)
+          .groupBy("tok").agg(count(lit(1)).as("c")),
+        batchId, uniPath)
       ()
   }
 

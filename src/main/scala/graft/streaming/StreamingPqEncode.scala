@@ -26,8 +26,7 @@ import graft.operators.Similarity
   * cell broadcast k x 64 rows; each batch contributes one
   * (vec_id, sub, cid) row per subspace plus one (vec_id, cid) routing
   * row — 8 small ints + one label per vector, which IS the
-  * compression. Batch replay is idempotent: partitioned by batch_id
-  * with dynamic partition overwrite ([[StreamingDedup]]'s contract).
+  * compression. Exactly-once: [[StoreIO]]'s contract.
   * The serve path needs nothing else: [[Similarity.ivfShortlist]]
   * over (routing, codes) is the same primitive the batch composite
   * runs.
@@ -59,11 +58,8 @@ object StreamingPqEncode {
     (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
       val books = spark.read.parquet(codebookPath)
-      Similarity.pqAssign(Similarity.pqMicroUnits(batch), books)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(codesPath)
+      StoreIO.writeBatch(Similarity.pqAssign(Similarity.pqMicroUnits(batch), books),
+        batchId, codesPath)
       ()
   }
 
@@ -75,11 +71,8 @@ object StreamingPqEncode {
     (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
       val cells = spark.read.parquet(cellsPath)
-      Similarity.coarseAssign(Similarity.pqMicroUnits(batch), cells)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(routingPath)
+      StoreIO.writeBatch(Similarity.coarseAssign(Similarity.pqMicroUnits(batch), cells),
+        batchId, routingPath)
       ()
   }
 }

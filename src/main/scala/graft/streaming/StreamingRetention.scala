@@ -18,9 +18,7 @@ import graft.operators.Analytics
   * older event for the same user arrives; asserted under out-of-order
   * splits in StreamingSpec).
   *
-  * Exactly-once: per-batch pairs land partitioned by batch_id with
-  * dynamic partition overwrite ([[StreamingDedup]]'s idempotence
-  * contract); cross-batch duplicates (the same user active on the
+  * Exactly-once: [[StoreIO]]'s contract; cross-batch duplicates (the same user active on the
   * same day in two batches) are collapsed by the serve-side distinct,
   * so replay and re-activity are both harmless.
   *
@@ -37,14 +35,11 @@ object StreamingRetention {
   /** foreachBatch body: append this batch's distinct activity pairs. */
   def gridSink(gridPath: String): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      batch
-        .select(col("user_id"),
-          date_trunc("day", col("ts")).cast("long").as("day_s"))
-        .distinct()
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(gridPath)
+      StoreIO.writeBatch(batch
+          .select(col("user_id"),
+            date_trunc("day", col("ts")).cast("long").as("day_s"))
+          .distinct(),
+        batchId, gridPath)
       ()
   }
 

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of the whole-distribution risk pair —
   * [[graft.operators.Finance.omegaRatio]] (integer gain/loss sums
@@ -45,32 +44,23 @@ object StreamingRisk {
 
   def withRisk(bars: Dataset[Bar]): Dataset[RiskOut] = {
     import bars.sparkSession.implicits._
-    bars
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[RiskState, RiskOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sym: String, rows: Iterator[Bar], state: GroupState[RiskState]) =>
-          val ordered = rows.toSeq.sortBy(_.day.getTime)
-          var st = state.getOption.getOrElse(
-            RiskState(Long.MinValue, 0L, 0L, 0L, Long.MinValue, 0L, 0L, 0L))
-          val out = ordered.map { b =>
-            if (st.prev != Long.MinValue) {
-              val d = b.cl - st.prev
-              st = st.copy(
-                gains = st.gains + math.max(d, 0L),
-                losses = st.losses + math.max(-d, 0L),
-                nMoves = st.nMoves + 1)
-            }
-            val peak = math.max(if (st.peak == Long.MinValue) b.cl else st.peak, b.cl)
-            val dd = ddMicro(peak, b.cl)
-            st = st.copy(prev = b.cl, peak = peak,
-              ddSum = st.ddSum + dd, ddMax = math.max(st.ddMax, dd),
-              nBars = st.nBars + 1)
-            RiskOut(sym, b.day, st.nMoves, st.gains, st.losses,
-              st.nBars, st.ddSum, st.ddMax)
-          }
-          state.update(st)
-          out.iterator
+    KeyedScan.scan(bars)(_.symbol, _.day.getTime,
+        RiskState(Long.MinValue, 0L, 0L, 0L, Long.MinValue, 0L, 0L, 0L)) { (st0, b) =>
+      var st = st0
+      if (st.prev != Long.MinValue) {
+        val d = b.cl - st.prev
+        st = st.copy(
+          gains = st.gains + math.max(d, 0L),
+          losses = st.losses + math.max(-d, 0L),
+          nMoves = st.nMoves + 1)
       }
+      val peak = math.max(if (st.peak == Long.MinValue) b.cl else st.peak, b.cl)
+      val dd = ddMicro(peak, b.cl)
+      st = st.copy(prev = b.cl, peak = peak,
+        ddSum = st.ddSum + dd, ddMax = math.max(st.ddMax, dd),
+        nBars = st.nBars + 1)
+      (st, Some(RiskOut(b.symbol, b.day, st.nMoves, st.gains, st.losses,
+        st.nBars, st.ddSum, st.ddMax)))
+    }
   }
 }

@@ -29,10 +29,8 @@ import graft.operators.Similarity
   * rows) and broadcasts into the probe, so the arriving shard never
   * shuffles for the pairing — the per-(vector, bench) distance
   * fan-out happens map-side under the broadcast hash join and only
-  * (vec_id, bench_id, d2) aggregates reach an exchange. Batch replay
-  * is idempotent: output is partitioned by batch_id with dynamic
-  * partition overwrite, so a replayed batch overwrites its own
-  * partition ([[StreamingDedup]]'s contract).
+  * (vec_id, bench_id, d2) aggregates reach an exchange. Exactly-once:
+  * [[StoreIO]]'s contract.
   */
 object StreamingSemanticDecontam {
 
@@ -70,11 +68,7 @@ object StreamingSemanticDecontam {
       val corpus = Similarity.pqMicroUnits(
           batch.join(broadcast(benchIds), Seq("vec_id"), "left_anti"))
         .select("vec_id", "pos", "vq")
-      Similarity.nearestBenchFlags(corpus, bench, maxD2)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(reportPath)
+      StoreIO.writeBatch(Similarity.nearestBenchFlags(corpus, bench, maxD2), batchId, reportPath)
       ()
   }
 }

@@ -28,8 +28,7 @@ import graft.operators.Similarity
   * store grows by 64 micro rows per vector (what the pairing
   * arithmetic needs); centrality is recomputed on read from the store
   * and the broadcast cells (k x 64 rows), never carried as state.
-  * Stores are batch_id-partitioned with dynamic partition overwrite
-  * ([[StreamingDedup]]'s idempotence contract).
+  * Exactly-once: [[StoreIO]]'s contract.
   */
 object StreamingSemanticDedup {
 
@@ -65,12 +64,9 @@ object StreamingSemanticDedup {
       val cells = spark.read.parquet(cellsPath)
       val micro = Similarity.pqMicroUnits(batch).select("vec_id", "pos", "vq")
       val routed = Similarity.coarseAssign(micro, cells)
-      micro.join(routed, Seq("vec_id"))
-        .select("vec_id", "cid", "pos", "vq")
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(vecPath)
+      StoreIO.writeBatch(micro.join(routed, Seq("vec_id"))
+          .select("vec_id", "cid", "pos", "vq"),
+        batchId, vecPath)
       // new-vs-store pairing AFTER the append, so the store already
       // contains this batch (new-new pairs come out of the same join);
       // ordered (a.vec_id, b.vec_id) distances normalize to u < v and
@@ -78,20 +74,17 @@ object StreamingSemanticDedup {
       // same d2, a new-old pair in one
       val a = micro.join(routed, Seq("vec_id"))
       val b = readVectors(spark, vecPath)
-      a.alias("a").join(b.alias("b"),
-          col("a.cid") === col("b.cid") && col("a.pos") === col("b.pos") &&
-            col("a.vec_id") =!= col("b.vec_id"))
-        .groupBy(col("a.cid").as("cid"), col("a.vec_id").as("x"),
-          col("b.vec_id").as("y"))
-        .agg(sum((col("a.vq") - col("b.vq")) * (col("a.vq") - col("b.vq"))).as("d2"))
-        .filter(col("d2") < lit(maxD2))
-        .select(col("cid"), least(col("x"), col("y")).as("u"),
-          greatest(col("x"), col("y")).as("v"))
-        .distinct()
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(pairPath)
+      StoreIO.writeBatch(a.alias("a").join(b.alias("b"),
+            col("a.cid") === col("b.cid") && col("a.pos") === col("b.pos") &&
+              col("a.vec_id") =!= col("b.vec_id"))
+          .groupBy(col("a.cid").as("cid"), col("a.vec_id").as("x"),
+            col("b.vec_id").as("y"))
+          .agg(sum((col("a.vq") - col("b.vq")) * (col("a.vq") - col("b.vq"))).as("d2"))
+          .filter(col("d2") < lit(maxD2))
+          .select(col("cid"), least(col("x"), col("y")).as("u"),
+            greatest(col("x"), col("y")).as("v"))
+          .distinct(),
+        batchId, pairPath)
       ()
   }
 

@@ -2,22 +2,14 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming formulation of the reference hot path — the reference IS a
   * streaming engine (record-at-a-time asyncio push loop,
   * financial_engine.py:358-377), so batch window functions alone are
   * not parity. Count-based per-key sliding windows are NOT expressible
   * with `groupBy(window(...))` (that is time-based); the per-key
-  * deque (`financial_engine.py:298,304-307`) maps to arbitrary
-  * stateful processing — `flatMapGroupsWithState` holding the last
-  * n prices per key. (Spark 4's transformWithState is the newer API
-  * for the same shape; this uses the stable one.)
-  *
-  * Scale: state is hash-partitioned by key across executors, sized
-  * n doubles per live key, checkpointed via the state store — the
-  * fault-tolerant version of the reference's in-process dict (which
-  * loses everything on restart, financial_engine.py:298).
+  * deque (`financial_engine.py:298,304-307`) maps to the shared
+  * [[KeyedScan]] holding the last n prices per key.
   */
 object StreamingSma {
 
@@ -39,9 +31,6 @@ object StreamingSma {
   final case class SmaOut(id: String, symbol: String, price: Double,
                           moving_average: Option[Double])
 
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** Emits every tick, with `moving_average` set only once the key has
     * seen >= n prices (warm-up gate, financial_engine.py:308-310) —
     * identical semantics to the batch `RefPipeline.movingAverage`
@@ -49,21 +38,11 @@ object StreamingSma {
     */
   def withMovingAverage(ticks: Dataset[Tick], n: Int): Dataset[SmaOut] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[SmaState, SmaOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Tick], state: GroupState[SmaState]) =>
-          val ordered = rows.toSeq.sortBy(_.id)
-          var buf = state.getOption.map(_.prices).getOrElse(Nil)
-          val out = ordered.map { t =>
-            buf = (buf :+ t.price).takeRight(n)
-            SmaOut(t.id, t.symbol, t.price,
-              if (buf.size == n) Some(round6(buf.sum / n)) else None)
-          }
-          state.update(SmaState(buf))
-          out.iterator
-      }
+    KeyedScan.scan(ticks)(_.symbol, _.id, SmaState(Nil)) { (st, t) =>
+      val buf = (st.prices :+ t.price).takeRight(n)
+      (SmaState(buf), Some(SmaOut(t.id, t.symbol, t.price,
+        if (buf.size == n) Some(KeyedScan.round6(buf.sum / n)) else None)))
+    }
   }
 
   /** Time-windowed variant (SURVEY §2.8): hourly tumbling counts with

@@ -26,10 +26,8 @@ import org.apache.spark.sql.functions._
   * after each batch.
   *
   * Scale shape: executor state ZERO; the store carries
-  * (categories x batches) rows of partials, never events. Batch
-  * replay is idempotent: batch_id-partitioned dynamic overwrite
-  * ([[StreamingDedup]]'s contract); store probes route through
-  * Hadoop FileSystem ([[StoreIO]]) so hdfs://s3a:// paths work.
+  * (categories x batches) rows of partials, never events.
+  * Exactly-once: [[StoreIO]]'s contract.
   */
 object StreamingStats {
 
@@ -42,17 +40,14 @@ object StreamingStats {
     * `(event_type, value, ...)` events into the Welch partials store. */
   def welchSink(statsPath: String): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      batch
-        .withColumn("m", round(col("value") * 100).cast("bigint"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-             sum(col("m").cast("decimal(28,0)")).cast("decimal(38,0)").as("s1"),
-             sum((col("m") * col("m")).cast("decimal(28,0)")).cast("decimal(38,0)")
-               .as("s2"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(statsPath)
+      StoreIO.writeBatch(batch
+          .withColumn("m", round(col("value") * 100).cast("bigint"))
+          .groupBy("event_type")
+          .agg(count(lit(1)).as("n"),
+               sum(col("m").cast("decimal(28,0)")).cast("decimal(38,0)").as("s1"),
+               sum((col("m") * col("m")).cast("decimal(28,0)")).cast("decimal(38,0)")
+                 .as("s2")),
+        batchId, statsPath)
       ()
   }
 
@@ -70,13 +65,10 @@ object StreamingStats {
     * contingency cell store. */
   def chiSink(cellPath: String): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      batch
-        .groupBy(col("o_orderpriority").as("pri"), col("o_orderstatus").as("st"))
-        .agg(count(lit(1)).as("o"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(cellPath)
+      StoreIO.writeBatch(batch
+          .groupBy(col("o_orderpriority").as("pri"), col("o_orderstatus").as("st"))
+          .agg(count(lit(1)).as("o")),
+        batchId, cellPath)
       ()
   }
 
@@ -102,15 +94,12 @@ object StreamingStats {
     * stream-length-bounded). */
   def spearmanSink(cellPath: String): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      batch
-        .filter(col("volume").isNotNull)
-        .withColumn("m", round(col("price") * 100).cast("bigint"))
-        .groupBy(col("symbol"), col("m"), col("volume").as("v"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(cellPath)
+      StoreIO.writeBatch(batch
+          .filter(col("volume").isNotNull)
+          .withColumn("m", round(col("price") * 100).cast("bigint"))
+          .groupBy(col("symbol"), col("m"), col("volume").as("v"))
+          .agg(count(lit(1)).as("cnt")),
+        batchId, cellPath)
       ()
   }
 
@@ -127,14 +116,11 @@ object StreamingStats {
     * store — Kruskal-Wallis's sufficient statistic. */
   def kruskalSink(countPath: String): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      batch
-        .withColumn("m", round(col("value") * 100).cast("bigint"))
-        .groupBy("event_type", "m")
-        .agg(count(lit(1)).as("cj"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(countPath)
+      StoreIO.writeBatch(batch
+          .withColumn("m", round(col("value") * 100).cast("bigint"))
+          .groupBy("event_type", "m")
+          .agg(count(lit(1)).as("cj")),
+        batchId, countPath)
       ()
   }
 
@@ -154,16 +140,13 @@ object StreamingStats {
     * event-bounded). */
   def dailyBarSink(barPath: String): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      batch
-        .withColumn("day", to_date(col("ts")))
-        .groupBy("symbol", "day")
-        .agg(sum(col("price").cast("decimal(18,6)")).cast("decimal(38,6)")
-               .as("psum"),
-             count(lit(1)).as("pcnt"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(barPath)
+      StoreIO.writeBatch(batch
+          .withColumn("day", to_date(col("ts")))
+          .groupBy("symbol", "day")
+          .agg(sum(col("price").cast("decimal(18,6)")).cast("decimal(38,6)")
+                 .as("psum"),
+               count(lit(1)).as("pcnt")),
+        batchId, barPath)
       ()
   }
 
@@ -203,19 +186,16 @@ object StreamingStats {
     * to neither the close nor the volume there). */
   def kendallDailySink(barPath: String): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      batch
-        .filter(col("volume").isNotNull)
-        .withColumn("day", to_date(col("ts")))
-        .groupBy("symbol", "day")
-        .agg(max(struct(col("ts_epoch").as("lts"), col("id").as("lid"),
-               round(col("price") * 100).cast("bigint").as("lm"))).as("lb"),
-             sum(col("volume")).as("vsum"))
-        .select(col("symbol"), col("day"), col("lb.lts").as("lts"),
-          col("lb.lid").as("lid"), col("lb.lm").as("lm"), col("vsum"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(barPath)
+      StoreIO.writeBatch(batch
+          .filter(col("volume").isNotNull)
+          .withColumn("day", to_date(col("ts")))
+          .groupBy("symbol", "day")
+          .agg(max(struct(col("ts_epoch").as("lts"), col("id").as("lid"),
+                 round(col("price") * 100).cast("bigint").as("lm"))).as("lb"),
+               sum(col("volume")).as("vsum"))
+          .select(col("symbol"), col("day"), col("lb.lts").as("lts"),
+            col("lb.lid").as("lid"), col("lb.lm").as("lm"), col("vsum")),
+        batchId, barPath)
       ()
   }
 

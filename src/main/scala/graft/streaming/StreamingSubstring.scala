@@ -34,9 +34,8 @@ import graft.operators.Dedup
   * corpus-so-far per batch except that hash-keyed probe. Retroactive
   * emission is bounded by the already-emitted store: positions known
   * duplicated are anti-joined out, so a gram going from 2 to k copies
-  * re-emits nothing for the first 2. Batch replay is idempotent: the
-  * index, the hit store, and the anti-join all exclude/overwrite the
-  * replayed batch_id partition ([[StreamingDedup]]'s contract).
+  * re-emits nothing for the first 2. Exactly-once: the index, the hit
+  * store and the anti-join follow [[StoreIO]]'s contract.
   */
 object StreamingSubstring {
 
@@ -73,9 +72,7 @@ object StreamingSubstring {
       val bStats = grams.select("gh", "doc_id").distinct()
         .groupBy("gh")
         .agg(countDistinct(col("doc_id")).as("nd_b"), min(col("doc_id")).as("b_one"))
-      // a replayed batch must not match its own previous attempt
-      val index = read(spark, indexPath, IndexSchema)
-        .filter(col("batch_id") =!= batchId)
+      val index = StoreIO.readOthers(spark, indexPath, IndexSchema, batchId)
         .select("doc_id", "pos", "gh")
       // index probe scoped to the batch's ghs BEFORE any aggregation:
       // only matching index rows are read/aggregated
@@ -94,25 +91,16 @@ object StreamingSubstring {
            (col("nd_i") >= 2 || col("i_one") =!= col("doc_id"))))
         .select("doc_id", "pos")
       // retroactive hits for indexed docs, minus positions already
-      // known duplicated (bounds re-emission; excludes the replayed
-      // partition so a replay re-derives its own rows)
-      val known = read(spark, hitsPath, HitSchema)
-        .filter(col("batch_id") =!= batchId)
+      // known duplicated (bounds re-emission)
+      val known = StoreIO.readOthers(spark, hitsPath, HitSchema, batchId)
         .select("doc_id", "pos")
       val retroHits = idxRel
         .join(bStats, Seq("gh"))
         .filter(col("nd_b") >= 2 || col("b_one") =!= col("doc_id"))
         .select("doc_id", "pos")
         .join(known, Seq("doc_id", "pos"), "left_anti")
-      batchHits.union(retroHits).distinct()
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(hitsPath)
-      grams.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(indexPath)
+      StoreIO.writeBatch(batchHits.union(retroHits).distinct(), batchId, hitsPath)
+      StoreIO.writeBatch(grams, batchId, indexPath)
       graft.Caches.release(spark, gramIds)
       ()
   }

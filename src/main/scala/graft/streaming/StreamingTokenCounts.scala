@@ -24,9 +24,8 @@ import org.apache.spark.sql.functions._
   * persisted instead of shuffled. The merged view is a second-level
   * aggregate over partials (vocabulary × batch rows, not corpus
   * rows); a compaction pass that rewrites the store as one merged
-  * partition is the same query with a write. Batch replay is
-  * idempotent: partitioned by batch_id with dynamic partition
-  * overwrite ([[StreamingDedup]]'s contract).
+  * partition is the same query with a write. Exactly-once:
+  * [[StoreIO]]'s contract.
   */
 object StreamingTokenCounts {
 
@@ -40,14 +39,11 @@ object StreamingTokenCounts {
     */
   def countSink(storePath: String): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      batch
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-        .groupBy("tok")
-        .agg(count(lit(1)).as("n_occ"), countDistinct(col("doc_id")).as("n_docs"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(storePath)
+      StoreIO.writeBatch(batch
+          .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+          .groupBy("tok")
+          .agg(count(lit(1)).as("n_occ"), countDistinct(col("doc_id")).as("n_docs")),
+        batchId, storePath)
       ()
   }
 

@@ -23,8 +23,7 @@ import graft.operators.TextAnalysis
   * the join — the vocabulary of a 100 TB corpus is itself large
   * enough that a hard broadcast hint would be wrong, the
   * bpeTokenCounts rule); each batch contributes one 3-long row per
-  * document. Batch replay is idempotent: partitioned by batch_id with
-  * dynamic partition overwrite ([[StreamingDedup]]'s contract).
+  * document. Exactly-once: [[StoreIO]]'s contract.
   */
 object StreamingUnigramCounts {
 
@@ -46,11 +45,7 @@ object StreamingUnigramCounts {
   def countSink(modelPath: String, storePath: String): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
       val wl = batch.sparkSession.read.parquet(modelPath)
-      TextAnalysis.unigramCountsUnder(batch, wl)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(storePath)
+      StoreIO.writeBatch(TextAnalysis.unigramCountsUnder(batch, wl), batchId, storePath)
       ()
   }
 

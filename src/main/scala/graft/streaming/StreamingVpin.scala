@@ -33,20 +33,16 @@ object StreamingVpin {
       "volume BIGINT, batch_id BIGINT"
 
   /** foreachBatch body: append one micro-batch of quote ticks into the
-    * compacted tick store. Dynamic partition overwrite on batch_id
-    * makes a replayed micro-batch idempotent (it rewrites its own
-    * partition); cross-batch duplicates are folded away at read time
+    * compacted tick store ([[StoreIO]]'s exactly-once contract);
+    * cross-batch duplicates are folded away at read time
     * by the (symbol, ts_epoch, id) identity dedup.
     */
   def tickSink(storePath: String): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      batch
-        .select(col("symbol"), col("ts_epoch"), col("id"),
-          col("price"), col("volume"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(storePath)
+      StoreIO.writeBatch(batch
+          .select(col("symbol"), col("ts_epoch"), col("id"),
+            col("price"), col("volume")),
+        batchId, storePath)
       ()
   }
 

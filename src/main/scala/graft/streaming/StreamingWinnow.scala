@@ -21,8 +21,7 @@ import graft.operators.Dedup
   * is needed (duplication there is a cross-document property
   * discovered late; here the cross-document step happens at SERVE time
   * over the full index, so late arrivals change nothing already
-  * stored). Replay is idempotent via the `batch_id`-partition dynamic
-  * overwrite ([[StreamingDedup]]'s exactly-once contract).
+  * stored). Exactly-once: [[StoreIO]]'s contract.
   *
   * Scale shape: the index stores ~2/(w+1) of the corpus gram count as
   * 16-byte `(doc_id, gh)` rows — bounded by the winnowing density
@@ -47,11 +46,8 @@ object StreamingWinnow {
     */
   def indexSink(indexPath: String): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      Dedup.winnowSelectedFrom(batch).select("doc_id", "gh").distinct()
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(indexPath)
+      StoreIO.writeBatch(Dedup.winnowSelectedFrom(batch).select("doc_id", "gh").distinct(),
+        batchId, indexPath)
       ()
   }
 

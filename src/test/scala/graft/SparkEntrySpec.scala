@@ -140,9 +140,9 @@ class SparkEntrySpec extends AnyFunSuite {
     // 3× SUM(greatest(ng-.., 1)) window-count denominators, consumed
     // only under the ::DOUBLE density division
     "x_winnow_sweep"      -> 3,
-    // vwap family: SUM(volume) as the ROUND(...)::DOUBLE division
-    // denominator + the HAVING comparison — the projected copy is
-    // SUM(volume)::BIGINT (cast, not counted)
+    // vwap family (finVwapCte): SUM(volume) as the integer rounding
+    // division's divisor + the HAVING comparison — the projected copy
+    // is vol::BIGINT
     "x_vwap"              -> 2,
     "x_top_movers"        -> 2,
     // SUM(n_orders) OVER () — obs_freq denominator inside ROUND only

@@ -102,88 +102,6 @@ class StreamingSpec extends SparkSuite {
     assert(overflowedAt == -1 && got.length == 4)
   }
 
-  test("transformWithState SMA state expires after the TTL and the warm-up gate restarts") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ms = MemoryStream[Tick]
-    // TimeMode.ProcessingTime (required by TTL) keeps the engine
-    // triggering batches, so processAllAvailable never settles — poll
-    // the sink until the expected ids land instead.
-    val q = graft.streaming.StreamingSmaV2.withMovingAverage(
-        ms.toDS(), n = 3, ttl = Some(java.time.Duration.ofMillis(300)))
-      .writeStream.format("memory").queryName("sma_ttl")
-      .outputMode("append").start()
-    def smaOf(ids: String*): Seq[Option[Double]] = {
-      val deadline = System.currentTimeMillis() + 30000
-      var rows = Array.empty[org.apache.spark.sql.Row]
-      while (ids.exists(id => !rows.exists(_.getString(0) == id)) &&
-             System.currentTimeMillis() < deadline) {
-        Thread.sleep(50)
-        rows = spark.table("sma_ttl").collect()
-      }
-      ids.map(id => rows.find(_.getString(0) == id).map(r =>
-        Option(r.get(3)).map(_.asInstanceOf[Double]))
-        .getOrElse(fail(s"tick $id never reached the sink")))
-    }
-    try {
-      // warm the key in ONE batch: 3 prices -> third tick emits an SMA
-      // (single-batch phases keep the TTL clock out of the assertions:
-      // within a batch all rows see the same state generation)
-      ms.addData(Tick("t1", "A", 10.0), Tick("t2", "A", 20.0), Tick("t3", "A", 30.0))
-      assert(smaOf("t1", "t2", "t3") == Seq(None, None, Some(20.0)))
-      // idle past the TTL: the key's buffer must be dropped, so the
-      // reappearing key restarts the warm-up gate from zero. An
-      // UN-expired buffer [10,20,30] would emit Some(33.33)/Some(46.67)
-      // for t5/t6 — the fresh-key path emits None/None.
-      Thread.sleep(1500)
-      ms.addData(Tick("t5", "A", 50.0), Tick("t6", "A", 60.0), Tick("t7", "A", 70.0))
-      assert(smaOf("t5", "t6", "t7") == Seq(None, None, Some(60.0)),
-        "expired state must not seed the new window; warm-up completes at 3 new prices")
-    } finally {
-      q.stop()
-      old match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("transformWithState SMA (API v2) equals the batch window formulation") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ms = MemoryStream[Tick]
-    val q = graft.streaming.StreamingSmaV2.withMovingAverage(ms.toDS(), n = 5)
-      .writeStream.format("memory").queryName("sma_v2")
-      .outputMode("append").start()
-    try {
-      val data = ticks(12)
-      ms.addData(data.take(7))
-      q.processAllAvailable()
-      ms.addData(data.drop(7))
-      q.processAllAvailable()
-      val streamed = spark.table("sma_v2").orderBy("id")
-        .select("id", "symbol", "price", "moving_average").collect()
-      val batch = RefPipeline.movingAverage(
-          data.toDF("id", "symbol", "price"), n = 5)
-        .orderBy("id")
-        .select("id", "symbol", "price", "moving_average").collect()
-      assert(streamed.length == batch.length)
-      streamed.zip(batch).foreach { case (s, b) => assert(s == b, s"$s != $b") }
-    } finally {
-      q.stop()
-      old match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
-  }
-
   test("stream-static join enriches ticks against a dimension table") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[Tick]
@@ -1730,6 +1648,43 @@ class StreamingSpec extends SparkSuite {
     } finally q2.stop()
   }
 
+  test("RSI ring state survives a query restart from checkpoint (stream==batch)") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import graft.streaming.StreamingIndicators.{RsiOut, Tick => ITick}
+    val ckpt = java.nio.file.Files
+      .createTempDirectory(java.nio.file.Paths.get("target"), "ckpt-").toString
+    val ms = MemoryStream[ITick]
+    val rsi = graft.streaming.StreamingIndicators.withRsi(ms.toDS())
+    val got = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Double, Double)]
+    def writer = rsi.writeStream
+      .option("checkpointLocation", ckpt).outputMode("append")
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[RsiOut], _: Long) =>
+        got.synchronized {
+          got ++= b.collect().map(o => (o.symbol, o.id, o.price, o.rsi14))
+        }
+        ()
+      }
+    val ev = orderedTicks
+    val (first, second) = ev.splitAt(ev.length / 2)
+    val q1 = writer.start()
+    try {
+      ms.addData(first.toSeq); q1.processAllAvailable()
+    } finally q1.stop()
+    // restart against the same checkpoint: every symbol's delta ring
+    // must come back from the state store for the second half to match
+    val q2 = writer.start()
+    try {
+      ms.addData(second.toSeq); q2.processAllAvailable()
+    } finally q2.stop()
+    val want = graft.operators.Finance.rsi(spark, sfDir)
+      .select(col("symbol"), col("id"), col("price"), col("rsi14"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
+      .toSet
+    assert(first.nonEmpty && second.nonEmpty && want.nonEmpty)
+    assert(got.size == want.size, "every batch row must emit exactly once across the restart")
+    assert(got.toSet == want, "stream==batch RSI drift across the restart")
+  }
+
   test("dead-letter split: invalid records carry a reason, valid records flow on") {
     val df = Seq(
       ("e1", Option(10.0)), ("e2", Option.empty[Double]), ("e3", Option(-1.0))
@@ -2077,6 +2032,25 @@ class StreamingSpec extends SparkSuite {
     val batch = graft.operators.Finance.vwap(spark, sfDir)
       .collect().map(_.toSeq)
     assert(viaWindow.toSeq == batch.toSeq)
+    // half-way ties at the 7th decimal round HALF_UP: pv 1064.37 /
+    // volume 96 is exactly 11.0871875 and pv 17140.53 / volume 160 is
+    // exactly 107.1283125 (double divisions give 11.087187499999999
+    // and 107.12831249999999 and would round both down)
+    val tieDir = java.nio.file.Files.createTempDirectory("vwap-tie").toString
+    Seq((1L, 2L, 10.95, 95L, "2024-01-19 10:00:00"),
+        (2L, 2L, 24.12, 1L, "2024-01-19 11:00:00"),
+        (3L, 214L, 107.13, 100L, "2024-01-16 10:00:00"),
+        (4L, 214L, 107.1255, 60L, "2024-01-16 11:00:00"))
+      .toDF("event_id", "user_id", "value", "k", "ts")
+      .select(col("event_id"), to_timestamp(col("ts")).as("ts"), col("user_id"),
+        lit("tick").as("event_type"), col("value"),
+        to_json(struct(col("k"))).as("props"))
+      .write.parquet(s"$tieDir/events.parquet")
+    val tieQuotes = graft.operators.Finance.quotes(spark, tieDir)
+    assert(graft.operators.Finance.vwap(spark, tieDir).select("vwap").as[Double].collect()
+      .toSeq == Seq(11.087188, 107.128313))
+    assert(graft.streaming.StreamingOhlc.vwapBars(tieQuotes).orderBy("symbol")
+      .select("vwap").as[Double].collect().toSeq == Seq(11.087188, 107.128313))
     // streamed == batch on identical rows, fed in REVERSE order across
     // two micro-batches (VWAP state is order-free)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
