@@ -4,18 +4,17 @@ import org.apache.spark.scheduler._
 
 /** Dev utility (probe-only, never in the driver path): run named
   * SparkEntry queries once and print one line per Spark JOB — start
-  * offset, duration, #tasks, shuffle read/write bytes — so a
-  * multi-job composite's wall clock is attributable to its phases
-  * (optimization guide §1: decide whether time goes to a shuffle, a
-  * straggler tail, or driver-paced job latency BEFORE changing code).
+  * offset, gap since the previous job ended, duration and job
+  * description — so a multi-job composite's wall clock is attributable
+  * to its phases (optimization guide §1: decide whether time goes to a
+  * shuffle, a straggler tail, or driver-paced job latency BEFORE
+  * changing code).
   * Usage: jrun.sh graft.JobProfile <query> [query...]
   */
 object JobProfile {
   private final class JobLog extends SparkListener {
-    case class J(start: Long, var end: Long = -1, var nTasks: Int = 0,
-                 var shr: Long = 0, var shw: Long = 0, desc: String)
+    case class J(start: Long, var end: Long = -1, desc: String)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
-    @volatile var t0 = 0L
     override def onJobStart(e: SparkListenerJobStart): Unit =
       jobs.put(e.jobId, J(System.currentTimeMillis(),
         desc = Option(e.properties.getProperty("spark.job.description"))
@@ -23,10 +22,6 @@ object JobProfile {
     override def onJobEnd(e: SparkListenerJobEnd): Unit = {
       val j = jobs.get(e.jobId); if (j != null) j.end = System.currentTimeMillis()
     }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val j = jobs.get(e.stageId); () // stage->job not tracked; tasks via stages below
-    }
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = ()
   }
 
   def main(args: Array[String]): Unit = {

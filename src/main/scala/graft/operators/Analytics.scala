@@ -967,19 +967,6 @@ object Analytics {
       .orderBy("w")
   }
 
-  /** Approximate percentiles (quantile-summary sketch) — the 100 TB
-    * default, paired with [[quantityPercentiles]] exactly like
-    * approx/exact distinct. The raw estimate is engine-specific; the
-    * checked surface is [[tdigestErrorAudit]].
-    */
-  def approxQuantityPercentiles(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy("l_returnflag")
-      .agg(
-        expr("approx_percentile(l_quantity, 0.5)").as("p50_approx"),
-        count(lit(1)).as("n_rows"))
-      .orderBy("l_returnflag")
-
   /** Quantile-sketch accuracy audit — verify the GUARANTEE, not the
     * instance: `approx_percentile` promises its answer's exact rank
     * is within eps*N of the target rank (eps = 1/accuracy, default

@@ -493,10 +493,8 @@ object CorpusOps {
     * benchmark gram hashes broadcast into a left-semi join — the
     * corpus side never shuffles for the probe (only the tiny per-doc
     * count aggregates afterwards), exactly how a 100 TB corpus is
-    * decontaminated against a fixed eval suite. Gram construction
-    * mirrors [[Dedup.shingleHashRows]] (tokens materialized once,
-    * positions explode, codegen'd concat + PolyHash, dedup on the
-    * 8-byte hash).
+    * decontaminated against a fixed eval suite. Grams are
+    * [[decontamGramRows]]' (per-doc distinct 8-byte hashes).
     */
   def decontaminate(spark: SparkSession, dir: String,
                     benchDocs: Int = 20): DataFrame = {
@@ -594,25 +592,14 @@ object CorpusOps {
     * the batch pass above and the streaming twin
     * ([[graft.streaming.StreamingDecontam]]) so the gram definition
     * cannot drift between them. Same shape as
-    * [[Dedup.shingleHashRows]]: tokens materialized once, positions
-    * explode, codegen'd concat + PolyHash, dedup on the 8-byte hash.
+    * [[Dedup.shingleHashRows]]: [[WordGrams.hashed]] rows after one
+    * doc_id shuffle, dedup on the 8-byte hash.
     */
   private[graft] def decontamGramRows(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    graft.functions.PolyHash.register(spark)
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val toks = split(col("text"), " ")
-    df
-      .filter(size(toks) >= DecontamGramN)
-      .repartition(n, col("doc_id"))
-      .select(col("doc_id"), toks.as("toks"),
-        explode(sequence(lit(1), size(toks) - (DecontamGramN - 1))).as("i"))
-      .select(col("doc_id"),
-        call_function(graft.functions.PolyHash.Name,
-          concat(element_at(col("toks"), col("i")), lit(" "),
-                 element_at(col("toks"), col("i") + 1), lit(" "),
-                 element_at(col("toks"), col("i") + 2), lit(" "),
-                 element_at(col("toks"), col("i") + 3))).as("gh"))
+    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    WordGrams.hashed(df.repartition(n, col("doc_id")), split(col("text"), " "),
+        DecontamGramN, "doc_id")
+      .select("doc_id", "gh")
       .dropDuplicates("doc_id", "gh")
   }
 
@@ -731,8 +718,7 @@ object CorpusOps {
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .repartition(nPart, col("doc_id"))
       .localCheckpoint()
-    val gram = concat_ws(" ", (0 until window).map(j =>
-      element_at(col("toks"), col("i") - (window - 1) + j)): _*)
+    val gram = WordGrams.text(col("toks"), col("i") - (window - 1), window)
     val bounds = docs
       .select(col("doc_id"), col("toks"),
         explode(sequence(lit(1), size(col("toks")))).as("i"))
@@ -984,22 +970,14 @@ object CorpusOps {
   def contaminationSweep(spark: SparkSession, dir: String,
                          benchDocs: Int = 20,
                          gramSizes: Seq[Int] = Seq(4, 8, 13)): DataFrame = {
-    graft.functions.PolyHash.register(spark)
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .repartition(nPart, col("doc_id"))
       .localCheckpoint()
     gramSizes.map { n =>
-      val grams = toks
-        .filter(size(col("toks")) >= n)
-        .select(col("doc_id"),
-          explode(sequence(lit(1), size(col("toks")) - (n - 1))).as("i"),
-          col("toks"))
-        .select(col("doc_id"),
-          call_function(graft.functions.PolyHash.Name,
-            concat_ws(" ", (0 until n).map(j =>
-              element_at(col("toks"), col("i") + j)): _*)).as("gh"))
+      val grams = WordGrams.hashed(toks, col("toks"), n, "doc_id")
+        .select("doc_id", "gh")
         .dropDuplicates("doc_id", "gh")
         .localCheckpoint()
       val bench = grams.filter(col("doc_id") < benchDocs).select("gh").distinct()

@@ -72,10 +72,9 @@ object Dedup {
     * Exploding to rows up front is deliberate: Spark's higher-order
     * functions are interpreted (no codegen), so keeping the shingle
     * set as an array and re-scanning it per minhash / per candidate
-    * pair costs ~1 µs per lambda call — 150+ s at sf0.1. Here the
-    * shingle positions explode via `sequence` (a Generate, no hot
-    * lambdas) and the hash is the codegen'd native
-    * [[graft.functions.PolyHash]] expression.
+    * pair costs ~1 µs per lambda call — 150+ s at sf0.1. The rows
+    * come from [[WordGrams.hashed]] (a Generate plus the codegen'd
+    * PolyHash, no hot lambdas).
     *
     * The explicit hash-repartition on doc_id BEFORE the explode is
     * load-bearing three times over: it moves 5 k document rows per
@@ -91,21 +90,20 @@ object Dedup {
     * serialize the cache build and every cache read (measured 10x
     * slowdown).
     */
-  def shingleHashRows(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHash.register(spark)
+  def shingleHashRows(spark: SparkSession, dir: String): DataFrame =
+    distinctShingles(spark, dir, "doc_id")
+
+  /** (key, h): the DISTINCT word-3-shingle hashes per `key` value —
+    * doc_id for [[shingleHashRows]]; lang for the KMV sketches (lang
+    * rides along so the per-lang distinct needs no corpus-sized
+    * doc->lang join). */
+  private def distinctShingles(spark: SparkSession, dir: String,
+                               key: String): DataFrame = {
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val toks = split(col("text"), " ")
-    Tables.documents(spark, dir)
-      .filter(size(toks) >= WordShingleN)
-      .repartition(n, col("doc_id"))
-      .select(col("doc_id"), toks.as("toks"),
-        explode(sequence(lit(1), size(toks) - (WordShingleN - 1))).as("i"))
-      .select(col("doc_id"),
-        call_function(graft.functions.PolyHash.Name,
-          concat(element_at(col("toks"), col("i")), lit(" "),
-                 element_at(col("toks"), col("i") + 1), lit(" "),
-                 element_at(col("toks"), col("i") + 2))).as("h"))
-      .dropDuplicates("doc_id", "h")
+    WordGrams.hashed(Tables.documents(spark, dir).repartition(n, col("doc_id")),
+        split(col("text"), " "), WordShingleN, key)
+      .select(col(key), col("gh").as("h"))
+      .dropDuplicates(key, "h")
   }
 
   /** (doc_id, m0..m15): MinHash signature as 16 codegen'd `min`
@@ -119,9 +117,6 @@ object Dedup {
     }
     rows.groupBy("doc_id").agg(mins.head, mins.tail: _*)
   }
-
-  def minhashSigs(spark: SparkSession, dir: String): DataFrame =
-    minhashSigsFrom(shingleHashRows(spark, dir))
 
   /** (doc_id, band, bh): LSH band hashes of the MinHash signature.
     * Band hash = Horner fold (acc*31 + sig_i) mod P over the band's
@@ -366,22 +361,7 @@ object Dedup {
   def kmvDistinctShingles(spark: SparkSession, dir: String,
                           k: Int = 64): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.PolyHash.register(spark)
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val toks = split(col("text"), " ")
-    // lang-tagged twin of shingleHashRows (lang rides along so the
-    // per-lang distinct needs no corpus-sized doc->lang join)
-    val rows = Tables.documents(spark, dir)
-      .filter(size(toks) >= WordShingleN)
-      .repartition(n, col("doc_id"))
-      .select(col("lang"), toks.as("toks"),
-        explode(sequence(lit(1), size(toks) - (WordShingleN - 1))).as("i"))
-      .select(col("lang"),
-        call_function(graft.functions.PolyHash.Name,
-          concat(element_at(col("toks"), col("i")), lit(" "),
-                 element_at(col("toks"), col("i") + 1), lit(" "),
-                 element_at(col("toks"), col("i") + 2))).as("h"))
-      .dropDuplicates("lang", "h")
+    val rows = distinctShingles(spark, dir, "lang")
       .localCheckpoint() // two consumers: exact count + min-k
     val exact = rows.groupBy("lang").agg(count(lit(1)).as("exact_distinct"))
     val wShard = Window.partitionBy("lang", "salt").orderBy("h")
@@ -413,21 +393,8 @@ object Dedup {
                              k: Int = 64): DataFrame = {
     import spark.implicits._
     import graft.functions.MinKAggregator
-    graft.functions.PolyHash.register(spark)
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val toks = split(col("text"), " ")
-    val rows = Tables.documents(spark, dir)
-      .filter(size(toks) >= WordShingleN)
-      .repartition(n, col("doc_id"))
-      .select(col("lang"), toks.as("toks"),
-        explode(sequence(lit(1), size(toks) - (WordShingleN - 1))).as("i"))
-      .select(col("lang"),
-        call_function(graft.functions.PolyHash.Name,
-          concat(element_at(col("toks"), col("i")), lit(" "),
-                 element_at(col("toks"), col("i") + 1), lit(" "),
-                 element_at(col("toks"), col("i") + 2))).as("h"))
-      .dropDuplicates("lang", "h")
-    val grouped = rows.as[(String, Long)].groupByKey(_._1).mapValues(_._2)
+    val grouped = distinctShingles(spark, dir, "lang").as[(String, Long)]
+      .groupByKey(_._1).mapValues(_._2)
     grouped
       .agg(MinKAggregator.minK(k).toColumn.name("mink"),
            MinKAggregator.countAll.toColumn.name("exact_distinct"))
@@ -1101,11 +1068,11 @@ object Dedup {
     * grams are hashed to int64 (the codegen'd PolyHash expression) so
     * downstream self-joins shuffle and compare 8-byte keys, not gram
     * strings; the oracle applies the identical hash, so the rare
-    * hash-collision merge is consistent across engines. The gram unit
-    * and hash are IDENTICAL to [[shingleHashRows]]' (word 3-shingles,
-    * PolyHash, per-doc hash dedup) — only the carried (lang, source)
-    * block columns differ — which is what lets [[unifiedPairs]] feed
-    * both the MinHash and n-gram families from one pass.
+    * hash-collision merge is consistent across engines. The rows are
+    * [[shingleHashRows]]' ([[WordGrams.hashed]] word 3-grams, per-doc
+    * hash dedup) — only the carried (lang, source) block columns
+    * differ — which is what lets [[unifiedPairs]] feed both the
+    * MinHash and n-gram families from one pass.
     */
   def wordGramRows(spark: SparkSession, dir: String): DataFrame =
     wordGramRowsFrom(Tables.documents(spark, dir))
@@ -1115,20 +1082,11 @@ object Dedup {
     * already-materialized corpus projection.
     */
   def wordGramRowsFrom(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.PolyHash.register(spark)
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val toks = split(col("text"), " ")
-    docs
-      .filter(size(toks) >= 3)
-      .repartition(n, col("doc_id"))  // see shingleHashRows: pre-explode, one shuffle, AQE-coalesce-proof
-      .select(col("doc_id"), col("lang"), col("source"), toks.as("toks"),
-        explode(sequence(lit(1), size(toks) - 2)).as("i"))
-      .select(col("doc_id"), col("lang"), col("source"),
-        call_function(graft.functions.PolyHash.Name,
-          concat(element_at(col("toks"), col("i")), lit(" "),
-                 element_at(col("toks"), col("i") + 1), lit(" "),
-                 element_at(col("toks"), col("i") + 2))).as("gh"))
+    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    // see shingleHashRows: pre-explode, one shuffle, AQE-coalesce-proof
+    WordGrams.hashed(docs.repartition(n, col("doc_id")), split(col("text"), " "),
+        WordShingleN, "doc_id", "lang", "source")
+      .drop("pos")
       .dropDuplicates("doc_id", "gh")
   }
 
@@ -1141,18 +1099,10 @@ object Dedup {
     * area being measured.
     */
   def spanGramRowsFrom(docs: DataFrame, gramN: Int = SpanGramN): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.PolyHash.register(spark)
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val toks = split(col("text"), " ")
-    docs
-      .filter(size(toks) >= gramN)
-      .repartition(n, col("doc_id"))  // see shingleHashRows: pre-explode, one shuffle, AQE-coalesce-proof
-      .select(col("doc_id"), toks.as("toks"),
-        explode(sequence(lit(1), size(toks) - (gramN - 1))).as("pos"))
-      .select(col("doc_id"), col("pos"),
-        call_function(graft.functions.PolyHash.Name,
-          array_join(slice(col("toks"), col("pos"), lit(gramN)), " ")).as("gh"))
+    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    // see shingleHashRows: pre-explode, one shuffle, AQE-coalesce-proof
+    WordGrams.hashed(docs.repartition(n, col("doc_id")), split(col("text"), " "),
+      gramN, "doc_id")
   }
 
   def spanGramRows(spark: SparkSession, dir: String): DataFrame =
@@ -1385,7 +1335,7 @@ object Dedup {
       .select(col("gh"), col("n_docs"), col("n_occ"), col("doc_id"), col("pos"))
     rep.join(docs.select(col("doc_id"), split(col("text"), " ").as("toks")), Seq("doc_id"))
       .select(col("gh"),
-        array_join(slice(col("toks"), col("pos"), lit(gramN)), " ").as("gram"),
+        WordGrams.text(col("toks"), col("pos"), gramN).as("gram"),
         col("n_docs"), col("n_occ"))
       .orderBy(col("n_docs").desc, col("n_occ").desc, col("gh"))
   }

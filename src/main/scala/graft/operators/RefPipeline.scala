@@ -37,14 +37,13 @@ object RefPipeline {
 
   /** Config keys ported from `ConfigurationManager`
     * (financial_engine.py:25-42). The Singleton pattern is not ported —
-    * these are plain parameters; at session level they could be
-    * `spark.conf.get("spark.graft.*")`.
+    * these are plain parameters, read per session by
+    * [[Config.fromSession]].
     */
   final case class Config(
       movingAverageWindow: Int = 5,     // financial_engine.py:38
       priceAlertThreshold: Double = 108.0 // financial_engine.py:39
   )
-  val defaultConfig: Config = Config()
 
   object Config {
     /** Session-conf wiring (`spark.graft.*`) — the Spark idiom for the
@@ -207,9 +206,13 @@ object RefPipeline {
     * normalize → clean → SMA → alert, the whole reference pipeline as
     * one declarative plan. Matches the manual filter-before-aggregate
     * ordering the reference hand-codes at :342-344 — here Catalyst
-    * would push the cleaner below the window anyway.
+    * would push the cleaner below the window anyway. Parameters come
+    * from the session's `spark.graft.*` conf ([[Config.fromSession]]).
     */
-  def pipeline(spark: SparkSession, dir: String, cfg: Config = defaultConfig): DataFrame = {
+  def pipeline(spark: SparkSession, dir: String): DataFrame =
+    pipeline(spark, dir, Config.fromSession(spark))
+
+  def pipeline(spark: SparkSession, dir: String, cfg: Config): DataFrame = {
     val normalized = normalizeUnion(spark, dir)
     val cleaned    = clean(normalized)
     val withSma    = movingAverage(cleaned, cfg.movingAverageWindow)

@@ -90,18 +90,9 @@ object TextAnalysis {
     * the per-doc rollup is map-side-partial on the same partitioning.
     */
   def repetitionStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHash.register(spark)
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val tk = toks
-    val grams = Tables.documents(spark, dir)
-      .filter(size(tk) >= 2)
-      .repartition(n, col("doc_id"))
-      .select(col("doc_id"), tk.as("toks"),
-        explode(sequence(lit(1), size(tk) - 1)).as("i"))
-      .select(col("doc_id"),
-        call_function(graft.functions.PolyHash.Name,
-          concat(element_at(col("toks"), col("i")), lit(" "),
-                 element_at(col("toks"), col("i") + 1))).as("gh"))
+    val grams = WordGrams.hashed(
+      Tables.documents(spark, dir).repartition(n, col("doc_id")), toks, 2, "doc_id")
     grams.groupBy("doc_id", "gh").agg(count(lit(1)).as("c"))
       .groupBy("doc_id")
       .agg(sum(col("c")).as("n_grams"),
@@ -626,7 +617,9 @@ object TextAnalysis {
     * matched positions (a run of k overlapping matches — only possible
     * when sym_a == sym_b — merges at even offsets 0, 2, 4, ... within
     * the run, exactly the single-pass greedy result). Both rules are
-    * plain SQL, so the oracle replays training round by round.
+    * plain SQL, so the oracle replays training round by round. The
+    * loop is [[bpeTrainBatched]]'s at `batchM = 1, topK = 1`, which
+    * keeps exactly the argmax pair each round.
     *
     * Scale shape: training state is VOCABULARY-sized (distinct words x
     * symbols-per-word rows), never corpus-sized — the corpus is
@@ -648,10 +641,10 @@ object TextAnalysis {
   private[graft] def bpeTrainFrom(docs: DataFrame, rounds: Int = 8): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val fit = bpeFit(docs, rounds)
+    val fit = bpeFitBatched(docs, rounds, batchM = 1, topK = 1)
     graft.Caches.release(spark, fit.stateIds) // merges alone answer this query
     fit.merges
-      .map { case (r, sa, sb, cnt) => (r.toLong, sa, sb, sa + sb, cnt) }
+      .map { case (r, _, sa, sb, cnt) => (r.toLong, sa, sb, sa + sb, cnt) }
       .toDF("round", "sym_a", "sym_b", "merged", "pair_count")
       .orderBy("round")
   }
@@ -675,7 +668,7 @@ object TextAnalysis {
   /** [[bpeTokenCounts]] over ANY `(doc_id, text, ...)` frame. */
   private[graft] def bpeTokenCountsFrom(docs: DataFrame, rounds: Int = 8): DataFrame = {
     val spark = docs.sparkSession
-    val fit = bpeFit(docs, rounds)
+    val fit = bpeFitBatched(docs, rounds, batchM = 1, topK = 1)
     val wl = fit.state.groupBy("word").agg(count(lit(1)).as("n_syms"))
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     docs
@@ -703,7 +696,7 @@ object TextAnalysis {
     */
   def bpeFertility(spark: SparkSession, dir: String, rounds: Int = 8): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    fertilityUnder(docs, bpeFit(docs, rounds).state)
+    fertilityUnder(docs, bpeFitBatched(docs, rounds, batchM = 1, topK = 1).state)
   }
 
   /** The PRODUCTION-SIZED trainer demo, one bench row: a full
@@ -804,7 +797,7 @@ object TextAnalysis {
 
   /** [[bpeSegments]] over ANY `(doc_id, text, ...)` frame. */
   private[graft] def bpeSegmentsFrom(docs: DataFrame, rounds: Int = 8): DataFrame = {
-    val fit = bpeFit(docs, rounds)
+    val fit = bpeFitBatched(docs, rounds, batchM = 1, topK = 1)
     fit.state
       .groupBy("word", "wfreq")
       .agg(count(lit(1)).as("n_syms"),
@@ -813,13 +806,6 @@ object TextAnalysis {
                x => x.getField("sym")), " ").as("segmentation"))
       .orderBy("word")
   }
-
-  /** A completed BPE fit: the merge sequence (1-based round, pair,
-    * weighted count at selection time) and the checkpointed final
-    * `(word, wfreq, pos, sym)` state with its block ids.
-    */
-  private case class BpeFit(merges: Seq[(Int, String, String, Long)],
-                            state: DataFrame, stateIds: Set[Int])
 
   /** A batched BPE fit: merges carry (round, sel_rank-within-round,
     * sym_a, sym_b, weighted count at selection time).
@@ -845,8 +831,10 @@ object TextAnalysis {
     * small CTE per keep ("first candidate ranked after the last keep
     * whose symbols avoid the used set"), no recursion needed at small
     * `batchM`. The rank-1 pair is always kept, so every round makes
-    * progress and `batchM = 1, topK = 1` degenerates EXACTLY to
-    * [[bpeTrain]]'s argmax (pinned by `BpeSpec`).
+    * progress, and `batchM = 1, topK = 1` is exact one-merge-per-round
+    * BPE — the setting [[bpeTrain]], [[bpeTokenCounts]],
+    * [[bpeFertility]], [[bpeSegments]] and [[tokenizerCompare]] train
+    * with (`BpeSpec` pins it against a plain-Scala reference).
     *
     * Why simultaneous application is well-defined: two kept pairs
     * share no symbols, so their match sites can never be adjacent in
@@ -854,8 +842,8 @@ object TextAnalysis {
     * forces b = c — a shared symbol). Every run of consecutive
     * matched positions therefore belongs to ONE pair, and the
     * existing gaps-and-islands greedy (merge at even offsets within a
-    * run) applies verbatim with the matched pair's merged symbol
-    * carried through the broadcast join. Applying the batch
+    * run) applies verbatim, the matched row's merged symbol being its
+    * own (sym, next sym) concatenation. Applying the batch
     * simultaneously against the round-start state equals applying the
     * kept pairs sequentially in rank order.
     *
@@ -922,7 +910,6 @@ object TextAnalysis {
     require(totalMerges >= 1 && batchM >= 1 && topK >= batchM,
       "need totalMerges >= 1 and topK >= batchM >= 1")
     val spark = words.sparkSession
-    import spark.implicits._
     // Dictionary-encode the vocabulary (r15 verdict item 2, guide §5/
     // §2.3): the per-round state sorts, shuffles and checkpoints a
     // BIGINT `wid` instead of the word string — at a production vocab
@@ -992,19 +979,23 @@ object TextAnalysis {
         val sel = kept.result()
         merges ++= sel.zipWithIndex.map { case ((sa, sb, c), idx) =>
           (r, idx + 1, sa, sb, c) }
-        val mdf = broadcast(
-          sel.map { case (sa, sb, _) => (sa, sb, sa + sb) }
-            .toDF("msa", "msb", "mmerged"))
-        // run-start via running max over the existing (word, pos)
-        // ordering instead of a min() over the derived (word, grp)
-        // partitioning — saves two per-round sorts of the state; see
-        // the identical rewrite in bpeFit. Match runs here are runs of
-        // rows matching ANY kept pair; kept pairs are symbol-disjoint
+        // a row matches when (sym, nsym) is a kept pair — literal
+        // comparisons, no per-round join — and a matched row's merged
+        // symbol is sym + nsym
+        val hit = sel.map { case (sa, sb, _) =>
+          col("sym") === sa && col("nsym") === sb }.reduce(_ || _)
+        // greedy left-to-right application: islands of consecutive
+        // matches merge at even offsets (overlap needs sym_a == sym_b).
+        // A run's start is the latest run-start position at or before
+        // the row — a running max over the SAME (word, pos) ordering
+        // every window here uses, so all per-round window ops share one
+        // sort (a min(pos) over a derived (word, grp) partitioning
+        // would re-sort the state twice per round). Match runs are runs
+        // of rows matching ANY kept pair; kept pairs are symbol-disjoint
         // by construction, so within a run every row matched the SAME
         // pair and the even-offset rule is unchanged.
         val flagged = withNext
-          .join(mdf, col("sym") === col("msa") && col("nsym") === col("msb"), "left")
-          .withColumn("mt", col("mmerged").isNotNull)
+          .withColumn("mt", hit)
           .withColumn("mst",
             col("mt") && !coalesce(lag(col("mt"), 1).over(w), lit(false)))
           .withColumn("island_start",
@@ -1016,7 +1007,8 @@ object TextAnalysis {
           flagged.filter(!col("gone"))
             .select(col("wid"), col("wfreq"),
               row_number().over(w).cast("bigint").as("pos"),
-              when(col("mok"), col("mmerged")).otherwise(col("sym")).as("sym")),
+              when(col("mok"), concat(col("sym"), col("nsym")))
+                .otherwise(col("sym")).as("sym")),
           eager = false)
         prevIds = stateIds
         state = next
@@ -1035,102 +1027,6 @@ object TextAnalysis {
     // re-attach `word` once at exit (vocab-sized equi-join against the
     // checkpointed dictionary) — consumers see the original interface
     BpeBatchFit(merges,
-      state.join(dict.select("wid", "word"), "wid")
-        .select("word", "wfreq", "pos", "sym"),
-      stateIds ++ dictIds)
-  }
-
-  /** The shared trainer loop behind [[bpeTrain]] / [[bpeTokenCounts]] —
-    * see [[bpeTrain]]'s scaladoc for the determinism and scale story.
-    */
-  private def bpeFit(docs: DataFrame, rounds: Int): BpeFit = {
-    import org.apache.spark.sql.expressions.Window
-    require(rounds >= 1, "bpe needs at least one merge round")
-    val spark = docs.sparkSession
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val words = docs
-      .repartition(n, col("doc_id"))
-      .select(explode(toks).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("wfreq"))
-    // dictionary-encode the vocabulary for the per-round state — the
-    // identical narrowing (and rationale) as bpeFitBatchedWords
-    val (dict, dictIds) = graft.Caches.trackedCheckpoint(
-      words.select(col("word"), col("wfreq"),
-        monotonically_increasing_id().as("wid")), eager = false)
-    // initial state: one row per character plus the </w> marker
-    val s0 = dict
-      .select(col("wid"), col("wfreq"), col("word"),
-        explode(sequence(lit(1L), length(col("word")).cast("bigint") + 1L)).as("pos"))
-      .withColumn("sym",
-        when(col("pos") <= length(col("word")),
-          col("word").substr(col("pos").cast("int"), lit(1)))
-        .otherwise(lit("</w>")))
-      .drop("word")
-    val w = Window.partitionBy("wid").orderBy("pos")
-    val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // lazy generations, one action per round — see bpeFitBatchedWords
-    // (the same fusion: the argmax TakeOrdered materializes the
-    // lazily-checkpointed state's blocks in the same job)
-    var (state, stateIds) = graft.Caches.trackedCheckpoint(s0, eager = false)
-    var prevIds = Set.empty[Int]
-    var merges = Vector.empty[(Int, String, String, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val withNext = state.withColumn("nsym", lead(col("sym"), 1).over(w))
-      // ONE row crosses the driver per round — the winning pair
-      val best = withNext.filter(col("nsym").isNotNull)
-        .groupBy("sym", "nsym").agg(sum(col("wfreq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("sym"), col("nsym"))
-        .limit(1).collect()
-      graft.Caches.release(spark, prevIds)
-      prevIds = Set.empty
-      if (best.isEmpty) exhausted = true // every word fully merged
-      else {
-        val (sa, sb, cnt) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges :+= ((r, sa, sb, cnt))
-        // greedy left-to-right application: islands of consecutive
-        // matches merge at even offsets (overlap needs sym_a == sym_b)
-        // Island offsets WITHOUT a second sort: the old form computed
-        // each match-run's start as min(pos) over (word, grp) — a
-        // Window partitioned by the DERIVED grp key, which re-sorted
-        // the whole state (word, pos) -> (word, grp) and back for the
-        // final row_number, i.e. two extra per-round sorts of the
-        // corpus-vocabulary state (optimization guide §2.4: operations
-        // keyed the same way should share one ordering). A run's start
-        // is equally the latest match-start position at or before this
-        // row — a running max over the SAME (word, pos) ordering every
-        // other window here already uses, so all per-round window ops
-        // now share one sort. Same values bitwise: for a matched row,
-        // max(start pos <= pos) IS its island's min(pos).
-        val flagged = withNext
-          .withColumn("mt", col("sym") === sa && col("nsym") === sb)
-          .withColumn("mst",
-            col("mt") && !coalesce(lag(col("mt"), 1).over(w), lit(false)))
-          .withColumn("island_start",
-            max(when(col("mst"), col("pos"))).over(cum))
-          .withColumn("merged",
-            col("mt") && pmod(col("pos") - col("island_start"), lit(2L)) === 0)
-          .withColumn("gone", coalesce(lag(col("merged"), 1).over(w), lit(false)))
-        val (next, nextIds) = graft.Caches.trackedCheckpoint(
-          flagged.filter(!col("gone"))
-            .select(col("wid"), col("wfreq"),
-              row_number().over(w).cast("bigint").as("pos"),
-              when(col("merged"), lit(sa + sb)).otherwise(col("sym")).as("sym")),
-          eager = false)
-        prevIds = stateIds
-        state = next
-        stateIds = nextIds
-        r += 1
-      }
-    }
-    if (prevIds.nonEmpty) {
-      state.count() // materialize the lazy final state, then free its predecessor
-      graft.Caches.release(spark, prevIds)
-    }
-    // re-attach `word` once at exit — consumers see the original interface
-    BpeFit(merges,
       state.join(dict.select("wid", "word"), "wid")
         .select("word", "wfreq", "pos", "sym"),
       stateIds ++ dictIds)
@@ -1776,7 +1672,7 @@ object TextAnalysis {
     * columns — no per-position driver pacing, no joins in the DP),
     * a vocabulary-sized count aggregate, and a TakeOrdered prune.
     * Driver traffic per round is ONE 1-row collect (the total count
-    * T, the bpeFit winning-pair discipline). Each generation is
+    * T, the BPE trainer's bounded-collect discipline). Each generation is
     * checkpointed and the superseded one released ([[graft.Caches]]).
     */
   private[graft] def unigramFit(docs: DataFrame): UnigramFit = {
@@ -1812,8 +1708,8 @@ object TextAnalysis {
         .unionByName(seed0.filter(length(col("piece")) === 1)))
     var segs: DataFrame = null
     var segIds = Set.empty[Int]
-    // Lazy checkpoint generations, ONE action per round (the bpeFit
-    // fusion): round r's 1-row T collect computes — and persists —
+    // Lazy checkpoint generations, ONE action per round (the BPE
+    // trainer's fusion): round r's 1-row T collect computes — and persists —
     // the previous round's lazy segs+vocab checkpoints as part of the
     // same job (the full-vocabulary aggregate evaluates every
     // partition), so the two eager per-round checkpoint jobs
@@ -2030,7 +1926,8 @@ object TextAnalysis {
     // (optimization guide §2.6) so each trainer's small per-round jobs
     // back-fill the cores the other's round leaves idle — neither loop
     // alone comes close to saturating the cluster.
-    val (uni, bpe) = graft.Par.run2(unigramFit(docs), bpeFit(docs, rounds = 8))
+    val (uni, bpe) = graft.Par.run2(unigramFit(docs),
+      bpeFitBatched(docs, totalMerges = 8, batchM = 1, topK = 1))
     val wlB = bpe.state.groupBy("word").agg(count(lit(1)).as("n_syms"))
     val wlU = uni.segs.select(col("word"), col("n_pieces"))
     docs

@@ -98,16 +98,60 @@ class BpeSpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3), r.getLong(4)))
       .toSeq
 
+  /** Plain-Scala exact BPE, one merge per round: each word (weighted
+    * by its frequency) starts as its characters plus a `</w>` end
+    * marker; a round merges the pair with the maximum weighted
+    * adjacent count, ties to the lexically smallest (sym_a, sym_b),
+    * applying non-overlapping matches greedily left to right. Returns
+    * the merges (round, sym_a, sym_b, count) and each word's final
+    * segmentation. */
+  private def exactBpe(words: Map[String, Long], rounds: Int)
+      : (Seq[(Long, String, String, Long)], Map[String, String]) = {
+    def applyMerge(syms: Vector[String], a: String, b: String): Vector[String] = {
+      val out = Vector.newBuilder[String]
+      var i = 0
+      while (i < syms.length) {
+        if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
+          out += a + b; i += 2
+        } else { out += syms(i); i += 1 }
+      }
+      out.result()
+    }
+    var segs = words.map { case (w, _) => w -> (w.map(_.toString).toVector :+ "</w>") }
+    var merges = Vector.empty[(Long, String, String, Long)]
+    var exhausted = false
+    while (merges.size < rounds && !exhausted) {
+      val counts = segs.toSeq
+        .flatMap { case (w, syms) => syms.zip(syms.tail).map(_ -> words(w)) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      if (counts.isEmpty) exhausted = true
+      else {
+        val ((a, b), c) = counts.minBy { case ((a, b), c) => (-c, a, b) }
+        merges :+= ((merges.size + 1L, a, b, c))
+        segs = segs.map { case (w, syms) => w -> applyMerge(syms, a, b) }
+      }
+    }
+    (merges, segs.map { case (w, syms) => w -> syms.mkString(" ") })
+  }
+
   test("batched trainer with batchM=1, topK=1 is EXACTLY the one-merge-per-round trainer") {
-    // the M=1 equivalence property on the real corpus: same 8 merges,
-    // same order, same selection-time counts
+    // on the real corpus: same 8 merges in the same order with the same
+    // selection-time counts, and the same final segmentation of every
+    // vocabulary word, as the plain-Scala exact trainer above
     val d = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val exact = merges(TextAnalysis.bpeTrainFrom(d, rounds = 8))
+    val words = d.select("text").as[String].collect().toSeq
+      .flatMap(_.split(" ", -1)).groupMapReduce(identity)(_ => 1L)(_ + _)
+    val (refMerges, refSegs) = exactBpe(words, rounds = 8)
+    assert(refMerges.size == 8)
+    assert(merges(TextAnalysis.bpeTrainFrom(d, rounds = 8)) == refMerges)
     val batched = batchedMerges(
       TextAnalysis.bpeTrainBatchedFrom(d, totalMerges = 8, batchM = 1, topK = 1))
-    assert(batched.map(m => (m._1, m._3, m._4, m._5)) ==
-           exact.map(m => (m._1, m._2, m._3, m._4)))
+    assert(batched.map(m => (m._1, m._3, m._4, m._5)) == refMerges)
     assert(batched.forall(_._2 == 1L), "every round selects exactly one merge")
+    val segs = TextAnalysis.bpeSegmentsFrom(d, rounds = 8)
+      .select("word", "segmentation").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(segs == refSegs)
   }
 
   test("batched rounds select symbol-disjoint pairs, rank-1 always kept") {

@@ -91,14 +91,26 @@ class RefPipelineSpec extends SparkSuite {
   test("config plane: spark.graft.* session conf overrides the defaults (§2.10)") {
     val c0 = RefPipeline.Config.fromSession(spark)
     assert(c0 == RefPipeline.Config(5, 108.0))
+    def pipelineRows(cfg: Option[RefPipeline.Config] = None) =
+      cfg.fold(RefPipeline.pipeline(spark, sfDir))(RefPipeline.pipeline(spark, sfDir, _))
+        .select("id", "moving_average").orderBy("id").collect().toSeq
+    val default = pipelineRows()
+    assert(default.nonEmpty)
+    assert(default == pipelineRows(Some(RefPipeline.Config())))
     try {
       spark.conf.set("spark.graft.movingAverageWindow", "3")
       spark.conf.set("spark.graft.priceAlertThreshold", "50.5")
       assert(RefPipeline.Config.fromSession(spark) == RefPipeline.Config(3, 50.5))
+      // the session plane reaches the pipeline, not only fromSession
+      spark.conf.unset("spark.graft.priceAlertThreshold")
+      val window3 = pipelineRows()
+      assert(window3 != default)
+      assert(window3 == pipelineRows(Some(RefPipeline.Config(movingAverageWindow = 3))))
     } finally {
       spark.conf.unset("spark.graft.movingAverageWindow")
       spark.conf.unset("spark.graft.priceAlertThreshold")
     }
+    assert(pipelineRows() == default)
   }
 
   test("property: windowed SMA equals a plain-Scala sliding mean (ScalaCheck)") {
