@@ -127,6 +127,11 @@ object RefPipeline {
     av.unionByName(ws).unionByName(csv)
   }
 
+  /** F2 validity (financial_engine.py:287-289): a tick is kept iff its
+    * price is non-null and positive. The one predicate behind `clean`,
+    * `cleanWithDeadLetter` and the stream's `StreamingEngine.process`. */
+  val validPrice: Column = col("price").isNotNull && col("price") > 0
+
   /** F2 `DataCleaner` (financial_engine.py:283-291): drop records with
     * null or non-positive price; clamp volume to >= 0 with null→0.
     * The 50 ms artificial sleep at :285-286 is a simulation artifact,
@@ -134,7 +139,7 @@ object RefPipeline {
     * applied directly over a source.
     */
   def clean(df: DataFrame): DataFrame =
-    df.filter(col("price").isNotNull && col("price") > 0)
+    df.filter(validPrice)
       .withColumn("volume", greatest(lit(0L), coalesce(col("volume"), lit(0L))))
 
   /** Bad-record handling: the reference silently drops invalid records
@@ -146,7 +151,7 @@ object RefPipeline {
     */
   def cleanWithDeadLetter(df: DataFrame): (DataFrame, DataFrame) = {
     val rejected = df
-      .filter(col("price").isNull || col("price") <= 0)
+      .filter(!validPrice)
       .withColumn("reject_reason",
         when(col("price").isNull, "null_price").otherwise("non_positive_price"))
     (clean(df), rejected)

@@ -45,9 +45,11 @@ object KeyedScan {
       }
 
   /** Spark's `round(x, 6)` on a double (HALF_UP on its decimal image) —
-    * the rounding the twins apply wherever the batch expression does. */
+    * the rounding the twins apply wherever the batch expression does.
+    * Like Spark's, it passes NaN and infinities through unchanged. */
   private[streaming] def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    if (x.isNaN || x.isInfinite) x
+    else BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** The batch cents projection `round(price * 100).cast("bigint")`. */
   private[streaming] def cents(price: Double): Long =

@@ -1,17 +1,36 @@
 package graft.streaming
 
+import scala.collection.mutable
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
 
 /** Observer-pattern sink fan-out (K1-K4, financial_engine.py:59-110),
-  * Spark-first: one micro-batch is persisted once and delivered to
-  * every attached sink inside a single `foreachBatch` — the analog of
-  * `Subject.notify` walking its observer list (:76-83). Per-sink
-  * exceptions are swallowed exactly like the reference swallows
-  * per-observer exceptions (:82-83): one bad sink must not poison the
-  * others or the query.
+  * Spark-first: every attached sink receives the same micro-batch inside
+  * a single `foreachBatch` — the analog of `Subject.notify` walking its
+  * observer list (:76-83). Per-sink exceptions are swallowed exactly
+  * like the reference swallows per-observer exceptions (:82-83): one
+  * bad sink must not poison the others or the query.
+  *
+  * A sink receives a [[Batch]]: the micro-batch `df` with one
+  * observation attached (its row count) and its `id`. `report(f)` hands
+  * `f` the row count once every sink has run: the logging sink only
+  * reports and runs no Spark job.
+  *
+  * One action per batch. The micro-batch is a plan over the stateful
+  * stage's RDD, not a cached table: nothing is persisted, and every
+  * Spark action over it re-runs the stateful stage (the shuffle's map
+  * output is reused and the state is committed again at the same
+  * version, so outputs stay correct). The alerts sink's collect reads
+  * the whole batch unless its cap overflowed, and then fills the row
+  * count; with the engine's logging and alerts sinks a batch therefore
+  * runs one job. When no collect filled it, the fan-out runs one full
+  * action itself, so the state advances and the count is exact. Each
+  * other action — the `show` in [[console]], or a user sink acting on
+  * `df` — is one more job that re-runs the stateful stage.
   *
   * Spark rows are immutable, so the reference's defensive
   * `copy.deepcopy` before each observer (:81) has no analog — isolation
@@ -24,14 +43,51 @@ object Sinks {
       logLevel: String = "INFO",          // financial_engine.py:40
       alertThreshold: Double = 108.0)     // financial_engine.py:39
 
-  type Sink = DataFrame => Unit
+  private val Observed = "graft_sinks"
 
-  /** K1 ConsoleNotifier (:85-88). */
-  def console(maxRows: Int = 5): Sink = _.show(maxRows, truncate = false)
+  /** One micro-batch as every sink sees it (see [[Sinks]]). */
+  final class Batch private[Sinks] (val df: DataFrame, val id: Long) {
+    private var rows: Option[Long] = None
+    private val reports = mutable.ArrayBuffer.empty[Long => Unit]
 
-  /** K2 LoggingModule — delivers iff log_level == "INFO" (:90-95). */
-  def logging(cfg: Config, log: String => Unit = println): Sink = df =>
-    if (cfg.logLevel == "INFO") log(s"[graft] batch with ${df.count()} events")
+    /** Run `f` on the micro-batch thread with the batch's row count
+      * after every sink has run; a failing `f` is isolated like a sink. */
+    def report(f: Long => Unit): Unit = reports += f
+
+    /** Collect `query(df)`. A result below its plan's row bound read every
+      * row, so the observation its action filled (read synchronously from
+      * the executed plan) is the batch's row count. At the bound — an
+      * alert cap that overflowed — the ordered limit may have stopped
+      * early: over rows already sorted on its key it reads only `limit`
+      * rows per partition. */
+    private[Sinks] def collect(query: DataFrame => DataFrame): Array[Row] = {
+      val q = query(df)
+      val out = q.collect()
+      if (rows.isEmpty && q.queryExecution.optimizedPlan.maxRows.forall(out.length < _))
+        rows = q.queryExecution.observedMetrics.get(Observed).map(_.getLong(0))
+      out
+    }
+
+    /** Run one full action unless a collect already counted the rows,
+      * then deliver the count. A failure here is the batch's own and
+      * fails the query. */
+    private[Sinks] def deliver(): Unit = {
+      val n = rows.getOrElse(df.queryExecution.toRdd.count())
+      reports.foreach(r => isolated(id)(r(n)))
+    }
+  }
+
+  type Sink = Batch => Unit
+
+  /** K1 ConsoleNotifier (:85-88). Not a default of the engine: `show` is
+    * a partial action, one more Spark job per batch that re-runs the
+    * stateful stage over the partitions it reads. */
+  def console(maxRows: Int = 5): Sink = _.df.show(maxRows, truncate = false)
+
+  /** K2 LoggingModule — delivers iff log_level == "INFO" (:90-95). A pure
+    * reporter: it runs no Spark job and logs the batch's row count. */
+  def logging(cfg: Config, log: String => Unit = println): Sink = b =>
+    if (cfg.logLevel == "INFO") b.report(n => log(s"[graft] batch with $n events"))
 
   /** K3 AlertGenerator — strict `>` threshold predicate (:100-106)
     * feeding a downstream handler. Alerts are a filtered trickle by
@@ -46,32 +102,34 @@ object Sinks {
              maxAlerts: Int = 10000,
              onOverflow: Int => Unit = cap => System.err.println(
                s"[graft] alert sink overflow: batch exceeded $cap alerts; " +
-               "excess dropped — route alerts to a distributed sink")): Sink = df => {
+               "excess dropped — route alerts to a distributed sink")): Sink = b => {
     // fetch cap+1: one extra row is the cheapest exact overflow test
-    val hits = df.filter(col("moving_average") > cfg.alertThreshold)
+    val hits = b.collect(_.filter(col("moving_average") > cfg.alertThreshold)
       .orderBy("id")
-      .limit(maxAlerts + 1).collect()
+      .limit(maxAlerts + 1))
     if (hits.length > maxAlerts) {
       onOverflow(maxAlerts)
       handler(hits.take(maxAlerts))
     } else handler(hits)
   }
 
-  /** K4 Subject.notify — deliver one cached batch to every sink,
-    * swallowing per-sink failures (:79-83). NonFatal only: the
-    * reference swallows `Exception`, not errors — a fatal JVM
-    * condition (OOM, thread interrupt) must propagate and fail the
-    * query rather than be reported as a delivered batch. */
-  def fanOut(sinks: Seq[Sink])(batch: DataFrame, batchId: Long): Unit = {
-    batch.persist()
-    try sinks.foreach { s =>
-      try s(batch)
-      catch { case scala.util.control.NonFatal(e) =>
-        // reference behavior: log and continue (financial_engine.py:82-83)
-        System.err.println(s"[graft] sink failed on batch $batchId: ${e.getMessage}")
-      }
-    } finally batch.unpersist()
+  /** K4 Subject.notify — deliver one batch to every sink, swallowing
+    * per-sink failures (:79-83), then its row count to every report.
+    * NonFatal only: the reference swallows `Exception`, not errors — a
+    * fatal JVM condition (OOM, thread interrupt) must propagate and fail
+    * the query rather than be reported as a delivered batch. */
+  def fanOut(sinks: Seq[Sink])(df: DataFrame, batchId: Long): Unit = {
+    val batch = new Batch(df.observe(Observed, count(lit(1)).as("rows")), batchId)
+    sinks.foreach(s => isolated(batchId)(s(batch)))
+    batch.deliver()
   }
+
+  // reference behavior: log and continue (financial_engine.py:82-83)
+  private def isolated(batchId: Long)(body: => Unit): Unit =
+    try body
+    catch { case NonFatal(e) =>
+      System.err.println(s"[graft] sink failed on batch $batchId: ${e.getMessage}")
+    }
 
   /** Observer attach/detach registry (financial_engine.py:68-74): the
     * reference mutates its observer list while the engine runs; here

@@ -1,8 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.{count, count_if, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.operators.RefPipeline
 import graft.streaming.StreamingSma.{SmaOut, Tick}
 
 /** End-to-end engine lifecycle (E1-E3, financial_engine.py:329-433):
@@ -34,23 +36,31 @@ object StreamingEngine {
       checkpointDir: Option[String] = None,
       sinks: Sinks.Config = Sinks.Config())
 
-  /** The processing graph, source-agnostic: validity filter + clamp
-    * (F2) → count-based SMA with warm-up gate (A1). Pure function of
-    * the input stream — identical code path for MemoryStream tests,
-    * the rate source, or a real feed.
+  /** Name of the per-batch tick counts in `StreamingQueryProgress.observedMetrics`. */
+  val TicksObserved = "graft_ticks"
+
+  /** The processing graph, source-agnostic: validity filter (F2,
+    * `RefPipeline.validPrice`) → count-based SMA with warm-up gate (A1).
+    * Pure function of the input stream — identical code path for
+    * MemoryStream tests, the rate source, or a real feed. Rejected ticks
+    * are counted, not silently dropped: the observation [[TicksObserved]]
+    * (`ticks_in`, `ticks_rejected`) sits below the filter, in the map
+    * stage, which runs once per batch even when sinks re-run the stateful
+    * stage. The volume clamp lives in the untyped path.
     */
   def process(ticks: Dataset[Tick], cfg: EngineConfig): Dataset[SmaOut] = {
-    import ticks.sparkSession.implicits._
-    val cleaned = ticks.filter(t => t.price > 0) // F2; volume clamp lives in the untyped path
-    StreamingSma.withMovingAverage(cleaned, cfg.movingAverageWindow)
+    val counted = ticks.observe(TicksObserved, count(lit(1)).as("ticks_in"),
+      count_if(!RefPipeline.validPrice).as("ticks_rejected"))
+    StreamingSma.withMovingAverage(counted.filter(RefPipeline.validPrice), cfg.movingAverageWindow)
   }
 
   /** Wire the graph to the observer fan-out and start the query with
-    * the configured trigger cadence and checkpoint location.
+    * the configured trigger cadence and checkpoint location. The default
+    * sink is `logging`; pass `Sinks.console()` in `extraSinks` to print.
     */
   def start(ticks: Dataset[Tick], cfg: EngineConfig,
             extraSinks: Seq[Sinks.Sink] = Nil): StreamingQuery = {
-    val sinks = Seq(Sinks.console(), Sinks.logging(cfg.sinks)) ++ extraSinks
+    val sinks = Sinks.logging(cfg.sinks) +: extraSinks
     val writer0 = Sinks.attach(process(ticks, cfg), sinks)
     val writer1 = cfg.triggerInterval
       .map(i => writer0.trigger(Trigger.ProcessingTime(i))).getOrElse(writer0)

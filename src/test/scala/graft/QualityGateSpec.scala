@@ -42,8 +42,8 @@ class QualityGateSpec extends SparkSuite {
   test("alert sink caps the driver-side collect at maxAlerts") {
     var got = 0
     val df = (1 to 20).map(i => (s"e$i", 200.0)).toDF("id", "moving_average")
-    Sinks.alerts(Sinks.Config(alertThreshold = 108.0), rs => got = rs.length,
-      maxAlerts = 5)(df)
+    Sinks.fanOut(Seq(Sinks.alerts(Sinks.Config(alertThreshold = 108.0), rs => got = rs.length,
+      maxAlerts = 5)))(df, 0L)
     assert(got == 5, s"collect must be bounded, got $got rows")
   }
 }

@@ -128,8 +128,8 @@ class SourcesSpec extends SparkSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Tick]
     val alerts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val alertSink: Sinks.Sink = df =>
-      alerts ++= df.filter(col("moving_average") > 108.0)
+    val alertSink: Sinks.Sink = b =>
+      alerts ++= b.df.filter(col("moving_average") > 108.0)
         .select("id").as[String](implicitly).collect()
     val q = StreamingEngine.start(ms.toDS(),
       StreamingEngine.EngineConfig(), Seq(alertSink))

@@ -57,9 +57,9 @@ class StreamingSpec extends SparkSuite {
     val seen    = scala.collection.mutable.ArrayBuffer.empty[String]
     val alerted = scala.collection.mutable.ArrayBuffer.empty[String]
     val sinks: Seq[Sinks.Sink] = Seq(
-      df => seen ++= df.select("id").as[String](implicitly).collect(),
+      b => seen ++= b.df.select("id").as[String](implicitly).collect(),
       _ => throw new RuntimeException("boom"),  // must not poison the others
-      df => alerted ++= df.filter(col("price") > 10.0)
+      b => alerted ++= b.df.filter(col("price") > 10.0)
         .select("id").as[String](implicitly).collect()
     )
     val q = Sinks.attach(ms.toDS(), sinks).start()
@@ -74,15 +74,16 @@ class StreamingSpec extends SparkSuite {
   test("config-gated logging sink honors log_level (K2)") {
     val logged = scala.collection.mutable.ArrayBuffer.empty[String]
     val df = Seq(("e1", 1.0)).toDF("id", "price")
-    Sinks.logging(Sinks.Config(logLevel = "INFO"), logged += _)(df)
-    Sinks.logging(Sinks.Config(logLevel = "WARN"), logged += _)(df)
+    Sinks.fanOut(Seq(Sinks.logging(Sinks.Config(logLevel = "INFO"), logged += _)))(df, 0L)
+    Sinks.fanOut(Seq(Sinks.logging(Sinks.Config(logLevel = "WARN"), logged += _)))(df, 1L)
     assert(logged.length == 1, "only the INFO-level config may deliver")
+    assert(logged.head == "[graft] batch with 1 events")
   }
 
   test("alert sink applies the strict threshold over moving_average (K3)") {
     var got: Array[Row] = Array.empty
     val df = Seq(("e1", 108.0), ("e2", 110.0)).toDF("id", "moving_average")
-    Sinks.alerts(Sinks.Config(alertThreshold = 108.0), got = _)(df)
+    Sinks.fanOut(Seq(Sinks.alerts(Sinks.Config(alertThreshold = 108.0), got = _)))(df, 0L)
     assert(got.map(_.getString(0)).toSeq == Seq("e2"))
   }
 
@@ -90,16 +91,190 @@ class StreamingSpec extends SparkSuite {
     var got: Array[Row] = Array.empty
     var overflowedAt = -1
     val df = Seq("e3", "e1", "e4", "e2").map((_, 120.0)).toDF("id", "moving_average")
-    Sinks.alerts(Sinks.Config(alertThreshold = 108.0), got = _,
-      maxAlerts = 2, onOverflow = overflowedAt = _)(df)
+    Sinks.fanOut(Seq(Sinks.alerts(Sinks.Config(alertThreshold = 108.0), got = _,
+      maxAlerts = 2, onOverflow = overflowedAt = _)))(df, 0L)
     assert(overflowedAt == 2, "hitting the cap must be signalled, not silent")
     assert(got.map(_.getString(0)).toSeq == Seq("e1", "e2"),
       "the kept subset is the id-ordered prefix, not an arbitrary limit")
     // under the cap: no overflow signal
     overflowedAt = -1
-    Sinks.alerts(Sinks.Config(alertThreshold = 108.0), got = _,
-      maxAlerts = 4, onOverflow = overflowedAt = _)(df)
+    Sinks.fanOut(Seq(Sinks.alerts(Sinks.Config(alertThreshold = 108.0), got = _,
+      maxAlerts = 4, onOverflow = overflowedAt = _)))(df, 1L)
     assert(overflowedAt == -1 && got.length == 4)
+  }
+
+  test("an alert overflow over id-sorted partitions still logs the exact count") {
+    // an ordered limit over rows already sorted on its key reads only
+    // `limit` rows per partition, so its observation is partial
+    val df = (1 to 1000).map(i => (f"e$i%05d", 200.0)).toDF("id", "moving_average")
+      .repartition(4).sortWithinPartitions("id")
+    val logged = scala.collection.mutable.ArrayBuffer.empty[String]
+    var got: Array[Row] = Array.empty
+    var overflowedAt = -1
+    Sinks.fanOut(Seq(Sinks.logging(Sinks.Config(), logged += _),
+      Sinks.alerts(Sinks.Config(), got = _, maxAlerts = 5, onOverflow = overflowedAt = _)))(df, 0L)
+    assert(overflowedAt == 5 && got.map(_.getString(0)).toSeq == (1 to 5).map(i => f"e$i%05d"))
+    assert(logged.toSeq == Seq("[graft] batch with 1000 events"))
+  }
+
+  /** Spark jobs per micro-batch, keyed by the `sql.streaming.queryId` and
+    * `streaming.sql.batchId` job properties. */
+  private final class JobsPerBatch extends org.apache.spark.scheduler.SparkListener {
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]()
+    private val markers = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      Option(e.properties).foreach { p =>
+        Option(p.getProperty("jobs.marker")).foreach(markers.add)
+        for (b <- Option(p.getProperty("streaming.sql.batchId"));
+             q <- Option(p.getProperty("sql.streaming.queryId")))
+          jobs.merge((q, b.toLong), 1, _ + _)
+      }
+    /** Return once the listener has seen every job started before the call. */
+    def sync(): Unit = {
+      val id = java.util.UUID.randomUUID().toString
+      val sc = spark.sparkContext
+      sc.setLocalProperty("jobs.marker", id)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("jobs.marker", null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!markers.contains(id) && System.currentTimeMillis() < deadline) Thread.sleep(5)
+      assert(markers.contains(id), "listener bus did not drain")
+    }
+  }
+
+  /** Two SMA micro-batches: warm-up rows, ticks over the 108 threshold,
+    * and (in `invalid`) zero and negative prices. */
+  private def engineTicks(invalid: Boolean): Seq[Seq[Tick]] = {
+    val all = (1 to 40).map { i =>
+      val p = if (invalid && i % 7 == 0) 0.0 else if (invalid && i % 11 == 0) -3.5 else 100.0 + i * 0.5
+      Tick(f"e$i%03d", if (i % 3 == 0) "B" else "A", p)
+    }
+    Seq(all.take(17), all.drop(17))
+  }
+
+  private def batchAlerts(ticks: Seq[Tick]): Seq[String] =
+    RefPipeline.alerts(RefPipeline.movingAverage(
+        RefPipeline.clean(ticks.toDF().withColumn("volume", lit(0L))), n = 5), 108.0)
+      .select("id").as[String].collect().sorted.toSeq
+
+  /** Run `sinks` over the engine's SMA stream, one micro-batch per input
+    * batch; returns the query and the jobs each of its batches started. */
+  private def runEngine(sinks: Seq[Sinks.Sink], input: Seq[Seq[Tick]])
+      : (org.apache.spark.sql.streaming.StreamingQuery, Seq[Int]) = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import graft.streaming.StreamingEngine
+    val ms = MemoryStream[Tick](2)
+    val listener = new JobsPerBatch
+    spark.sparkContext.addSparkListener(listener)
+    val q = Sinks.attach(
+      StreamingEngine.process(ms.toDS(), StreamingEngine.EngineConfig()), sinks).start()
+    try {
+      input.foreach { b => ms.addData(b); q.processAllAvailable() }
+      listener.sync()
+      (q, input.indices.map(i => listener.jobs.getOrDefault((q.id.toString, i.toLong), 0)))
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("logging and alerts sinks run one Spark job per micro-batch, in either order") {
+    val input = engineTicks(invalid = false)
+    val expected = batchAlerts(input.flatten)
+    assert(expected.nonEmpty)
+    for (order <- Seq("logging-first", "alerts-first")) {
+      val logged = scala.collection.mutable.ArrayBuffer.empty[String]
+      val alerted = scala.collection.mutable.ArrayBuffer.empty[String]
+      val logging = Sinks.logging(Sinks.Config(), logged += _)
+      val alerts = Sinks.alerts(Sinks.Config(), rs => alerted ++= rs.map(_.getString(0)))
+      val sinks = if (order == "logging-first") Seq(logging, alerts) else Seq(alerts, logging)
+      val (_, jobs) = runEngine(sinks, input)
+      assert(jobs == Seq(1, 1), s"$order: jobs per batch $jobs")
+      assert(logged.toSeq == input.map(b => s"[graft] batch with ${b.size} events"), order)
+      assert(alerted.sorted.toSeq == expected, order)
+    }
+  }
+
+  test("the logging sink alone runs one Spark job per micro-batch and logs exact counts") {
+    val input = engineTicks(invalid = true)
+    val logged = scala.collection.mutable.ArrayBuffer.empty[String]
+    val (_, jobs) = runEngine(Seq(Sinks.logging(Sinks.Config(), logged += _)), input)
+    assert(jobs == Seq(1, 1), s"jobs per batch $jobs")
+    assert(logged.toSeq == input.map(b => s"[graft] batch with ${b.count(_.price > 0)} events"))
+  }
+
+  test("logging keeps the exact count when a sink fails before or after its action (K4)") {
+    val input = engineTicks(invalid = true)
+    val valid = input.map(b => s"[graft] batch with ${b.count(_.price > 0)} events")
+    val logged = scala.collection.mutable.ArrayBuffer.empty[String]
+    val alerted = scala.collection.mutable.ArrayBuffer.empty[String]
+    val logging = Sinks.logging(Sinks.Config(), logged += _)
+    val boom: Sinks.Sink = _ => throw new RuntimeException("boom")
+    val alerts = Sinks.alerts(Sinks.Config(), rs => alerted ++= rs.map(_.getString(0)))
+    val (_, jobs1) = runEngine(Seq(logging, boom, alerts), input)
+    assert(logged.toSeq == valid && jobs1 == Seq(1, 1), s"jobs per batch $jobs1")
+    assert(alerted.sorted.toSeq == batchAlerts(input.flatten))
+    // a handler that throws after the collect: the collect published the counts
+    logged.clear()
+    val late = Sinks.alerts(Sinks.Config(), _ => throw new RuntimeException("late"))
+    val (_, jobs2) = runEngine(Seq(logging, late), input)
+    assert(logged.toSeq == valid && jobs2 == Seq(1, 1), s"jobs per batch $jobs2")
+    // only a sink that fails before any action: the fan-out runs the one action
+    logged.clear()
+    val (_, jobs3) = runEngine(Seq(boom, logging), input)
+    assert(logged.toSeq == valid && jobs3 == Seq(1, 1), s"jobs per batch $jobs3")
+  }
+
+  test("a NaN price is kept on the stream path as in batch clean (stream == batch)") {
+    // Spark orders NaN above every value, so `price > 0` keeps it in both
+    // paths, and every SMA window that holds it averages to NaN
+    val input = engineTicks(invalid = false).map(_.map(t =>
+      if (t.id == "e010" || t.id == "e025") t.copy(price = Double.NaN) else t))
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val alerted = scala.collection.mutable.ArrayBuffer.empty[String]
+    val rows: Sinks.Sink = b => out ++= b.df.select("id", "symbol", "price", "moving_average").collect()
+    runEngine(Seq(rows, Sinks.alerts(Sinks.Config(), rs => alerted ++= rs.map(_.getString(0)))),
+      input)
+    val batch = RefPipeline.movingAverage(
+        RefPipeline.clean(input.flatten.toDF().withColumn("volume", lit(0L))), n = 5)
+      .select("id", "symbol", "price", "moving_average").collect().sortBy(_.getString(0)).toSeq
+    assert(batch.exists(r => !r.isNullAt(3) && r.getDouble(3).isNaN), "no NaN window in the case")
+    assert(out.sortBy(_.getString(0)).toSeq == batch)
+    assert(alerted.sorted.toSeq == batchAlerts(input.flatten))
+  }
+
+  test("a sink that collects the batch twice leaves stream output and state equal to batch") {
+    val input = engineTicks(invalid = false)
+    val first = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val second = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val twice: Sinks.Sink = b => {
+      first ++= b.df.select("id", "symbol", "price", "moving_average").collect()
+      second ++= b.df.select("id", "symbol", "price", "moving_average").collect()
+    }
+    val (_, jobs) = runEngine(Seq(twice), input)
+    // two direct collects, then the fan-out's own action (none went through the batch)
+    assert(jobs == Seq(3, 3), s"jobs per batch $jobs")
+    val batch = RefPipeline.movingAverage(input.flatten.toDF(), n = 5)
+      .select("id", "symbol", "price", "moving_average").collect().sortBy(_.getString(0)).toSeq
+    // the second micro-batch reads state that the first committed three times
+    assert(first.sortBy(_.getString(0)).toSeq == batch, "first collect diverged from batch")
+    assert(second.sortBy(_.getString(0)).toSeq == batch, "re-run stateful stage diverged")
+  }
+
+  test("rejected ticks are counted in the query's observed metrics, not silently dropped") {
+    val input = engineTicks(invalid = true)
+    val logged = scala.collection.mutable.ArrayBuffer.empty[String]
+    // a direct collect re-runs the stateful stage; the counts sit in the map stage
+    val rerun: Sinks.Sink = _.df.collect()
+    val (q, jobs) = runEngine(Seq(Sinks.logging(Sinks.Config(), logged += _), rerun), input)
+    assert(jobs == Seq(2, 2), s"jobs per batch $jobs")
+    import graft.streaming.StreamingEngine.TicksObserved
+    val seen = q.recentProgress.filter(_.numInputRows > 0).map { p =>
+      val r = p.observedMetrics.get(TicksObserved)
+      (r.getAs[Long]("ticks_in"), r.getAs[Long]("ticks_rejected"))
+    }.toSeq
+    val expected = input.map(b => (b.size.toLong, b.count(_.price <= 0).toLong))
+    assert(expected.forall(_._2 > 0) && seen == expected, s"observed $seen")
+    assert(logged.toSeq == expected.map { case (in, rej) => s"[graft] batch with ${in - rej} events" })
   }
 
   test("stream-static join enriches ticks against a dimension table") {
@@ -1764,8 +1939,8 @@ class StreamingSpec extends SparkSuite {
     val ms = MemoryStream[Tick]
     val a = scala.collection.mutable.ArrayBuffer.empty[String]
     val b = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sinkA: Sinks.Sink = df => a ++= df.select("id").as[String](implicitly).collect()
-    val sinkB: Sinks.Sink = df => b ++= df.select("id").as[String](implicitly).collect()
+    val sinkA: Sinks.Sink = bt => a ++= bt.df.select("id").as[String](implicitly).collect()
+    val sinkB: Sinks.Sink = bt => b ++= bt.df.select("id").as[String](implicitly).collect()
     val reg = new Sinks.SinkRegistry
     reg.attach(sinkA).attach(sinkB)
     val q = Sinks.attach(ms.toDS(), reg).start()
@@ -1792,8 +1967,8 @@ class StreamingSpec extends SparkSuite {
       checkpointDir = Some(ckpt),
       sinks = Sinks.Config(logLevel = "WARN"))    // mute the logging sink
     val q = StreamingEngine.start(ms.toDS(), cfg,
-      extraSinks = Seq(df => got.synchronized {
-        got ++= df.select("id").as[String](implicitly).collect()
+      extraSinks = Seq(b => got.synchronized {
+        got ++= b.df.select("id").as[String](implicitly).collect()
       }))
     try {
       ms.addData(ticks(6))
