@@ -963,7 +963,7 @@ object SparkEntry {
     * against the trained coarse quantizer — the training loop's own
     * last assignment `a2` is vs the previous round's centroids, a
     * training artifact). Used by the IVF-PQ serving oracles; mirrors
-    * `Similarity.coarseAssign(vq, cents)` in the model builders.
+    * `Similarity.KmeansFit.routing` in `ivfPqModel` and `ivfPqResidualRecall`.
     */
   private val routeCte: String =
     """a3 AS (SELECT vec_id, cid FROM (
@@ -1243,7 +1243,7 @@ object SparkEntry {
         |  FROM (SELECT event_id AS id, user_id AS symbol, value AS price FROM events)
         |  WINDOW w AS (PARTITION BY symbol ORDER BY id
         |               ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-        |) WHERE moving_average > 108.0
+        |) WHERE moving_average > 108.0 AND NOT isnan(moving_average)
         |ORDER BY id""".stripMargin,
 
     "ref_pipeline" ->
@@ -1275,7 +1275,7 @@ object SparkEntry {
         |  )
         |  WINDOW w AS (PARTITION BY symbol ORDER BY id
         |               ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-        |) WHERE moving_average > 108.0
+        |) WHERE moving_average > 108.0 AND NOT isnan(moving_average)
         |ORDER BY id""".stripMargin,
 
     "x_pricing_summary" ->

@@ -132,6 +132,14 @@ object RefPipeline {
     * `cleanWithDeadLetter` and the stream's `StreamingEngine.process`. */
   val validPrice: Column = col("price").isNotNull && col("price") > 0
 
+  /** F3 alert predicate (financial_engine.py:104): the moving average is
+    * strictly above `threshold` — equality does NOT fire — and is not
+    * NaN. Python's `nan > t` is false, while Spark orders NaN above every
+    * value, so the NaN test is explicit. The one predicate behind
+    * [[alerts]] and the stream's `Sinks.alerts`. */
+  def alertFires(threshold: Double): Column =
+    col("moving_average") > lit(threshold) && !isnan(col("moving_average"))
+
   /** F2 `DataCleaner` (financial_engine.py:283-291): drop records with
     * null or non-positive price; clamp volume to >= 0 with null→0.
     * The 50 ms artificial sleep at :285-286 is a simulation artifact,
@@ -181,12 +189,12 @@ object RefPipeline {
     )
   }
 
-  /** F3 `AlertGenerator` (financial_engine.py:97-110): strictly
-    * `moving_average > threshold` (:104 — equality does NOT fire); the
-    * raw-price branch at :107-110 is dead code and not ported.
+  /** F3 `AlertGenerator` (financial_engine.py:97-110): the rows where
+    * [[alertFires]]; the raw-price branch at :107-110 is dead code and
+    * not ported.
     */
   def alerts(df: DataFrame, threshold: Double): DataFrame =
-    df.filter(col("moving_average") > lit(threshold))
+    df.filter(alertFires(threshold))
 
   /** Alert line formatting (financial_engine.py:100-106): the
     * `*** ALERT ***` message as a column — `format_string` is the

@@ -657,49 +657,81 @@ object Similarity {
     * every member simply drops out — the same groupBy semantics on
     * both sides.
     *
-    * Scale shape: the vector side explodes ONCE and is checkpointed
-    * (reused by every round); centroids are k x dim rows — broadcast
-    * into the distance join at any corpus size; assignment is one
-    * hash-aggregate (map-side partials) + a rank-1 window per vector;
-    * each round's output is checkpointed so round r+1 plans against
-    * materialized blocks, not r rounds of lineage (the
-    * [[graft.operators.Dedup.labelPropagation]] lesson).
+    * Scale shape: the corpus packs ONCE into one checkpoint; the model
+    * (k x dim centroids) lives on the driver, and each round is one
+    * aggregate action over the checkpoint ([[lloydRound]]). The result
+    * is built on the driver from the final model and its member
+    * counts, so its plan reads no corpus block.
     */
   def kmeansCentroids(spark: SparkSession, dir: String,
                       k: Int = 8, iters: Int = 2): DataFrame = {
     val fit = kmeansFit(spark, dir, k, iters)
-    // the exploded corpus is not referenced by the returned plan (only
-    // the final assignment + centroid blocks are)
     graft.Caches.release(spark, fit.vqIds)
-    val counts = fit.assignment.groupBy("cid").agg(count(lit(1)).as("n_members"))
-    // explicit broadcast: checkpointed frames carry no size statistics,
-    // so Catalyst would sort-merge this k-row join
-    fit.cents.join(broadcast(counts), Seq("cid"))
-      .select(col("cid").as("centroid_id"), col("pos"), col("n_members"),
+    val rows = fit.model.cellRows.map { case (cid, pos, cq) => (cid, pos, fit.members(cid), cq) }
+    spark.createDataFrame(rows).toDF("centroid_id", "pos", "n_members", "cq")
+      .select(col("centroid_id"), col("pos"), col("n_members"),
         round(col("cq").cast("double") / 1e6, 6).as("mean_val"))
       .orderBy("centroid_id", "pos")
   }
 
-  /** A completed Lloyd fit: the PACKED checkpointed corpus (`vqp` —
-    * `(vec_id, vqa ARRAY<BIGINT>)`, the assignment kernel's shape),
-    * the exploded view `vq` (`(vec_id, pos, vq)` — a narrow
-    * posexplode over the same checkpoint blocks, recomputed per use,
-    * for the PQ sub-quantizer paths that genuinely need per-position
-    * rows), final per-vector `assignment`, final `cents`, and the
-    * block-id sets the caller owns ([[graft.Caches.release]] `vqIds`
-    * once the corpus is no longer referenced; `lastGenIds` back the
-    * returned frames and normally live until session cache cleanup).
-    */
-  private[graft] case class KmeansFit(vq: DataFrame, vqp: DataFrame,
-                                      assignment: DataFrame,
-                                      cents: DataFrame, vqIds: Set[Int], lastGenIds: Set[Int])
+  /** A k-means model on the driver: centroid ids and their packed
+    * micro-unit centroids, index-aligned and cid-sorted. */
+  private[graft] final case class CentModel(cids: Vector[Long], cqas: Vector[Vector[Long]]) {
 
-  /** The Lloyd loop shared by [[kmeansCentroids]] (which reports the
-    * trained centroids) and [[kmeansInertia]] (which scores the fit):
-    * one exploded-corpus checkpoint reused every round, broadcast
-    * centroids, per-round checkpoints with superseded-generation
-    * release — see [[kmeansCentroids]] scaladoc for the full scale
-    * rationale.
+    /** The ONE-ROW routing frame `(cids ARRAY<BIGINT>, cqas
+      * ARRAY<ARRAY<BIGINT>>)` that [[graft.functions.NearestCid]]
+      * scores against; it broadcasts, so task size does not grow with k. */
+    def row(spark: SparkSession): DataFrame =
+      spark.createDataFrame(Seq((cids, cqas))).toDF("cids", "cqas")
+
+    /** The exploded cell rows `(cid, pos, cq)`. */
+    def cellRows: Seq[(Long, Long, Long)] = for {
+      j <- cids.indices
+      (cq, pos) <- cqas(j).zipWithIndex
+    } yield (cids(j), pos.toLong, cq)
+
+    /** The cell table `(cid, pos, cq)` — the published form. */
+    def cells(spark: SparkSession): DataFrame =
+      spark.createDataFrame(cellRows).toDF("cid", "pos", "cq")
+  }
+
+  private[graft] object CentModel {
+    /** Model from `(cid, pos, cq)` rows in any order. */
+    def of(rows: Seq[(Long, Long, Long)]): CentModel = {
+      val byCid = rows.groupBy(_._1).toVector.sortBy(_._1)
+      CentModel(byCid.map(_._1), byCid.map(_._2.sortBy(_._2).map(_._3).toVector))
+    }
+
+    /** Collect a published cell table `(cid, pos, cq)` (k x dim rows). */
+    def collect(cents: DataFrame): CentModel =
+      of(cents.select(col("cid").cast("bigint"), col("pos").cast("bigint"),
+          col("cq").cast("bigint")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
+  }
+
+  /** A completed Lloyd fit: the PACKED checkpointed corpus (`vqp` —
+    * `(vec_id, vqa ARRAY<BIGINT>)`, the block ids the caller releases
+    * once the corpus is no longer referenced), the final `model`, the
+    * member count of each final centroid by cid, and `prev`, the model
+    * the last round routed against — the centroids those members were
+    * assigned by.
+    */
+  private[graft] case class KmeansFit(vqp: DataFrame, vqIds: Set[Int], prev: CentModel,
+                                      model: CentModel, members: Map[Long, Long]) {
+
+    /** Exploded view `(vec_id, pos, vq)` — a narrow posexplode over the
+      * same checkpoint blocks, recomputed per use, for the PQ
+      * sub-quantizer paths that genuinely need per-position rows. */
+    def vq: DataFrame = vqp.select(col("vec_id"), posexplode(col("vqa")))
+      .select(col("vec_id"), col("pos").cast("bigint").as("pos"), col("col").as("vq"))
+
+    /** Final-cells routing `(vec_id, cid)` of the corpus. */
+    def routing: DataFrame = route(vqp, model).select("vec_id", "cid")
+  }
+
+  /** The Lloyd loop shared by [[kmeansCentroids]], [[kmeansInertia]],
+    * [[semanticDedup]] and the IVF-PQ composites — see
+    * [[kmeansCentroids]] scaladoc for the scale rationale.
     */
   private def kmeansFit(spark: SparkSession, dir: String,
                         k: Int, iters: Int): KmeansFit =
@@ -712,47 +744,73 @@ object Similarity {
                                    k: Int, iters: Int): KmeansFit = {
     require(k >= 1, "kmeans needs at least one centroid")
     require(iters >= 1, "kmeans needs at least one assign/update round")
-    val spark = embs.sparkSession
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // ONE packed-corpus checkpoint: (vec_id, vqa) with the same
-    // round(x*1e6) element quantization the exploded rows carried.
-    // The exploded view below reads the same blocks through a narrow
-    // posexplode — identical rows, no second materialization.
-    val (vqp, vqIds) = graft.Caches.trackedCheckpoint(
-      embs
-        .repartition(n, col("vec_id")) // parallelize the transform — see corpus()
-        .select(col("vec_id"),
-          transform(col("embedding"),
-            x => round(x.cast("double") * 1e6).cast("bigint")).as("vqa")))
-    val vq = vqp.select(col("vec_id"), posexplode(col("vqa")))
-      .select(col("vec_id"), col("pos").cast("bigint").as("pos"),
-        col("col").as("vq"))
-    var cents = vq.filter(col("vec_id") < k)
-      .select(col("vec_id").cast("bigint").as("cid"), col("pos"), col("vq").as("cq"))
-    var assignment: DataFrame = null
-    // superseded generations are freed once the next one materializes —
-    // the labelPropagation discipline (an O(corpus) assignment per
-    // round must not accumulate iters copies in block storage)
-    var prevGenIds: Set[Int] = Set.empty
-    for (_ <- 1 to iters) {
-      val (asg, asgIds) = graft.Caches.trackedCheckpoint(coarseAssignPacked(vqp, cents))
-      // centroid update: join the n-row assignment to the PACKED
-      // corpus (d× less join traffic than the exploded join), THEN
-      // posexplode for the per-position integer mean — the explode is
-      // narrow, so only (vec_id, cid) rows ever cross the join
-      val (cts, ctsIds) = graft.Caches.trackedCheckpoint(
-        asg.join(vqp, Seq("vec_id"))
-          .select(col("cid"), posexplode(col("vqa")))
-          .select(col("cid"), col("pos").cast("bigint").as("pos"), col("col").as("vq"))
-          .groupBy("cid", "pos")
-          .agg(round(sum(col("vq")).cast("double") / count(lit(1))).cast("bigint").as("cq")))
-      graft.Caches.release(spark, prevGenIds)
-      prevGenIds = asgIds ++ ctsIds
-      assignment = asg
-      cents = cts
-    }
-    KmeansFit(vq, vqp, assignment, cents, vqIds, prevGenIds)
+    val (vqp, vqIds) = graft.Caches.trackedCheckpoint(packEmbeddings(embs))
+    lloyd(vqp, vqIds, k, iters)
   }
+
+  /** The Lloyd loop over the packed corpus checkpoint `vqp`: one
+    * collect for the seed, then one [[lloydRound]] collect per round —
+    * the model never leaves the driver except as a broadcast row.
+    */
+  private def lloyd(vqp: DataFrame, vqIds: Set[Int], k: Int, iters: Int): KmeansFit = {
+    val seed = vqp.filter(col("vec_id") < k).select(col("vec_id").cast("bigint"), col("vqa"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toVector)).sortBy(_._1)
+    var prev = CentModel(seed.map(_._1).toVector, seed.map(_._2).toVector)
+    var model = prev
+    var members = Map.empty[Long, Long]
+    for (_ <- 1 to iters) {
+      val rows = lloydRound(vqp, model).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      prev = model
+      model = CentModel.of(rows.map(r => (r._1, r._2, r._3)))
+      members = rows.map(r => r._1 -> r._4).toMap
+    }
+    KmeansFit(vqp, vqIds, prev, model, members)
+  }
+
+  /** The packed micro-unit corpus `(vec_id, vqa ARRAY<BIGINT>)`:
+    * round(x*1e6) per element. */
+  private[graft] def packEmbeddings(embs: DataFrame): DataFrame = {
+    val n = embs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    embs
+      .repartition(n, col("vec_id")) // parallelize the transform — see corpus()
+      .select(col("vec_id"),
+        transform(col("embedding"),
+          x => round(x.cast("double") * 1e6).cast("bigint")).as("vqa"))
+  }
+
+  /** One Lloyd round as one aggregate over the packed corpus: route
+    * every vector against the broadcast `model` row, THEN posexplode
+    * (routing in the explode's own select would run once per element),
+    * then the per-(cid, pos) integer mean `cq` and the member count
+    * `n`. Output `(cid, pos, cq, n)`, k x dim rows for the driver.
+    */
+  private[graft] def lloydRound(vqp: DataFrame, model: CentModel): DataFrame =
+    route(vqp, model)
+      .select(col("cid"), posexplode(col("vqa")))
+      .groupBy(col("cid"), col("pos").cast("bigint").as("pos"))
+      .agg(round(sum(col("col")).cast("double") / count(lit(1))).cast("bigint").as("cq"),
+        count(lit(1)).as("n"))
+
+  /** Packed rows `(vec_id, vqa, ...)` with their nearest centroid `cid`
+    * under `model` (the codegen'd [[graft.functions.NearestCid]] argmin —
+    * `min(struct(d2, cid))` semantics exactly) and the model arrays
+    * `cids`, `cqas` for [[centD2]]. The model is one broadcast row,
+    * nested-loop joined (the one-row broadcast the plan pins allow):
+    * n rows in, n rows out.
+    */
+  private def route(packed: DataFrame, model: CentModel): DataFrame = {
+    graft.functions.NearestCid.register(packed.sparkSession)
+    packed.crossJoin(broadcast(model.row(packed.sparkSession)))
+      .withColumn("cid", call_function(graft.functions.NearestCid.Name,
+        col("vqa"), col("cids"), col("cqas")))
+  }
+
+  /** Exact squared distance of a routed row's `vqa` to its cell's
+    * centroid, looked up by `cid` in the model arrays `cids`, `cqas`. */
+  private def centD2: Column =
+    call_function(graft.functions.SqDistLong.Name, col("vqa"),
+      element_at(col("cqas"), array_position(col("cids"), col("cid")).cast("int")))
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
     * arXiv:2303.09540 — the embedding-space dedup a pretraining corpus
@@ -772,17 +830,18 @@ object Similarity {
     * kept counts — the yield table a curation pipeline budgets
     * against.
     *
-    * Scale shape: the candidate-pair join is CELL-SCOPED (equi-join
-    * on cid, never corpus-wide) — the quadratic term is (n/k)^2 per
-    * cell, and k is DERIVED as round(sqrt(n)) ([[semanticK]]) so
+    * Scale shape: a fixed handful of Spark jobs whatever the round
+    * count — the driver-side fit ([[kmeansFitFrom]]), then ONE
+    * projection that routes each packed vector against the final
+    * model row and measures its centrality, then ONE per-cell pass
+    * ([[semanticCells]]): pairs are never formed across cells, so the
+    * quadratic term is (n/k)^2 per cell and a task holds one cell,
+    * O(width x d). k is DERIVED as round(sqrt(n)) ([[semanticK]]) so
     * cells stay ~sqrt(n) wide at any corpus size (the banded-LSH
     * family is the non-clustered alternative at the same scale);
     * SemanticDedupSpec pins the cell-width bound on a skewed
-    * fixture. Centrality is
-    * one broadcast-centroid join over the SAME exploded-corpus
-    * checkpoint the training used. Everything stays BIGINT
-    * micro-units → the whole scheme (training included) is
-    * oracle-checked end to end.
+    * fixture. Everything stays BIGINT micro-units → the whole scheme
+    * (training included) is oracle-checked end to end.
     */
   def semanticDedup(spark: SparkSession, dir: String,
                     maxD2: Long = 1400000000000L): DataFrame =
@@ -792,23 +851,17 @@ object Similarity {
     * the spec seam for skewed fixtures; k is always the sqrt-n rule.
     */
   private[graft] def semanticDedupFrom(embs: DataFrame, maxD2: Long): DataFrame = {
-    val fit = kmeansFitFrom(embs, k = coarseK(embs.count()), iters = 2)
+    val (vqp, vqIds) = graft.Caches.trackedCheckpoint(packEmbeddings(embs))
+    // n counted over the checkpoint's blocks: one job, no second scan
+    val fit = lloyd(vqp, vqIds, k = coarseK(vqp.queryExecution.toRdd.count()), iters = 2)
     // membership by routing against the FINAL cells (the paper
     // clusters with the finished fit; also the only membership a
     // streaming ingest can reproduce — the in-loop assignment is vs
     // the previous round's centroids, a training artifact)
-    val (routing, _) = graft.Caches.trackedCheckpoint(
-      coarseAssignPacked(fit.vqp, fit.cents))
-    // packed rows throughout: the pair join carries ONE array column
-    // per side instead of d exploded rows, and centrality is one
-    // broadcast join + fused distance per vector
-    val rows = fit.vqp.join(routing, Seq("vec_id"))
     graft.functions.SqDistLong.register(embs.sparkSession)
-    val cent = rows.join(broadcast(packCentroids(fit.cents)), Seq("cid"))
-      .select(col("vec_id"), col("cid"),
-        call_function(graft.functions.SqDistLong.Name,
-          col("vqa"), col("cqa")).as("cent_d2"))
-    semanticYieldFromCent(cent, semanticPairsPacked(rows, maxD2))
+    val members = route(fit.vqp, fit.model)
+      .select(col("cid"), col("vec_id"), centD2.as("cent_d2"), col("vqa"))
+    semanticCells(members, maxD2)
   }
 
   /** SemDeDup cluster granularity: k = round(sqrt(n)) over the corpus
@@ -836,110 +889,82 @@ object Similarity {
     * ingest). Granularity is [[semanticK]]'s sqrt-n rule — the same k
     * the batch dedup trains with.
     */
-  def coarseCells(spark: SparkSession, dir: String): DataFrame =
-    kmeansFit(spark, dir, k = semanticK(spark, dir), iters = 2).cents
-
-  /** Cell-scoped candidate pairs `(cid, u, v)` of PACKED routed rows
-    * `(vec_id, cid, vqa)` under the `maxD2` squared-distance
-    * threshold, `u < v` — the quadratic term is (n/k)^2 per cell,
-    * never corpus-wide, and each candidate pair is ONE row with a
-    * fused codegen'd distance ([[graft.functions.SqDistLong]])
-    * instead of d exploded rows through a hash aggregate.
-    */
-  private[graft] def semanticPairsPacked(rows: DataFrame, maxD2: Long): DataFrame = {
-    graft.functions.SqDistLong.register(rows.sparkSession)
-    rows.alias("a").join(rows.alias("b"),
-        col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.cid").as("cid"), col("a.vec_id").as("u"),
-        col("b.vec_id").as("v"),
-        call_function(graft.functions.SqDistLong.Name,
-          col("a.vqa"), col("b.vqa")).as("d2"))
-      .filter(col("d2") < lit(maxD2))
-      .select("cid", "u", "v")
+  def coarseCells(spark: SparkSession, dir: String): DataFrame = {
+    val fit = kmeansFit(spark, dir, k = semanticK(spark, dir), iters = 2)
+    graft.Caches.release(spark, fit.vqIds)
+    fit.model.cells(spark)
   }
 
-  /** The SemDeDup keep rule + per-cell yield table over EXPLODED
-    * routed rows `(vec_id, cid, pos, vq)`, final centroids, and the
-    * duplicate pair set `(cid, u, v)` — the streaming twin's read
-    * side (its vector store persists exploded rows), so stream==batch
-    * stays shared code: this computes the same exact centrality the
-    * batch path computes packed, then applies the same
-    * [[semanticYieldFromCent]] keep rule.
+  /** One row of the SemDeDup yield table. */
+  private[graft] final case class CellYield(cell: Long, n_members: Long, n_dup_pairs: Long,
+                                            n_dropped: Long, n_kept: Long)
+
+  /** The SemDeDup keep rule over ONE cell: `members` are its
+    * `(vec_id, cent_d2)`, `pairs` its distinct duplicate pairs `(u, v)`.
+    * Each pair drops its lower side by (cent_d2, vec_id), so a vector
+    * survives iff no neighbor ranks strictly above it. Shared by the
+    * batch pass and the streaming report.
     */
-  private[graft] def semanticYield(rows: DataFrame, cents: DataFrame,
-                                   pairs: DataFrame): DataFrame = {
-    // centrality: exact d2 of each vector to its routed centroid
-    val cent = rows.join(broadcast(cents), Seq("cid", "pos"))
-      .groupBy("vec_id", "cid")
-      .agg(sum((col("vq") - col("cq")) * (col("vq") - col("cq"))).as("cent_d2"))
-    semanticYieldFromCent(cent, pairs)
+  private[graft] def keepRule(cell: Long, members: Seq[(Long, Long)],
+                              pairs: Seq[(Long, Long)]): CellYield = {
+    val cent = members.toMap
+    val dropped = pairs.map { case (u, v) =>
+      val (cu, cv) = (cent(u), cent(v))
+      if (cu < cv || (cu == cv && u < v)) u else v
+    }.toSet
+    CellYield(cell, members.size, pairs.size, dropped.size, members.size - dropped.size)
   }
 
-  /** The SemDeDup keep rule + per-cell yield table over per-vector
-    * centrality `(vec_id, cid, cent_d2)` and the duplicate pair set
-    * `(cid, u, v)` — the shared tail of the batch (packed) and
-    * streaming (exploded-store) paths.
+  /** One cell of the batch pass: members `(vec_id, cent_d2, vqa)`, the
+    * exact pairs under `maxD2`, then [[keepRule]]. */
+  private[graft] def cellPass(cell: Long, members: IndexedSeq[(Long, Long, Array[Long])],
+                              maxD2: Long): CellYield = {
+    val pairs = for {
+      i <- members.indices
+      j <- i + 1 until members.size
+      if sqDist(members(i)._3, members(j)._3) < maxD2
+    } yield (members(i)._1, members(j)._1)
+    keepRule(cell, members.map(m => (m._1, m._2)), pairs)
+  }
+
+  /** Exact squared L2 of two packed micro-unit vectors of equal length. */
+  private def sqDist(a: Array[Long], b: Array[Long]): Long = {
+    var acc = 0L
+    var i = 0
+    while (i < a.length) { val d = a(i) - b(i); acc += d * d; i += 1 }
+    acc
+  }
+
+  /** The per-cell SemDeDup yield table over routed members `(cid,
+    * vec_id, cent_d2, vqa)`: one `groupByKey(cid)` pass, each group
+    * one cell ([[cellPass]]). The table is k rows, so it sorts in one
+    * partition (an `orderBy` would add a range-sampling job).
     */
-  private[graft] def semanticYieldFromCent(cent: DataFrame,
-                                           pairs: DataFrame): DataFrame = {
-    // symmetric neighbor view; drop the lower-ranked side of each pair
-    val nbrs = pairs.select(col("cid"), col("u").as("vec_id"), col("v").as("other"))
-      .union(pairs.select(col("cid"), col("v").as("vec_id"), col("u").as("other")))
-    val dropped = nbrs
-      .join(cent.select(col("vec_id"), col("cent_d2")), Seq("vec_id"))
-      .join(cent.select(col("vec_id").as("other"), col("cent_d2").as("ocent_d2")),
-        Seq("other"))
-      .filter(struct(col("ocent_d2"), col("other")) >
-        struct(col("cent_d2"), col("vec_id")))
-      .select("cid", "vec_id").distinct()
-    val members = cent.groupBy("cid").agg(count(lit(1)).as("n_members"))
-    val dupPairs = pairs.groupBy("cid").agg(count(lit(1)).as("n_dup_pairs"))
-    val drops = dropped.groupBy("cid").agg(count(lit(1)).as("n_dropped"))
-    members.join(dupPairs, Seq("cid"), "left").join(drops, Seq("cid"), "left")
-      .select(col("cid").as("cell"), col("n_members"),
-        coalesce(col("n_dup_pairs"), lit(0L)).as("n_dup_pairs"),
-        coalesce(col("n_dropped"), lit(0L)).as("n_dropped"),
-        (col("n_members") - coalesce(col("n_dropped"), lit(0L))).as("n_kept"))
-      .orderBy("cell")
+  private[graft] def semanticCells(members: DataFrame, maxD2: Long): DataFrame = {
+    import members.sparkSession.implicits._
+    members.select("cid", "vec_id", "cent_d2", "vqa").as[(Long, Long, Long, Array[Long])]
+      .groupByKey(_._1)
+      .mapGroups((cid, it) => cellPass(cid, it.map(m => (m._2, m._3, m._4)).toVector, maxD2))
+      .toDF()
+      .repartition(1)
+      .sortWithinPartitions("cell")
   }
 
   /** Nearest coarse centroid per vector `(vec_id, cid)` over
     * micro-unit rows `(vec_id, pos, vq, ...)` vs centroids
-    * `(cid, pos, cq)`. Shared by the Lloyd loop and the streaming
-    * vector-store router, so batch and streamed routing cannot drift.
+    * `(cid, pos, cq)`. The streaming routers' seam: it packs the rows,
+    * collects the cell table into the same driver-side model the
+    * Lloyd loop routes with, and delegates to [[route]], so batch and
+    * streamed routing cannot drift.
     *
-    * This exploded-row seam packs its input and delegates to
-    * [[coarseAssignPacked]]: the original pos-equi-join formulation
-    * pushed n·d·k rows through a hash aggregate (at the SemDeDup
-    * k = √n operating point, ~30 BILLION probes per pass on a
-    * 600k-vector corpus — measured as x_semantic_dedup's dominant
-    * cost); the packed kernel computes the identical BIGINT
-    * arithmetic in one fused k×d loop per vector.
+    * The original pos-equi-join formulation pushed n·d·k rows through
+    * a hash aggregate (at the SemDeDup k = √n operating point, ~30
+    * BILLION probes per pass on a 600k-vector corpus); the packed
+    * kernel computes the identical BIGINT arithmetic in one fused k×d
+    * loop per vector.
     */
   private[graft] def coarseAssign(rows: DataFrame, cents: DataFrame): DataFrame =
-    coarseAssignPacked(packVectors(rows), cents)
-
-  /** [[coarseAssign]] over an already-PACKED corpus `(vec_id, vqa)` —
-    * the shape the k-means loop and every final-cells router use
-    * directly (the corpus packs once per fit, not once per pass).
-    *
-    * Kernel shape: the centroid table collapses to ONE broadcast
-    * model row (`cids`, `cqas` index-aligned arrays — k ≤ √n by the
-    * [[semanticK]] rule, a few MB at any probe scale and bounded by
-    * the trainer's granularity choice in production), nested-loop
-    * joined against the corpus (the one-row broadcast the plan pins
-    * explicitly allow), and the codegen'd
-    * [[graft.functions.NearestCid]] argmin — `min(struct(d2, cid))`
-    * semantics exactly — picks the cell inline. n rows in, n rows
-    * out, zero exploded intermediates.
-    */
-  private[graft] def coarseAssignPacked(packed: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.NearestCid.register(packed.sparkSession)
-    packed.crossJoin(broadcast(centModel(cents)))
-      .select(col("vec_id"),
-        call_function(graft.functions.NearestCid.Name,
-          col("vqa"), col("cids"), col("cqas")).as("cid"))
-  }
+    route(packVectors(rows), CentModel.collect(cents)).select("vec_id", "cid")
 
   /** Position-ordered packed micro-unit vector per id: `(vec_id, vqa
     * ARRAY<BIGINT>)` from exploded `(vec_id, pos, vq)` rows. The
@@ -951,27 +976,6 @@ object Similarity {
       .agg(transform(
         array_sort(collect_list(struct(col("pos"), col("vq").as("v")))),
         s => s.getField("v")).as("vqa"))
-
-  /** Packed centroids `(cid, cqa ARRAY<BIGINT>)` from exploded
-    * `(cid, pos, cq)` rows. */
-  private[graft] def packCentroids(cents: DataFrame): DataFrame =
-    cents.groupBy("cid")
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("cq").as("v")))),
-        s => s.getField("v")).as("cqa"))
-
-  /** The ONE-ROW routing model `(cids ARRAY<BIGINT>, cqas
-    * ARRAY<ARRAY<BIGINT>>)` — the whole centroid table as two
-    * index-aligned arrays, cid-sorted for determinism (the argmin
-    * itself is order-independent: full (d2, cid) lexicographic
-    * tie-break in [[graft.functions.NearestCid]]).
-    */
-  private def centModel(cents: DataFrame): DataFrame =
-    packCentroids(cents)
-      .agg(sort_array(collect_list(struct(col("cid"), col("cqa")))).as("cs"))
-      .select(
-        transform(col("cs"), s => s.getField("cid")).as("cids"),
-        transform(col("cs"), s => s.getField("cqa")).as("cqas"))
 
   /** Cluster-quality audit of the trained fit: per final centroid, the
     * member count and the inertia (sum of squared distances of members
@@ -987,24 +991,20 @@ object Similarity {
     * any engine (the oracle bridges DuckDB's HUGEINT sum through
     * VARCHAR, SURVEY §4b lesson 9).
     *
-    * Scale shape: one extra distance join over the same checkpointed
-    * corpus + broadcast final centroids, then a k-row aggregate —
-    * auditing costs one corpus pass, nothing new shuffles.
+    * Scale shape: one projection over the checkpointed corpus against
+    * two broadcast model rows, then a k-row aggregate — auditing
+    * costs one corpus pass, nothing new shuffles.
     */
   def kmeansInertia(spark: SparkSession, dir: String,
                     k: Int = 8, iters: Int = 2): DataFrame = {
     val fit = kmeansFit(spark, dir, k, iters)
-    // assignment first, THEN the assigned centroid on cid: the
-    // training loop needs all k distances per vector, the audit needs
-    // exactly one — fanning out to all k and filtering would do k× the
-    // arithmetic for nothing. Packed corpus + fused distance: one row
-    // per vector end to end, no exploded hash aggregate.
+    // the last round's membership (routed against `prev`), each member
+    // measured against its UPDATED centroid in the final model
     graft.functions.SqDistLong.register(spark)
-    val d2 = fit.vqp.join(fit.assignment.hint("broadcast"), Seq("vec_id"))
-      .join(broadcast(packCentroids(fit.cents)), Seq("cid"))
-      .select(col("vec_id"), col("cid"),
-        call_function(graft.functions.SqDistLong.Name,
-          col("vqa"), col("cqa")).as("d2"))
+    val d2 = route(fit.vqp, fit.prev)
+      .select(col("cid"), col("vqa"))
+      .crossJoin(broadcast(fit.model.row(spark)))
+      .select(col("cid"), centD2.as("d2"))
     d2.groupBy("cid")
       .agg(count(lit(1)).as("n_members"),
            sum(col("d2").cast("decimal(38,0)")).cast("string").cast("double")
@@ -1101,7 +1101,7 @@ object Similarity {
     * label) rank — max_by would be nondeterministic on ties).
     *
     * Scale shape: routing is checkpointed (one corpus materialization,
-    * [[coarseAssign]]'s hash-aggregate — no window), the label join is
+    * one broadcast-model projection — no window), the label join is
     * a narrow (vec_id, label) shuffle against corpus-sized routing
     * rows, and everything after the (cid, label) aggregate is
     * k×labels-sized. The exploded-corpus blocks release once routing
@@ -1109,8 +1109,7 @@ object Similarity {
     */
   def clusterPurity(spark: SparkSession, dir: String): DataFrame = {
     val fit = kmeansFit(spark, dir, k = 8, iters = 2)
-    val (routing, _) = graft.Caches.trackedCheckpoint(
-      coarseAssignPacked(fit.vqp, fit.cents))
+    val (routing, _) = graft.Caches.trackedCheckpoint(fit.routing)
     graft.Caches.release(spark, fit.vqIds)
     val labels = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label").cast("bigint").as("label"))
@@ -1614,9 +1613,8 @@ object Similarity {
           fit.vq.withColumn("sub", expr(s"pos div ${Dim / 8}")))
         (sq0, pqArtifactsFrom(sq0, nCodes = 16, nQueries))
       },
-      graft.Caches.trackedCheckpoint(
-        coarseAssignPacked(fit.vqp, fit.cents))._1)
-    IvfPqModel(fit.cents, routing, a.books, a.codes, a.qd, sq)
+      graft.Caches.trackedCheckpoint(fit.routing)._1)
+    IvfPqModel(fit.model.cells(spark), routing, a.books, a.codes, a.qd, sq)
   }
 
   /** Each query's `nProbe` nearest coarse cells by exact L2 to the
@@ -1699,12 +1697,12 @@ object Similarity {
     val (sq, routing) = graft.Par.run2(
       graft.Caches.trackedCheckpoint(
         fit.vq.withColumn("sub", expr(s"pos div $subDim")))._1,
-      graft.Caches.trackedCheckpoint(
-        coarseAssignPacked(fit.vqp, fit.cents))._1)
+      graft.Caches.trackedCheckpoint(fit.routing)._1)
+    val cents = fit.model.cells(spark)
     // residual rows: vector minus its routed cell's centroid
     val (rsq, _) = graft.Caches.trackedCheckpoint(
       sq.drop("sub").join(routing, Seq("vec_id"))
-        .join(broadcast(fit.cents), Seq("cid", "pos"))
+        .join(broadcast(cents), Seq("cid", "pos"))
         .select(col("vec_id"), col("pos"),
           expr(s"pos div $subDim").as("sub"),
           (col("vq") - col("cq")).as("vq")))
@@ -1716,12 +1714,12 @@ object Similarity {
     // query -> nProbe nearest coarse cells (exact L2, broadcast cells)
     val qrows = sq.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("pos"), col("vq").as("qv"))
-    val probes = coarseProbes(sq, fit.cents, nProbe, nQueries)
+    val probes = coarseProbes(sq, cents, nProbe, nQueries)
     // per-(query, probed cell) residual ADC table: the query residual
     // vs THAT cell, distanced to every (subspace, code) book entry —
     // nQueries x nProbe x 128 rows
     val qres = probes.join(qrows, Seq("query_id"))
-      .join(broadcast(fit.cents), Seq("cid", "pos"))
+      .join(broadcast(cents), Seq("cid", "pos"))
       .select(col("query_id"), col("cid").as("cell"), col("pos"),
         expr(s"pos div $subDim").as("sub"), (col("qv") - col("cq")).as("qv"))
     val qd = qres.join(broadcast(books.withColumnRenamed("cid", "code")),

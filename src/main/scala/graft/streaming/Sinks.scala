@@ -89,7 +89,7 @@ object Sinks {
   def logging(cfg: Config, log: String => Unit = println): Sink = b =>
     if (cfg.logLevel == "INFO") b.report(n => log(s"[graft] batch with $n events"))
 
-  /** K3 AlertGenerator — strict `>` threshold predicate (:100-106)
+  /** K3 AlertGenerator — `RefPipeline.alertFires` (:100-106)
     * feeding a downstream handler. Alerts are a filtered trickle by
     * design, but the collect is still driver-side: `maxAlerts` bounds
     * it so a mis-set threshold can never OOM the driver. The cap is
@@ -104,7 +104,7 @@ object Sinks {
                s"[graft] alert sink overflow: batch exceeded $cap alerts; " +
                "excess dropped — route alerts to a distributed sink")): Sink = b => {
     // fetch cap+1: one extra row is the cheapest exact overflow test
-    val hits = b.collect(_.filter(col("moving_average") > cfg.alertThreshold)
+    val hits = b.collect(_.filter(graft.operators.RefPipeline.alertFires(cfg.alertThreshold))
       .orderBy("id")
       .limit(maxAlerts + 1))
     if (hits.length > maxAlerts) {

@@ -17,9 +17,10 @@ import graft.operators.Similarity
   *     duplicate pairs to the pair store.
   * Each unordered pair is discovered exactly once — when its later
   * vector arrives — so after any split the accumulated DISTINCT pair
-  * set equals the batch pair set, and the read side applies the SAME
-  * keep rule ([[Similarity.semanticYield]]) to produce the identical
-  * per-cell yield table (stream==batch asserted in StreamingSpec;
+  * set equals the batch pair set, and the read side cogroups the
+  * stored members and pairs by cell and applies the SAME per-cell keep
+  * rule as the batch pass ([[Similarity.keepRule]]) to produce the
+  * identical yield table (stream==batch asserted in StreamingSpec;
   * batch replay re-derives a superset into its own partition and the
   * read-side distinct absorbs it — idempotent).
   *
@@ -27,7 +28,8 @@ import graft.operators.Similarity
   * cid) — batch-size x cell-occupancy, never store-wide; the vector
   * store grows by 64 micro rows per vector (what the pairing
   * arithmetic needs); centrality is recomputed on read from the store
-  * and the broadcast cells (k x 64 rows), never carried as state.
+  * and the broadcast cells (k x 64 rows), never carried as state; the
+  * report holds one cell's members and pairs per group.
   * Exactly-once: [[StoreIO]]'s contract.
   */
 object StreamingSemanticDedup {
@@ -93,9 +95,19 @@ object StreamingSemanticDedup {
     * keep-rule code over the streamed stores.
     */
   def report(spark: SparkSession, cellsPath: String, vecPath: String,
-             pairPath: String): DataFrame =
-    Similarity.semanticYield(
-      readVectors(spark, vecPath),
-      spark.read.parquet(cellsPath),
-      readPairs(spark, pairPath))
+             pairPath: String): DataFrame = {
+    import spark.implicits._
+    // centrality: exact d2 of each stored vector to its routed centroid
+    val members = readVectors(spark, vecPath)
+      .join(broadcast(spark.read.parquet(cellsPath)), Seq("cid", "pos"))
+      .groupBy("cid", "vec_id")
+      .agg(sum((col("vq") - col("cq")) * (col("vq") - col("cq"))).as("cent_d2"))
+      .as[(Long, Long, Long)].groupByKey(_._1)
+    val pairs = readPairs(spark, pairPath).as[(Long, Long, Long)].groupByKey(_._1)
+    members.cogroup(pairs) { (cell, ms, ps) =>
+      if (!ms.hasNext) Iterator.empty
+      else Iterator(Similarity.keepRule(cell, ms.map(m => (m._2, m._3)).toSeq,
+        ps.map(p => (p._2, p._3)).toSeq))
+    }.toDF().orderBy("cell")
+  }
 }

@@ -60,10 +60,29 @@ class PlanSpec extends SparkSuite {
     assert(exchanges <= 1, s"chunking must not shuffle before the output sort:\n$plan")
   }
 
-  test("kmeans joins the corpus against BROADCAST centroids — never a cross product") {
-    val plan = formatted(graft.operators.Similarity.kmeansCentroids(spark, sfDir))
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"), plan)
+  test("kmeans broadcasts a one-row model; its result reads no corpus") {
+    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    // the centroid table is built on the driver from the fitted model
+    val result = Similarity.kmeansCentroids(spark, sfDir).queryExecution.sparkPlan
+    assert(result.collectLeaves().forall(_.isInstanceOf[LocalTableScanExec]), result)
+    // a round routes the packed corpus against ONE model row: the only
+    // nested-loop join, and its broadcast side is that row
+    val fit = Similarity.kmeansFitFrom(Tables.embeddings(spark, sfDir), k = 8, iters = 1)
+    val round = Similarity.lloydRound(fit.vqp, fit.model).queryExecution.sparkPlan
+    assert(round.collect { case c: CartesianProductExec => c }.isEmpty, round)
+    val nlj = round.collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(nlj.size == 1, round)
+    val built = nlj.head.buildSide match {
+      case BuildLeft => nlj.head.left
+      case BuildRight => nlj.head.right
+    }
+    assert(built.collectLeaves().map {
+      case l: LocalTableScanExec => l.rows.size
+      case _ => -1
+    } == Seq(1), round)
+    Caches.release(spark, fit.vqIds)
   }
 
   test("media->ANN composition keeps the IVF cell equi-join (broadcast centroids only)") {

@@ -226,7 +226,8 @@ class StreamingSpec extends SparkSuite {
 
   test("a NaN price is kept on the stream path as in batch clean (stream == batch)") {
     // Spark orders NaN above every value, so `price > 0` keeps it in both
-    // paths, and every SMA window that holds it averages to NaN
+    // paths, and every SMA window that holds it averages to NaN; neither
+    // alert path fires on a NaN average
     val input = engineTicks(invalid = false).map(_.map(t =>
       if (t.id == "e010" || t.id == "e025") t.copy(price = Double.NaN) else t))
     val out = scala.collection.mutable.ArrayBuffer.empty[Row]
@@ -237,8 +238,10 @@ class StreamingSpec extends SparkSuite {
     val batch = RefPipeline.movingAverage(
         RefPipeline.clean(input.flatten.toDF().withColumn("volume", lit(0L))), n = 5)
       .select("id", "symbol", "price", "moving_average").collect().sortBy(_.getString(0)).toSeq
-    assert(batch.exists(r => !r.isNullAt(3) && r.getDouble(3).isNaN), "no NaN window in the case")
+    val nanWindows = batch.filter(r => !r.isNullAt(3) && r.getDouble(3).isNaN).map(_.getString(0))
+    assert(nanWindows.nonEmpty, "no NaN window in the case")
     assert(out.sortBy(_.getString(0)).toSeq == batch)
+    assert(!alerted.exists(nanWindows.contains), s"alerts fired on NaN averages: $alerted")
     assert(alerted.sorted.toSeq == batchAlerts(input.flatten))
   }
 
