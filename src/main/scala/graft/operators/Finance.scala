@@ -39,55 +39,68 @@ object Finance {
         unix_timestamp(col("ts")).as("ts_epoch"),
         col("ts"))
 
-  /** Daily OHLC candlestick bars per symbol.
-    *
-    * open/close are picked with two row_numbers over the SAME
-    * (symbol, day) partitioning the groupBy then reuses — one exchange
-    * total; the `max(when(rn=1))` trick turns "first/last by tick
-    * order" into plain hash-agg expressions, so there is no self-join
-    * and no min_by/arg_min engine-divergence on ties (tick order
-    * (ts, id) is total). At 100 TB: days × symbols bars, each bar built
-    * from its own partition slice — embarrassingly parallel.
+  /** The aggregate list of one OHLC bar, shared by [[ohlcBars]] and its
+    * streaming twin [[graft.streaming.StreamingOhlc.bars]] (the two
+    * differ only in their day key). Open and close are the first and
+    * last price in tick order (ts_epoch, id) via min_by/max_by: the
+    * order is total, so there is no tie for either to break, and a
+    * null price on the first or last tick opens or closes the bar null.
     */
-  def ohlcBars(spark: SparkSession, dir: String): DataFrame = {
-    val q = quotes(spark, dir)
-      .withColumn("day", to_date(col("ts")))
-    val asc  = Window.partitionBy("symbol", "day")
-      .orderBy(col("ts_epoch").asc, col("id").asc)
-    val desc = Window.partitionBy("symbol", "day")
-      .orderBy(col("ts_epoch").desc, col("id").desc)
-    q.withColumn("rn_a", row_number().over(asc))
-      .withColumn("rn_d", row_number().over(desc))
-      .groupBy("symbol", "day")
-      .agg(
-        max(when(col("rn_a") === 1, col("price"))).as("open_price"),
-        max(col("price")).as("high_price"),
-        min(col("price")).as("low_price"),
-        max(when(col("rn_d") === 1, col("price"))).as("close_price"),
-        sum(col("volume")).as("bar_volume"),
-        count(lit(1)).as("n_ticks"))
-      .orderBy("symbol", "day")
+  val ohlcAggs: Seq[Column] = {
+    val tickOrder = struct(col("ts_epoch"), col("id"))
+    Seq(
+      min_by(col("price"), tickOrder).as("open_price"),
+      max(col("price")).as("high_price"),
+      min(col("price")).as("low_price"),
+      max_by(col("price"), tickOrder).as("close_price"),
+      sum(col("volume")).as("bar_volume"),
+      count(lit(1)).as("n_ticks"))
   }
 
-  /** Volume-weighted average price per symbol per day. Exact-decimal
-    * price·volume sums (volume is an exact BIGINT, price 2-decimal) so
-    * both engines aggregate identically; zero-volume bars are dropped
-    * rather than divided (ANSI mode). Plain two-key hash-agg: partial
-    * map-side combine, one tiny shuffle. */
-  def vwap(spark: SparkSession, dir: String): DataFrame =
-    quotes(spark, dir)
-      .withColumn("day", to_date(col("ts")))
-      .groupBy("symbol", "day")
-      .agg(
-        sum(col("price").cast("decimal(18,6)") * col("volume").cast("decimal(18,6)"))
-          .as("pv"),
-        sum(col("volume")).as("day_volume"),
-        count(lit(1)).as("n_ticks"))
-      .filter(col("day_volume") > 0)
-      .select(
-        col("symbol"), col("day"),
+  /** The aggregate list of one VWAP bar, shared by [[vwap]] and
+    * [[graft.streaming.StreamingOhlc.vwapBars]]: the exact-decimal
+    * price·volume sum (volume an exact BIGINT, price 2-decimal, so both
+    * engines aggregate identically), the volume and the tick count.
+    * [[vwapFromSums]] turns them into the bar.
+    */
+  val vwapAggs: Seq[Column] = Seq(
+    sum(col("price").cast("decimal(18,6)") * col("volume").cast("decimal(18,6)")).as("pv"),
+    sum(col("volume")).as("day_volume"),
+    count(lit(1)).as("n_ticks"))
+
+  /** VWAP bars `(symbol, day, vwap, day_volume, n_ticks)` from
+    * [[vwapAggs]] rows keyed by `symbol` and `day`: zero-volume bars are
+    * dropped rather than divided (ANSI mode). */
+  def vwapFromSums(sums: DataFrame): DataFrame =
+    sums.filter(col("day_volume") > 0)
+      .select(col("symbol"), col("day"),
         vwapOf(col("pv"), col("day_volume")).as("vwap"),
         col("day_volume"), col("n_ticks"))
+
+  /** Daily OHLC candlestick bars per symbol: [[ohlcAggs]] in one
+    * aggregate over (symbol, day), one hash exchange, no window and no
+    * self-join. At 100 TB: days × symbols bars, each built from its own
+    * partition slice — embarrassingly parallel.
+    *
+    * `day` is `to_date(ts)` in the SESSION time zone. The streaming twin
+    * buckets by `window(ts, '1 day')`, i.e. by UTC epoch day, so the two
+    * agree only when the session zone is UTC (FinanceSpec pins both).
+    */
+  def ohlcBars(spark: SparkSession, dir: String): DataFrame =
+    quotes(spark, dir)
+      .groupBy(col("symbol"), to_date(col("ts")).as("day"))
+      .agg(ohlcAggs.head, ohlcAggs.tail: _*)
+      .orderBy("symbol", "day")
+
+  /** Volume-weighted average price per symbol per day: [[vwapAggs]] in
+    * one plain two-key hash aggregate (partial map-side combine, one
+    * tiny shuffle), then [[vwapFromSums]]. Days are session-zone dates;
+    * the streaming twin's UTC days equal them only under UTC, as for
+    * [[ohlcBars]]. */
+  def vwap(spark: SparkSession, dir: String): DataFrame =
+    vwapFromSums(quotes(spark, dir)
+        .groupBy(col("symbol"), to_date(col("ts")).as("day"))
+        .agg(vwapAggs.head, vwapAggs.tail: _*))
       .orderBy("symbol", "day")
 
   /** The VWAP division shared by [[vwap]] and its streaming twin

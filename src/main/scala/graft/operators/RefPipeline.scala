@@ -32,6 +32,9 @@ import graft.Tables
   * partition, ordered). There is exactly ONE shuffle in the whole
   * normalize→clean→sma→alert pipeline because filter/project stages
   * preserve partitioning and the alert filter sits above the window.
+  * Normalization reads the 100 TB `events` table ONCE: one projection
+  * picks each row's feed by `event_type`, where a union of three
+  * filtered slices would scan it three times.
   */
 object RefPipeline {
 
@@ -59,72 +62,42 @@ object RefPipeline {
   }
 
   /** Unified record schema (financial_engine.py:186-194): the three raw
-    * feeds are modeled as three disjoint slices of `events` with
-    * per-source raw column names/types, then normalized with per-source
-    * projections (rename + cast + literal `source`) and `unionByName` —
-    * the Spark form of S1-S5 source multiplexing
-    * (financial_engine.py:335-339, :367-377, :388-391).
+    * feeds are modeled as three disjoint slices of `events`, keyed by
+    * `event_type`, with per-source raw column names/types — the Spark
+    * form of S1-S5 source multiplexing (financial_engine.py:335-339,
+    * :367-377, :388-391). ONE scan and ONE projection normalize all
+    * three: each row's source projection is chosen by `event_type`.
     *
-    *  - "alpha_vantage" slice: string-typed price/volume needing casts,
+    *  - "view" → AlphaVantage: string-typed price/volume needing casts,
     *    like the REST JSON fields "05. price"/"06. volume"
     *    (financial_engine.py:179-190); volume carried in the `props`
     *    JSON, extracted with `get_json_object`.
-    *  - "websocket" slice: renames instrument→symbol, value→price,
-    *    vol→volume, ts→timestamp (financial_engine.py:234-235).
-    *  - "csv" slice: header-cast semantics, price/volume cast from
-    *    string (financial_engine.py:251).
+    *  - "click" → WebSocketMock: renames instrument→symbol, value→price,
+    *    vol→volume, ts→timestamp (financial_engine.py:234-235) — the
+    *    native numeric price passes through uncast.
+    *  - any other type → CSVMock: header-cast semantics, price cast
+    *    from string (financial_engine.py:251).
     *
-    * Deterministic for the oracle: `id` is the source `event_id` (the
-    * reference's uuid4 at :187 is nondeterministic, excluded per
+    * A row with a null `event_type` belongs to no feed and is dropped.
+    * Volume, id, symbol and timestamp project the same way for every
+    * feed. Deterministic for the oracle: `id` is the source `event_id`
+    * (the reference's uuid4 at :187 is nondeterministic, excluded per
     * SURVEY §5), timestamps surfaced as epoch seconds BIGINT.
     */
   def normalizeUnion(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-
-    // Raw feed 1: REST-poll style — stringly-typed numerics, JSON field.
-    val av = ev
-      .filter(col("event_type") === "view")
-      .select(
-        col("event_id").as("raw_id"),
-        concat(lit("u"), col("user_id")).as("raw_symbol"),
-        col("value").cast("string").as("raw_price_str"),
-        get_json_object(col("props"), "$.k").as("raw_volume_str"),
-        col("ts").as("raw_ts")
-      )
-      .select(
-        col("raw_id").as("id"),
-        col("raw_symbol").as("symbol"),
-        col("raw_price_str").cast("double").as("price"),
-        col("raw_volume_str").cast("bigint").as("volume"),
-        unix_timestamp(col("raw_ts")).as("ts_epoch"),
-        lit("AlphaVantage").as("source")
-      )
-
-    // Raw feed 2: websocket style — rename map, native numerics.
-    val ws = ev
-      .filter(col("event_type") === "click")
+    val eventType = col("event_type")
+    val stringlyPrice = col("value").cast("string").cast("double")
+    Tables.events(spark, dir)
+      .filter(eventType.isNotNull)
       .select(
         col("event_id").as("id"),
         concat(lit("u"), col("user_id")).as("symbol"),
-        col("value").as("price"),
+        when(eventType === "click", col("value")).otherwise(stringlyPrice).as("price"),
         get_json_object(col("props"), "$.k").cast("bigint").as("volume"),
         unix_timestamp(col("ts")).as("ts_epoch"),
-        lit("WebSocketMock").as("source")
-      )
-
-    // Raw feed 3: CSV style — all-string rows, cast on read.
-    val csv = ev
-      .filter(!col("event_type").isin("view", "click"))
-      .select(
-        col("event_id").as("id"),
-        concat(lit("u"), col("user_id")).as("symbol"),
-        col("value").cast("string").cast("double").as("price"),
-        get_json_object(col("props"), "$.k").cast("bigint").as("volume"),
-        unix_timestamp(col("ts")).as("ts_epoch"),
-        lit("CSVMock").as("source")
-      )
-
-    av.unionByName(ws).unionByName(csv)
+        when(eventType === "view", lit("AlphaVantage"))
+          .when(eventType === "click", lit("WebSocketMock"))
+          .otherwise(lit("CSVMock")).as("source"))
   }
 
   /** F2 validity (financial_engine.py:287-289): a tick is kept iff its

@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
 import graft.Tables
 import graft.functions.VectorFunctions
@@ -103,7 +107,10 @@ object Similarity {
       .withColumn("rk", row_number().over(w).cast("bigint"))
       .filter(col("rk") <= k)
       .select("query_id", "neighbor_id", "rk", "cos")
-      .orderBy("query_id", "rk")
+      // <= nQueries x k rows: sorted in one partition (an orderBy would
+      // add a range-sampling job)
+      .repartition(1)
+      .sortWithinPartitions("query_id", "rk")
   }
 
   /** Exact top-k cosine neighbors for each query vector (vec_id <
@@ -162,15 +169,28 @@ object Similarity {
     * members. Centroids here are the first `nCells` corpus vectors —
     * deterministic (k-means would converge data-dependently and break
     * the oracle); swapping in trained centroids changes recall, not
-    * the pipeline shape. Cell assignment is a broadcast join against
-    * nCells rows + a rank window; candidate generation is an
-    * equi-join on cell id — no cross product against the corpus.
+    * the pipeline shape.
+    *
+    * One pass over the corpus `(vec_id, embedding, nrm)`, with `nrm`
+    * computed in the scan's projection (no posexplode, no checkpoint):
+    * one collect brings the centroid and query rows to the driver
+    * ([[IvfIndex]]), then [[cellAssign]] and [[ivfSearch]] build one
+    * plan — a projection against a one-row broadcast model and a
+    * cell-keyed broadcast hash join against the driver-built probe
+    * table. No cross product against the corpus, no per-vector window,
+    * no distinct; IvfSpec pins the job count.
     */
   def knnIvf(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10,
              nCells: Int = 16, nProbe: Int = 2): DataFrame = {
     graft.functions.DotProduct.register(spark)
-    knnIvfFrom(corpus(spark, dir), k, nQueries, nCells, nProbe)
+    knnIvfFrom(withNorm(Tables.embeddings(spark, dir).select("vec_id", "embedding")),
+      k, nQueries, nCells, nProbe)
   }
+
+  /** `(vec_id, embedding, nrm)`: the L2 norm as `sqrt(graft_dot(e, e))` —
+    * bit-identical to [[corpus]]'s sequential `sum(x * x)`. */
+  private def withNorm(vecs: DataFrame): DataFrame =
+    vecs.withColumn("nrm", sqrt(dotN(col("embedding"), col("embedding"))))
 
   private def knnIvfFrom(c: DataFrame, k: Int, nQueries: Int,
                          nCells: Int, nProbe: Int): DataFrame =
@@ -183,42 +203,88 @@ object Similarity {
     * k-means-trained variant.
     */
   private def ivfFrom(c: DataFrame, cents: DataFrame, k: Int, nQueries: Int,
-                      nProbe: Int): DataFrame =
-    ivfSearch(cellAssign(c, cents), k, nQueries, nProbe)
-
-  /** Centroid ranking per vector `(vec_id, embedding, nrm,
-    * centroid_id, c_sim, cell_rank)` — the corpus-scale stage of the
-    * IVF path, factored out so consumers that vary only the probe
-    * count ([[knnIvfProbeSweep]]) materialize it ONCE instead of once
-    * per probe level.
-    */
-  private def cellAssign(c: DataFrame, cents: DataFrame): DataFrame = {
-    val simToCent = round(dotN(col("embedding"), col("c_emb")) /
-                          (col("nrm") * col("c_nrm")), 6)
-    val byVec = Window.partitionBy("vec_id")
-      .orderBy(col("c_sim").desc, col("centroid_id"))
-    c.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("centroid_id"),
-              simToCent.as("c_sim"))
-      .withColumn("cell_rank", row_number().over(byVec))
+                      nProbe: Int): DataFrame = {
+    val index = IvfIndex.collect(c, cents, nQueries)
+    ivfSearch(cellAssign(c, index), index, k, nProbe)
   }
 
-  /** Probe + exact-re-rank stage over a precomputed [[cellAssign]]. */
-  private def ivfSearch(ranked: DataFrame, k: Int, nQueries: Int,
-                        nProbe: Int): DataFrame = {
-    val cells = ranked
-      .filter(col("cell_rank") === 1)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("centroid_id").as("cell"))
-    val queryCells = ranked
-      .filter(col("vec_id") < nQueries && col("cell_rank") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-              col("nrm").as("q_nrm"), col("centroid_id").as("cell"))
-    val scored = cells.join(broadcast(queryCells),
-        cells("cell") === queryCells("cell") && col("query_id") =!= col("vec_id"))
+  /** The driver side of an IVF search: the coarse model (centroid ids,
+    * vectors widened to DOUBLE — exact — and norms, id-sorted) and the
+    * query vectors `(query_id, q_emb, q_nrm)`, collected in ONE job. The
+    * model reaches executors as one broadcast row; the queries come
+    * back as the probe table.
+    */
+  private final class IvfIndex(cents: Seq[Row], queries: Seq[Row]) {
+    private val (cids, cembs, cnrms) =
+      (cents.map(_.getLong(0)), cents.map(_.getSeq[Any](1)), cents.map(_.get(2)))
+    private val model = (new GenericArrayData(cids),
+      new GenericArrayData(cembs.map(new GenericArrayData(_))), new GenericArrayData(cnrms))
+
+    /** The model as one row `(cids, cembs, cnrms)` for
+      * [[graft.functions.NearestCell]]. */
+    def row(spark: SparkSession): DataFrame = spark.createDataFrame(
+      java.util.List.of(Row(cids, cembs, cnrms)),
+      StructType(Seq(StructField("cids", ArrayType(LongType)),
+        StructField("cembs", ArrayType(ArrayType(DoubleType))),
+        StructField("cnrms", ArrayType(DoubleType)))))
+
+    /** The probe table `(query_id, q_emb, q_nrm, cell)`: each query once
+      * per probed cell, its `nProbe` best cells ranked on the driver by
+      * the executors' own score. */
+    def probes(spark: SparkSession, nProbe: Int): DataFrame = {
+      val rows = for {
+        q <- queries
+        cell <- graft.functions.NearestCell.ranked(new GenericArrayData(q.getSeq[Any](1)),
+          vFloat = false, q.getAs[java.lang.Double](2), model._1, model._2, model._3).take(nProbe)
+      } yield Row(q.get(0), q.get(1), q.get(2), cell)
+      spark.createDataFrame(rows.asJava, StructType(Seq(
+        StructField("query_id", LongType), StructField("q_emb", ArrayType(DoubleType)),
+        StructField("q_nrm", DoubleType), StructField("cell", LongType))))
+    }
+  }
+
+  private object IvfIndex {
+    /** Centroids and queries (`vec_id < nQueries` of `c`) in one collect. */
+    def collect(c: DataFrame, cents: DataFrame, nQueries: Int): IvfIndex = {
+      def side(isCent: Boolean, df: DataFrame, id: String, emb: String, nrm: String) =
+        df.select(lit(isCent).as("is_cent"), col(id).cast("bigint").as("id"),
+          col(emb).cast("array<double>").as("emb"), col(nrm).as("nrm"))
+      val rows = side(isCent = true, cents, "centroid_id", "c_emb", "c_nrm")
+        .unionByName(side(isCent = false, c.filter(col("vec_id") < nQueries),
+          "vec_id", "embedding", "nrm"))
+        .collect().toSeq
+      val (cs, qs) = rows.partition(_.getBoolean(0))
+      def drop1(rs: Seq[Row]) = rs.map(r => Row(r.get(1), r.get(2), r.get(3))).sortBy(_.getLong(0))
+      new IvfIndex(drop1(cs), drop1(qs))
+    }
+  }
+
+  /** Every corpus vector with its rank-1 cell `(vec_id, embedding, nrm,
+    * cell)`: one projection against the one-row broadcast model (the
+    * codegen'd [[graft.functions.NearestCell]] — n rows in, n rows out).
+    * Factored out so consumers that vary only the probe count
+    * ([[knnIvfProbeSweep]]) materialize it ONCE.
+    */
+  private def cellAssign(c: DataFrame, index: IvfIndex): DataFrame = {
+    graft.functions.NearestCell.register(c.sparkSession)
+    c.crossJoin(broadcast(index.row(c.sparkSession)))
+      .select(col("vec_id"), col("embedding"), col("nrm"),
+        call_function(graft.functions.NearestCell.Name, col("embedding"), col("nrm"),
+          col("cids"), col("cembs"), col("cnrms")).as("cell"))
+  }
+
+  /** Probe + exact re-rank over a [[cellAssign]]ed corpus: a cell-keyed
+    * broadcast hash join against the driver-built probe table. Each
+    * vector sits in exactly one cell and each query's probed cells are
+    * distinct, so no (query, neighbor) pair can repeat.
+    */
+  private def ivfSearch(cells: DataFrame, index: IvfIndex, k: Int, nProbe: Int): DataFrame = {
+    val probes = index.probes(cells.sparkSession, nProbe)
+    val scored = cells.join(broadcast(probes),
+        cells("cell") === probes("cell") && col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(dotN(col("embedding"), col("q_emb")) /
               (col("nrm") * col("q_nrm")), 6).as("cos"))
-      .distinct()  // a neighbor can sit in several probed cells
     rankTopK(scored, k)
   }
 
@@ -242,8 +308,8 @@ object Similarity {
 
   /** IVF ANN with TRAINED coarse centroids — the deploy step of the
     * [[kmeansCentroids]] trainer, completing the ANN story: the
-    * pipeline shape is identical to [[knnIvf]] (cell equi-join,
-    * broadcast centroids), only the centroid table changes, exactly
+    * pipeline shape is identical to [[knnIvf]] (one-row broadcast model,
+    * cell equi-join), only the centroid table changes, exactly
     * as the knnIvf scaladoc promises. The recall audit
     * ([[knnIvfTrainedRecall]]) measures what training buys.
     */
@@ -263,10 +329,10 @@ object Similarity {
     * pipeline as [[knnIvf]] — the image-embedding-search shape (decode
     * → embed → index → query) a multimodal training pipeline runs,
     * with only the codec behind the decoder stubbed. The decoded
-    * corpus is checkpointed once and feeds the centroid, cell, and
-    * query subtrees; candidate generation stays an equi-join on cell
-    * id (plan-asserted — the only cross join is against the <= nCells
-    * broadcast centroid table).
+    * corpus is checkpointed once and feeds the driver-side model, the
+    * cell assignment and the query rows; candidate generation stays an
+    * equi-join on cell id (plan-asserted — the only cross join is
+    * against the one-row broadcast model).
     */
   def mediaIvfKnn(spark: SparkSession, dir: String, k: Int = 5,
                   nQueries: Int = 10, nCells: Int = 8, nProbe: Int = 2): DataFrame =
@@ -303,9 +369,8 @@ object Similarity {
   private def mediaIvfFrom(decoded: DataFrame, k: Int, nQueries: Int,
                            nCells: Int, nProbe: Int): DataFrame = {
     graft.functions.DotProduct.register(decoded.sparkSession)
-    val c = decoded.select(col("doc_id").as("vec_id"),
-        col("features").as("embedding"))
-      .withColumn("nrm", sqrt(dotN(col("embedding"), col("embedding"))))
+    val c = withNorm(decoded.select(col("doc_id").as("vec_id"),
+        col("features").as("embedding")))
       .localCheckpoint()
     val cents = c.filter(col("vec_id") < nCells).select(
       col("vec_id").as("centroid_id"), col("embedding").as("c_emb"),
@@ -345,11 +410,13 @@ object Similarity {
     // index build (k-means training + cell routing) and brute-force
     // ground truth are INDEPENDENT given the shared corpus checkpoint —
     // overlap their materializations (optimization guide §2.6)
-    val (ranked, brute) = graft.Par.run2(
-      cellAssign(c, trainedCents(spark, dir, kCents, iters)).localCheckpoint(),
+    val ((index, cells), brute) = graft.Par.run2({
+        val index = IvfIndex.collect(c, trainedCents(spark, dir, kCents, iters), nQueries)
+        (index, cellAssign(c, index).localCheckpoint())
+      },
       knnBruteFrom(c, k, nQueries).localCheckpoint())
     probes.map { p =>
-      recallVsBrute(brute, ivfSearch(ranked, k, nQueries, p), k)
+      recallVsBrute(brute, ivfSearch(cells, index, k, p), k)
         .withColumn("n_probe", lit(p.toLong))
     }.reduce(_.unionAll(_))
       .select("n_probe", "query_id", "n_hits", "recall")
@@ -2159,8 +2226,8 @@ object Similarity {
     * only double is the final round-6 recall ratio of exact counts.
     *
     * Scale shape: the three retrievers share ONE checkpointed corpus
-    * (each an nCells-broadcast assign + cell equi-join, the knnIvf
-    * shape); fusion and the recall joins run on (retrievers × nQueries
+    * (each a one-row model broadcast assign + cell equi-join, the
+    * knnIvf shape); fusion and the recall joins run on (retrievers × nQueries
     * × k)-bounded shortlists — never corpus-sized. The one crossJoin
     * broadcasts a 1-row count aggregate (the documented pattern).
     */

@@ -46,6 +46,76 @@ class FinanceSpec extends SparkSuite {
     assert(hashExchanges(Finance.rsi(spark, sfDir)) === 1)
   }
 
+  private def tick(id: Long, ts: String, user: Long, price: Option[Double]) =
+    (id, ts, user, Option("tick"), price, s"""{"k": ${id % 7}}""")
+
+  private def ohlcRows(dir: String) = Finance.ohlcBars(spark, dir).collect().toSeq
+
+  test("OHLC: a null first or last price opens or closes the bar null, as in the row_number form") {
+    val dir = eventsDir(Seq(
+      tick(1, "2024-01-01 09:00:00", 1, None),        // opens day 1 of u1
+      tick(2, "2024-01-01 10:00:00", 1, Some(100.0)),
+      tick(3, "2024-01-01 11:00:00", 1, Some(101.0)),
+      tick(4, "2024-01-02 09:00:00", 1, Some(102.0)),
+      tick(5, "2024-01-02 10:00:00", 1, None),        // closes day 2 of u1
+      tick(7, "2024-01-02 10:00:00", 2, Some(51.0)),  // same second: the id orders
+      tick(6, "2024-01-02 10:00:00", 2, Some(50.0))))
+    val bars = ohlcRows(dir)
+    assert(bars == ReplacedForms.ohlcBars(Finance.quotes(spark, dir)).collect().toSeq)
+    val openClose = bars.map(r => (r.getString(0), r.getDate(1).toString,
+      Option(r.get(2)), Option(r.get(5))))
+    assert(openClose == Seq(
+      ("u1", "2024-01-01", None, Some(101.0)),
+      ("u1", "2024-01-02", Some(102.0), None),
+      ("u2", "2024-01-02", Some(50.0), Some(51.0))))
+    assert(graft.streaming.StreamingOhlc.bars(Finance.quotes(spark, dir))
+      .orderBy("symbol", "day").collect().toSeq == bars)
+  }
+
+  test("property: ohlcBars equals the two-row_number form (ScalaCheck)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // ids are drawn independently of time, so only (ts_epoch, id) orders
+    // the ticks; few distinct seconds make ts_epoch ties common
+    val row = for {
+      day <- Gen.choose(1, 3)
+      sec <- Gen.oneOf(0, 1, 59, 3600, 86399)
+      user <- Gen.choose(1L, 3L)
+      price <- Gen.option(Gen.choose(1, 20000).map(_ / 100.0))
+    } yield (f"2024-01-0$day ${sec / 3600}%02d:${sec / 60 % 60}%02d:${sec % 60}%02d", user, price)
+    val gen = for {
+      n <- Gen.choose(1, 30)
+      rs <- Gen.listOfN(n, row)
+      ids <- Gen.pick(n, 0L until 1000L)
+    } yield rs.zip(ids)
+    // no shrinking: every case writes a table and runs Spark jobs
+    val prop = Prop.forAllNoShrink(gen) { rs =>
+      val dir = eventsDir(rs.map { case ((ts, u, p), id) => tick(id, ts, u, p) })
+      ohlcRows(dir) == ReplacedForms.ohlcBars(Finance.quotes(spark, dir)).collect().toSeq
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("OHLC and VWAP days are session-zone dates; the UTC-window twins agree only under UTC") {
+    // 03:00 and 05:00 UTC on Jan 2 are 22:00 Jan 1 and 00:00 Jan 2 in New York
+    val dir = eventsDir(Seq(
+      tick(1, "2024-01-02 03:00:00", 1, Some(100.0)),
+      tick(2, "2024-01-02 05:00:00", 1, Some(101.0))))
+    def days(df: DataFrame) = df.collect().map(r => r.getAs[java.sql.Date]("day").toString).toSeq
+    def stream(df: DataFrame) = df.orderBy("symbol", "day").collect().toSeq
+    val zone = "spark.sql.session.timeZone"
+    assert(days(Finance.ohlcBars(spark, dir)) == Seq("2024-01-02"))
+    assert(stream(graft.streaming.StreamingOhlc.bars(Finance.quotes(spark, dir))) == ohlcRows(dir))
+    spark.conf.set(zone, "America/New_York")
+    try {
+      assert(days(Finance.ohlcBars(spark, dir)) == Seq("2024-01-01", "2024-01-02"))
+      assert(days(Finance.vwap(spark, dir)) == Seq("2024-01-01", "2024-01-02"))
+      assert(stream(graft.streaming.StreamingOhlc.bars(Finance.quotes(spark, dir))) != ohlcRows(dir))
+      assert(stream(graft.streaming.StreamingOhlc.vwapBars(Finance.quotes(spark, dir))) !=
+        Finance.vwap(spark, dir).collect().toSeq)
+    } finally spark.conf.set(zone, "UTC")
+  }
+
   test("vwap sits inside each bar's [low, high] envelope") {
     val bars = Finance.ohlcBars(spark, sfDir)
     val v    = Finance.vwap(spark, sfDir)

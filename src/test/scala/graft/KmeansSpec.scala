@@ -41,37 +41,9 @@ class KmeansSpec extends SparkSuite {
   }
 
   test("a Lloyd round adds at most 3 Spark jobs, the same number every round") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    def inGroup(group: String)(body: => Unit): Unit = {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-    }
-    def jobs(iters: Int): Int = {
-      val (group, marker) = (s"kmeans-$iters-${java.util.UUID.randomUUID()}", s"drain-$iters")
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val drained = new java.util.concurrent.CountDownLatch(1)
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
-            if (g == group) n.incrementAndGet()
-            if (g == marker) drained.countDown()
-          }
-      }
-      sc.addSparkListener(listener)
-      try {
-        inGroup(group)(
-          Similarity.kmeansInertia(spark, sfDir, k = 8, iters = iters).collect())
-        // the listener bus is ordered: once it delivers the marker job,
-        // it has delivered every job before it
-        inGroup(marker)(sc.parallelize(Seq(1), 1).count())
-        assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-        n.get
-      } finally {
-        sc.removeSparkListener(listener)
-        Caches.releaseAll(spark)
-      }
-    }
+    def jobs(iters: Int): Int =
+      try jobsRun(Similarity.kmeansInertia(spark, sfDir, k = 8, iters = iters).collect())
+      finally Caches.releaseAll(spark)
     val counts = Seq(2, 3, 4).map(jobs)
     val perRound = counts.zip(counts.tail).map { case (a, b) => b - a }
     assert(perRound.distinct.size == 1 && perRound.head <= 3,

@@ -1,7 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.CartesianProductExec
+import org.apache.spark.sql.execution.window.WindowExec
 
 import graft.operators.{Analytics, Dedup, Similarity, TextAnalysis}
 
@@ -89,7 +94,7 @@ class PlanSpec extends SparkSuite {
     val plan = formatted(graft.operators.Similarity.mediaIvfKnn(spark, sfDir))
     // candidate generation must be the hash equi-join on cell id; the
     // only nested-loop join allowed is the broadcast against the
-    // <= nCells centroid table
+    // one-row model
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
@@ -236,9 +241,9 @@ class PlanSpec extends SparkSuite {
   }
 
   test("rrf fusion: cell equi-joins + bounded-shortlist fusion — no cartesian") {
-    // each retriever is the knnIvf shape (nCells-broadcast assign,
-    // cell-keyed hash join); the only nested loops are the bounded
-    // broadcast ones (centroid rows, the 1-row denominator aggregate)
+    // each retriever is the knnIvf shape (one-row model broadcast
+    // assign, cell-keyed hash join); the only nested loops are the
+    // one-row broadcasts (the model, the denominator aggregate)
     val plan = formatted(Similarity.rrfFusion(spark, sfDir))
     assert(!plan.contains("CartesianProduct"), plan)
   }
@@ -434,9 +439,43 @@ class PlanSpec extends SparkSuite {
     assert(hashShuffles == 1, s"expected exactly one hash exchange, got $hashShuffles:\n$plan")
   }
 
-  test("IVF knn never cross-products against the corpus (only the tiny centroid broadcast)") {
+  /** The physical plan of an unexecuted frame, exchanges included, as
+    * adaptive execution starts from it. */
+  private def physical(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case p => p
+  }
+
+  test("IVF knn: no cross product, per-vector window or distinct; only local broadcasts") {
+    def shape(df: DataFrame): (Boolean, Boolean, Boolean, Boolean) = {
+      val plan = physical(df)
+      val broadcasts = plan.collect { case b: BroadcastExchangeExec => b.child }
+      (plan.exists(_.isInstanceOf[CartesianProductExec]),
+        plan.exists {
+          case w: WindowExec => w.partitionSpec.exists(_.references.exists(_.name == "vec_id"))
+          case _ => false
+        },
+        plan.exists {
+          case a: HashAggregateExec => a.aggregateExpressions.isEmpty
+          case _ => false
+        },
+        broadcasts.nonEmpty &&
+          broadcasts.forall(_.collectLeaves().forall(_.isInstanceOf[LocalTableScanExec])))
+    }
     val plan = formatted(Similarity.knnIvf(spark, sfDir))
-    assert(!plan.contains("CartesianProduct"), plan)
+    val (cartesian, vecWindow, distinct, localBroadcasts) = shape(Similarity.knnIvf(spark, sfDir))
+    assert(!cartesian, plan)
+    assert(!vecWindow, s"per-vector rank window in:\n$plan")
+    assert(!distinct, s"distinct aggregate in:\n$plan")
+    assert(localBroadcasts, s"a broadcast side is not a driver-built local table:\n$plan")
+    // the checks see the replaced row_number form's window, distinct and scanned broadcasts
+    assert(shape(ReplacedForms.knnIvf(spark, sfDir, 5, 10, 16, 2)) == ((false, true, true, false)))
+  }
+
+  test("normalizeUnion scans events once") {
+    def scans(df: DataFrame) = physical(df).collect { case f: FileSourceScanExec => f }.size
+    assert(scans(graft.operators.RefPipeline.normalizeUnion(spark, sfDir)) == 1)
+    assert(scans(ReplacedForms.normalizeUnion(spark, sfDir)) == 3)
   }
 
   test("arithmetic banding has no join operator at all") {

@@ -73,6 +73,40 @@ class RefPipelineSpec extends SparkSuite {
     assert(out.count() > 0)
   }
 
+  private def byId(df: org.apache.spark.sql.DataFrame): Seq[Row] =
+    df.collect().toSeq.sortBy(_.getLong(0))
+
+  test("normalizeUnion: one projection equals the three-slice union; null event_type rows drop") {
+    val dir = eventsDir(Seq(
+      (1L, "2024-01-01 10:00:00", 7L, Some("view"), Some(101.25), """{"k": 5}"""),
+      (2L, "2024-01-01 10:00:01", 7L, Some("click"), Some(99.5), """{"k": 3}"""),
+      (3L, "2024-01-01 10:00:02", 8L, Some("error"), None, """{"x": 1}"""),
+      (4L, "2024-01-01 10:00:03", 8L, None, Some(100.0), """{"k": 1}""")))
+    val got = byId(RefPipeline.normalizeUnion(spark, dir))
+    assert(got == byId(ReplacedForms.normalizeUnion(spark, dir)))
+    assert(got.map(r => (r.getLong(0), r.getString(5))) ==
+      Seq(1L -> "AlphaVantage", 2L -> "WebSocketMock", 3L -> "CSVMock"))
+    assert(byId(RefPipeline.normalizeUnion(spark, sfDir)) ==
+      byId(ReplacedForms.normalizeUnion(spark, sfDir)))
+  }
+
+  test("property: normalizeUnion equals the three-slice union (ScalaCheck)") {
+    val row = for {
+      sec <- Gen.choose(0, 86399)
+      user <- Gen.choose(1L, 4L)
+      et <- Gen.option(Gen.oneOf("view", "click", "signup", "purchase", "error"))
+      value <- Gen.option(Gen.choose(-500, 20000).map(_ / 100.0))
+      props <- Gen.oneOf("""{"k": 5}""", """{"k": -3}""", """{"x": 1}""", """{"k": 100}""")
+    } yield (f"2024-01-01 ${sec / 3600}%02d:${sec / 60 % 60}%02d:${sec % 60}%02d", user, et, value, props)
+    // no shrinking: every case writes a table and runs Spark jobs
+    val prop = Prop.forAllNoShrink(Gen.choose(1, 30).flatMap(Gen.listOfN(_, row))) { rs =>
+      val dir = eventsDir(rs.zipWithIndex.map { case ((ts, u, et, v, p), i) => (i.toLong, ts, u, et, v, p) })
+      byId(RefPipeline.normalizeUnion(spark, dir)) == byId(ReplacedForms.normalizeUnion(spark, dir))
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(res.passed, res.status.toString)
+  }
+
   test("alert messages carry the formatted *** ALERT *** line (:100-106)") {
     val df = Seq(("e1", "AAPL", 120.5)).toDF("id", "symbol", "moving_average")
     val msg = RefPipeline.alertMessages(df, 108.0)

@@ -2191,15 +2191,14 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("min_by/max_by OHLC formulation equals the shipped row_number form on the corpus") {
-    val viaAgg = graft.streaming.StreamingOhlc.bars(
-        graft.operators.Finance.quotes(spark, sfDir))
+  test("OHLC twin and batch bars equal the two-row_number reference on the corpus") {
+    val quotes = graft.operators.Finance.quotes(spark, sfDir)
+    val viaAgg = graft.streaming.StreamingOhlc.bars(quotes)
       .orderBy("symbol", "day").collect().map(_.toSeq)
-    val viaRank = graft.operators.Finance.ohlcBars(spark, sfDir)
-      .select("symbol", "day", "open_price", "high_price", "low_price",
-        "close_price", "bar_volume", "n_ticks")
-      .collect().map(_.toSeq)
+    val batch = graft.operators.Finance.ohlcBars(spark, sfDir).collect().map(_.toSeq)
+    val viaRank = ReplacedForms.ohlcBars(quotes).collect().map(_.toSeq)
     assert(viaAgg.toSeq == viaRank.toSeq)
+    assert(batch.toSeq == viaRank.toSeq)
   }
 
   test("streaming VWAP equals the batch VWAP on the corpus, order-free under splits") {
