@@ -963,7 +963,8 @@ object SparkEntry {
     * against the trained coarse quantizer — the training loop's own
     * last assignment `a2` is vs the previous round's centroids, a
     * training artifact). Used by the IVF-PQ serving oracles; mirrors
-    * `Similarity.KmeansFit.routing` in `ivfPqModel` and `ivfPqResidualRecall`.
+    * `Similarity.KmeansFit.routing` in `ivfPqModel` and the routing
+    * projection of `ivfPqResidualRecall`.
     */
   private val routeCte: String =
     """a3 AS (SELECT vec_id, cid FROM (
@@ -1005,9 +1006,10 @@ object SparkEntry {
        |)""".stripMargin
 
   /** Shared PQ trainer CTE chain with table-name prefix `p` — mirrors
-    * the Spark trainer (Similarity.pqArtifactsFrom: hash-spread seed
-    * by the polynomial doc-id hash, two unrolled Lloyd rounds) so the
-    * trainer definition cannot drift between the PQ oracles. Expects
+    * the Spark trainer (Similarity.pqTrain: hash-spread seed by the
+    * polynomial doc-id hash, two unrolled Lloyd rounds per subspace,
+    * codes from the final books) so the trainer definition cannot
+    * drift between the PQ oracles. Expects
     * `${p}sq (vec_id, sub, pos, vq)` to be defined; ends in the
     * trained books `${p}c2` and the encoding `${p}codes`.
     */

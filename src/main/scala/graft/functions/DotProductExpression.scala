@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
@@ -76,7 +75,7 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
     copy(left = newLeft, right = newRight)
 }
 
-object DotProduct {
+object DotProduct extends NativeFunction(classOf[DotProduct]) {
   val Name = "graft_dot"
 
   /** The interpreted kernel: `x · y` with float elements widened
@@ -101,15 +100,6 @@ object DotProduct {
     require(args.length == 2, s"$Name takes exactly two arguments")
     DotProduct(args.head, args(1))
   }
-
-  /** Register on an existing session (idempotent); afterwards callable
-    * as `graft_dot(a, b)` from SQL or `call_function`.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(Name, builder, "built-in")
-
-  private[functions] def info = new ExpressionInfo(classOf[DotProduct].getName, Name)
 }
 
 /** `graft_nearest_cell(v, nrm, cids, cembs, cnrms)`: the IVF cell of a
@@ -167,7 +157,7 @@ case class NearestCell(children: Seq[Expression]) extends Expression {
       newChildren: IndexedSeq[Expression]): NearestCell = copy(children = newChildren)
 }
 
-object NearestCell {
+object NearestCell extends NativeFunction(classOf[NearestCell]) {
   val Name = "graft_nearest_cell"
 
   /** THE IVF cell score, on executors and on the driver alike:
@@ -238,8 +228,4 @@ object NearestCell {
   }
 
   private[functions] def builder(args: Seq[Expression]): Expression = NearestCell(args)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(Name, builder, "built-in")
 }

@@ -49,7 +49,7 @@ case class PolyHash(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object PolyHash {
+object PolyHash extends NativeFunction(classOf[PolyHash]) {
   val Name = "graft_polyhash"
 
   def hash(s: String): Long = {
@@ -62,38 +62,46 @@ object PolyHash {
     acc
   }
 
-  private def info = new ExpressionInfo(classOf[PolyHash].getName, Name)
-
   private[functions] def builder(args: Seq[Expression]): Expression = {
     require(args.length == 1, s"$Name takes exactly one argument")
     PolyHash(args.head)
   }
+}
 
-  /** Register on an existing session (idempotent); afterwards the
-    * expression is callable as `graft_polyhash(col)` from SQL or
-    * `call_function`.
+/** A native graft function: its SQL `Name`, its arity-checked `builder`
+  * and its `ExpressionInfo` — what both registration paths publish: the
+  * programmatic [[register]] on an already-built session, and
+  * [[GraftExtensions]] at session build time.
+  */
+abstract class NativeFunction(expression: Class[_ <: Expression]) {
+  val Name: String
+
+  private[functions] def builder(args: Seq[Expression]): Expression
+
+  private[functions] def info: ExpressionInfo = new ExpressionInfo(expression.getName, Name)
+
+  /** Register on an existing session (idempotent); afterwards callable
+    * as `Name(...)` from SQL or `call_function`.
     */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(Name, builder, "built-in")
 }
 
-/** `spark.sql.extensions=graft.functions.GraftExtensions` injects the
-  * function at session build time — the deployment-config path; the
-  * programmatic [[PolyHash.register]] covers an already-built session.
+/** `spark.sql.extensions=graft.functions.GraftExtensions` injects every
+  * native function at session build time — the deployment-config path;
+  * each function's own [[NativeFunction.register]] covers an
+  * already-built session. The builders are the arity-checked ones the
+  * register path uses: an unchecked `args.head` would silently hash
+  * only the first argument of a miswritten graft_polyhash(a, b) call.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // Arity-checked builders shared with the programmatic register
-    // path — an unchecked `args.head` would silently hash only the
-    // first argument of a miswritten graft_polyhash(a, b) SQL call.
-    ext.injectFunction((
-      FunctionIdentifier(PolyHash.Name),
-      new ExpressionInfo(classOf[PolyHash].getName, PolyHash.Name),
-      PolyHash.builder))
-    ext.injectFunction((
-      FunctionIdentifier(DotProduct.Name),
-      DotProduct.info,
-      DotProduct.builder))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.Functions.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.Name), f.info, f.builder)))
+}
+
+object GraftExtensions {
+  /** Every native function, in one list. */
+  val Functions: Seq[NativeFunction] = Seq(PolyHash, DotProduct, SqDistLong, NearestCid, NearestCell)
 }

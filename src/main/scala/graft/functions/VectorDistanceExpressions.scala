@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -98,19 +97,13 @@ case class SqDistLong(left: Expression, right: Expression) extends BinaryExpress
     copy(left = newLeft, right = newRight)
 }
 
-object SqDistLong {
+object SqDistLong extends NativeFunction(classOf[SqDistLong]) {
   val Name = "graft_sqdist"
 
   private[functions] def builder(args: Seq[Expression]): Expression = {
     require(args.length == 2, s"$Name takes exactly two arguments")
     SqDistLong(args.head, args(1))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(Name, builder, "built-in")
-
-  private[functions] def info = new ExpressionInfo(classOf[SqDistLong].getName, Name)
 }
 
 /** `graft_nearest_cid(vqa, cids, cqas)`: the id of the centroid
@@ -232,17 +225,11 @@ case class NearestCid(first: Expression, second: Expression, third: Expression)
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
-object NearestCid {
+object NearestCid extends NativeFunction(classOf[NearestCid]) {
   val Name = "graft_nearest_cid"
 
   private[functions] def builder(args: Seq[Expression]): Expression = {
     require(args.length == 3, s"$Name takes exactly three arguments")
     NearestCid(args.head, args(1), args(2))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(Name, builder, "built-in")
-
-  private[functions] def info = new ExpressionInfo(classOf[NearestCid].getName, Name)
 }

@@ -746,8 +746,8 @@ object Similarity {
   private[graft] final case class CentModel(cids: Vector[Long], cqas: Vector[Vector[Long]]) {
 
     /** The ONE-ROW routing frame `(cids ARRAY<BIGINT>, cqas
-      * ARRAY<ARRAY<BIGINT>>)` that [[graft.functions.NearestCid]]
-      * scores against; it broadcasts, so task size does not grow with k. */
+      * ARRAY<ARRAY<BIGINT>>)` that [[route]] scores against; it
+      * broadcasts, so task size does not grow with k. */
     def row(spark: SparkSession): DataFrame =
       spark.createDataFrame(Seq((cids, cqas))).toDF("cids", "cqas")
 
@@ -774,6 +774,14 @@ object Similarity {
       of(cents.select(col("cid").cast("bigint"), col("pos").cast("bigint"),
           col("cq").cast("bigint")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
+
+    /** The Lloyd seed: the first `k` vectors of a packed corpus `(vec_id,
+      * vqa)`, each its own centroid, in one collect. */
+    def seed(vqp: DataFrame, k: Int): CentModel = {
+      val rows = vqp.filter(col("vec_id") < k).select(col("vec_id").cast("bigint"), col("vqa"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toVector)).sortBy(_._1)
+      CentModel(rows.map(_._1).toVector, rows.map(_._2).toVector)
+    }
   }
 
   /** A completed Lloyd fit: the PACKED checkpointed corpus (`vqp` —
@@ -786,14 +794,8 @@ object Similarity {
   private[graft] case class KmeansFit(vqp: DataFrame, vqIds: Set[Int], prev: CentModel,
                                       model: CentModel, members: Map[Long, Long]) {
 
-    /** Exploded view `(vec_id, pos, vq)` — a narrow posexplode over the
-      * same checkpoint blocks, recomputed per use, for the PQ
-      * sub-quantizer paths that genuinely need per-position rows. */
-    def vq: DataFrame = vqp.select(col("vec_id"), posexplode(col("vqa")))
-      .select(col("vec_id"), col("pos").cast("bigint").as("pos"), col("col").as("vq"))
-
     /** Final-cells routing `(vec_id, cid)` of the corpus. */
-    def routing: DataFrame = route(vqp, model).select("vec_id", "cid")
+    def routing: DataFrame = route(vqp, model.row(vqp.sparkSession)).select("vec_id", "cid")
   }
 
   /** The Lloyd loop shared by [[kmeansCentroids]], [[kmeansInertia]],
@@ -820,9 +822,7 @@ object Similarity {
     * the model never leaves the driver except as a broadcast row.
     */
   private def lloyd(vqp: DataFrame, vqIds: Set[Int], k: Int, iters: Int): KmeansFit = {
-    val seed = vqp.filter(col("vec_id") < k).select(col("vec_id").cast("bigint"), col("vqa"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toVector)).sortBy(_._1)
-    var prev = CentModel(seed.map(_._1).toVector, seed.map(_._2).toVector)
+    var prev = CentModel.seed(vqp, k)
     var model = prev
     var members = Map.empty[Long, Long]
     for (_ <- 1 to iters) {
@@ -847,37 +847,61 @@ object Similarity {
   }
 
   /** One Lloyd round as one aggregate over the packed corpus: route
-    * every vector against the broadcast `model` row, THEN posexplode
-    * (routing in the explode's own select would run once per element),
-    * then the per-(cid, pos) integer mean `cq` and the member count
-    * `n`. Output `(cid, pos, cq, n)`, k x dim rows for the driver.
+    * every vector against the broadcast `model` row, then
+    * [[lloydMeans]]. Output `(cid, pos, cq, n)`, k x dim rows for the
+    * driver.
     */
   private[graft] def lloydRound(vqp: DataFrame, model: CentModel): DataFrame =
-    route(vqp, model)
-      .select(col("cid"), posexplode(col("vqa")))
-      .groupBy(col("cid"), col("pos").cast("bigint").as("pos"))
-      .agg(round(sum(col("col")).cast("double") / count(lit(1))).cast("bigint").as("cq"),
-        count(lit(1)).as("n"))
+    lloydMeans(route(vqp, model.row(vqp.sparkSession)))
 
-  /** Packed rows `(vec_id, vqa, ...)` with their nearest centroid `cid`
-    * under `model` (the codegen'd [[graft.functions.NearestCid]] argmin —
-    * `min(struct(d2, cid))` semantics exactly) and the model arrays
-    * `cids`, `cqas` for [[centD2]]. The model is one broadcast row,
-    * nested-loop joined (the one-row broadcast the plan pins allow):
-    * n rows in, n rows out.
+  /** The sufficient statistics of a Lloyd update over [[route]]d rows:
+    * per `(keys..., cid, pos)` the coordinate sum `sum_vq` and the
+    * member count `n`. The routed rows posexplode AFTER routing
+    * (routing in the explode's own select would run once per element).
+    * Integer sums are order- and split-independent, so the streamed
+    * k-means fold ([[graft.streaming.StreamingKmeansStats]]) stores
+    * these very rows and still equals the batch round.
     */
-  private def route(packed: DataFrame, model: CentModel): DataFrame = {
+  private[graft] def lloydSums(routed: DataFrame, keys: String*): DataFrame =
+    routed.select(keys.map(col) ++ Seq(col("cid"), posexplode(col("vqa"))): _*)
+      .groupBy(keys.map(col) ++ Seq(col("cid"), col("pos").cast("bigint").as("pos")): _*)
+      .agg(sum(col("col")).as("sum_vq"), count(lit(1)).as("n"))
+
+  /** [[lloydSums]] rounded to the updated centroids: `(keys..., cid,
+    * pos, cq, n)` with `cq` the integer mean. */
+  private def lloydMeans(routed: DataFrame, keys: String*): DataFrame =
+    lloydSums(routed, keys: _*).select(keys.map(col) ++ Seq(col("cid"), col("pos"),
+      round(col("sum_vq").cast("double") / col("n")).cast("bigint").as("cq"), col("n")): _*)
+
+  /** THE router of every vector quantizer here: packed rows `(vec_id,
+    * vqa, ...)` with their nearest centroid `cid` under `model` (the
+    * codegen'd [[graft.functions.NearestCid]] argmin — `min(struct(d2,
+    * cid))` semantics exactly), plus the model arrays `cids`, `cqas`
+    * for [[centD2]]. `model` is a routing frame `(keys..., cids,
+    * cqas)`: the one-row [[CentModel.row]], nested-loop joined (the
+    * one-row broadcast the plan pins allow), or one row per key value
+    * ([[PqBooks.row]], one codebook per `sub`), broadcast equi-joined on
+    * the keys. Either way n rows in, n rows out.
+    */
+  private def route(packed: DataFrame, model: DataFrame): DataFrame = {
     graft.functions.NearestCid.register(packed.sparkSession)
-    packed.crossJoin(broadcast(model.row(packed.sparkSession)))
-      .withColumn("cid", call_function(graft.functions.NearestCid.Name,
-        col("vqa"), col("cids"), col("cqas")))
+    val keys = model.columns.filterNot(Set("cids", "cqas")).toSeq
+    val joined =
+      if (keys.isEmpty) packed.crossJoin(broadcast(model))
+      else packed.join(broadcast(model), keys)
+    joined.withColumn("cid", call_function(graft.functions.NearestCid.Name,
+      col("vqa"), col("cids"), col("cqas")))
   }
 
+  /** A routed row's centroid: its `cid` looked up in the model arrays
+    * `cids`, `cqas`. */
+  private def routedCentroid: Column =
+    element_at(col("cqas"), array_position(col("cids"), col("cid")).cast("int"))
+
   /** Exact squared distance of a routed row's `vqa` to its cell's
-    * centroid, looked up by `cid` in the model arrays `cids`, `cqas`. */
+    * centroid. */
   private def centD2: Column =
-    call_function(graft.functions.SqDistLong.Name, col("vqa"),
-      element_at(col("cqas"), array_position(col("cids"), col("cid")).cast("int")))
+    call_function(graft.functions.SqDistLong.Name, col("vqa"), routedCentroid)
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
     * arXiv:2303.09540 — the embedding-space dedup a pretraining corpus
@@ -926,7 +950,7 @@ object Similarity {
     // streaming ingest can reproduce — the in-loop assignment is vs
     // the previous round's centroids, a training artifact)
     graft.functions.SqDistLong.register(embs.sparkSession)
-    val members = route(fit.vqp, fit.model)
+    val members = route(fit.vqp, fit.model.row(embs.sparkSession))
       .select(col("cid"), col("vec_id"), centD2.as("cent_d2"), col("vqa"))
     semanticCells(members, maxD2)
   }
@@ -1017,32 +1041,16 @@ object Similarity {
       .sortWithinPartitions("cell")
   }
 
-  /** Nearest coarse centroid per vector `(vec_id, cid)` over
-    * micro-unit rows `(vec_id, pos, vq, ...)` vs centroids
-    * `(cid, pos, cq)`. The streaming routers' seam: it packs the rows,
-    * collects the cell table into the same driver-side model the
-    * Lloyd loop routes with, and delegates to [[route]], so batch and
-    * streamed routing cannot drift.
-    *
-    * The original pos-equi-join formulation pushed n·d·k rows through
-    * a hash aggregate (at the SemDeDup k = √n operating point, ~30
-    * BILLION probes per pass on a 600k-vector corpus); the packed
-    * kernel computes the identical BIGINT arithmetic in one fused k×d
-    * loop per vector.
+  /** Nearest coarse centroid per vector `(vec_id, cid, vqa)` of
+    * `(vec_id, embedding, ...)` rows against a published cell table
+    * `(cid, pos, cq)`. The streaming routers' seam: it packs the rows
+    * ([[packEmbeddings]]), collects the cells into the same driver-side
+    * model the Lloyd loop routes with, and delegates to [[route]], so
+    * batch and streamed routing cannot drift.
     */
   private[graft] def coarseAssign(rows: DataFrame, cents: DataFrame): DataFrame =
-    route(packVectors(rows), CentModel.collect(cents)).select("vec_id", "cid")
-
-  /** Position-ordered packed micro-unit vector per id: `(vec_id, vqa
-    * ARRAY<BIGINT>)` from exploded `(vec_id, pos, vq)` rows. The
-    * struct sort makes the array order deterministic regardless of
-    * collect order.
-    */
-  private[graft] def packVectors(rows: DataFrame): DataFrame =
-    rows.groupBy("vec_id")
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("vq").as("v")))),
-        s => s.getField("v")).as("vqa"))
+    route(packEmbeddings(rows), CentModel.collect(cents).row(rows.sparkSession))
+      .select("vec_id", "cid", "vqa")
 
   /** Cluster-quality audit of the trained fit: per final centroid, the
     * member count and the inertia (sum of squared distances of members
@@ -1068,7 +1076,7 @@ object Similarity {
     // the last round's membership (routed against `prev`), each member
     // measured against its UPDATED centroid in the final model
     graft.functions.SqDistLong.register(spark)
-    val d2 = route(fit.vqp, fit.prev)
+    val d2 = route(fit.vqp, fit.prev.row(spark))
       .select(col("cid"), col("vqa"))
       .crossJoin(broadcast(fit.model.row(spark)))
       .select(col("cid"), centD2.as("d2"))
@@ -1322,7 +1330,7 @@ object Similarity {
     * compression trade at embedding scale: split each 64-dim vector
     * into 8 subvectors, train a 16-code codebook PER SUBSPACE
     * (hash-spread seeding + two Lloyd rounds — see
-    * [[pqArtifactsFrom]]), encode every
+    * [[pqTrain]]), encode every
     * vector as 8 codes (4 bits each → 4 bytes where the raw vector is
     * 256 — a 64x memory cut), and search with Asymmetric Distance
     * Computation: the query precomputes its exact distance to every
@@ -1337,12 +1345,12 @@ object Similarity {
     * integer — the whole audit is engine-exact, which is why a
     * quantization SCHEME can be oracle-checked at all.
     *
-    * Scale shape: training and encoding are the same
-    * broadcast-codebook distance join as the k-means trainer, grouped
-    * by (vector, subspace) — map-side partial, no window over corpus
-    * rows except the per-query top-k ranks. The brute-force side is
-    * the audit's oracle truth, bounded by the fixed query count, not
-    * a production path.
+    * Scale shape: training is the k-means Lloyd loop per subspace on a
+    * driver-side model ([[pqTrain]]); encoding is one projection of
+    * the packed corpus against the books, broadcast equi-joined on the
+    * subspace — no window over corpus rows except the per-query top-k
+    * ranks. The brute-force side is the audit's oracle truth, bounded
+    * by the fixed query count, not a production path.
     */
   def pqRecall(spark: SparkSession, dir: String, nSubs: Int = 8,
                nCodes: Int = 16, k: Int = 5, nQueries: Int = 10): DataFrame =
@@ -1361,10 +1369,10 @@ object Similarity {
                      k: Int = 5, nQueries: Int = 10): DataFrame =
     pqRecallImpl(spark, dir, nSubs = 8, nCodes = 16, k, nQueries, rerankN)
 
-  /** The PQ training/encoding artifacts shared by the PQ audits and
-    * the IVF-PQ composites: micro-unit subvector rows `sq`, trained
-    * codebooks `books`, per-vector codes, and the per-query ADC
-    * distance table `qd`.
+  /** The PQ artifacts shared by the PQ audits and the IVF-PQ
+    * composites: micro-unit subvector rows `sq` (`(vec_id, pos, vq,
+    * sub)`, the exact side), the published codebooks `books`, per-vector
+    * codes, and the per-query ADC distance table `qd`.
     */
   private case class PqArtifacts(sq: DataFrame, books: DataFrame,
                                  codes: DataFrame, qd: DataFrame)
@@ -1386,147 +1394,143 @@ object Similarity {
     PqModel(a.books, a.codes, a.qd)
   }
 
-  /** Micro-unit subvector rows `(vec_id, pos, sub, vq)` of any
-    * `(vec_id, embedding, ...)` frame — the PQ arithmetic unit,
-    * shared with the streaming encoder so batch and stream cannot
-    * drift.
+  /** Micro-unit subvector rows `(vec_id, pos, vq, sub)` of any
+    * `(vec_id, embedding, ...)` frame — the exploded unit the streaming
+    * semantic decontamination probes with.
     */
-  private[graft] def pqMicroUnits(df: DataFrame, nSubs: Int = 8): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+  private[graft] def pqMicroUnits(df: DataFrame, nSubs: Int = 8): DataFrame =
+    subRows(packEmbeddings(df), nSubs)
+
+  /** PQ codes `(vec_id, sub, cid)` of `(vec_id, embedding, ...)` rows
+    * against published books `(cid, sub, pos, cq)` — the streaming
+    * encoder's seam, the [[coarseAssign]] pattern: pack, collect the
+    * books into the trainer's driver-side model, [[PqBooks.codes]].
+    */
+  private[graft] def pqAssign(rows: DataFrame, books: DataFrame): DataFrame =
+    PqBooks.collect(books).codes(packEmbeddings(rows))
+
+  /** Packed subvectors `(vec_id, sub, vqa)`: each packed `vqa` cut into
+    * `nSubs` equal position-ordered slices — what a PQ codebook routes.
+    */
+  private def subVectors(vqp: DataFrame, nSubs: Int): DataFrame = {
     val subDim = Dim / nSubs
-    df.repartition(n, col("vec_id"))
-      .select(col("vec_id"), posexplode(col("embedding")))
-      .select(col("vec_id"), col("pos").cast("bigint").as("pos"),
-        round(col("col").cast("double") * 1e6).cast("bigint").as("vq"))
-      .withColumn("sub", expr(s"pos div $subDim"))
+    vqp.select(col("vec_id"), posexplode(array((0 until nSubs).map(s =>
+        slice(col("vqa"), s * subDim + 1, subDim)): _*)))
+      .select(col("vec_id"), col("pos").cast("bigint").as("sub"), col("col").as("vqa"))
   }
 
-  /** Nearest codebook entry per (vector, subspace) — min(struct(d2,
-    * cid)) semantics per subspace; shared with the streaming encoder.
-    * Exploded-row seam: packs and delegates (the [[coarseAssign]]
-    * pattern — the old (sub, pos) equi-join pushed n·d·nCodes rows
-    * through a hash aggregate per assignment pass, and the PQ
-    * composites make three passes each).
+  /** Exploded micro-unit rows `(vec_id, pos, vq, sub)` of a packed
+    * corpus, `sub` the PQ subspace of `pos` — a narrow posexplode for
+    * the paths that need per-position rows (ADC query tables, exact
+    * re-rank, brute truth).
     */
-  private[graft] def pqAssign(rows: DataFrame, cents: DataFrame): DataFrame =
-    pqAssignPacked(packSubVectors(rows), cents)
+  private def subRows(vqp: DataFrame, nSubs: Int): DataFrame =
+    vqp.select(col("vec_id"), posexplode(col("vqa")))
+      .select(col("vec_id"), col("pos").cast("bigint").as("pos"), col("col").as("vq"))
+      .withColumn("sub", expr(s"pos div ${Dim / nSubs}"))
 
-  /** [[pqAssign]] over already-PACKED subvector rows `(vec_id, sub,
-    * sva)` — a broadcast equi-join on the 8-row per-subspace codebook
-    * model, then the codegen'd [[graft.functions.NearestCid]] argmin
-    * inline: n·nSubs rows in and out, zero exploded intermediates.
-    */
-  private[graft] def pqAssignPacked(spacked: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.NearestCid.register(spacked.sparkSession)
-    spacked.join(broadcast(subCentModel(cents)), Seq("sub"))
-      .select(col("vec_id"), col("sub"),
-        call_function(graft.functions.NearestCid.Name,
-          col("sva"), col("cids"), col("cqas")).as("cid"))
+  /** PQ codebooks on the driver: one k-means [[CentModel]] per subspace,
+    * `subs(s)` routing subvector `s`. */
+  private final case class PqBooks(subs: Vector[CentModel]) {
+
+    /** The routing frame `(sub, cids, cqas)`, one row per subspace:
+      * [[route]] broadcast equi-joins it on `sub`. */
+    def row(spark: SparkSession): DataFrame =
+      spark.createDataFrame(subs.zipWithIndex.map { case (m, s) => (s.toLong, m.cids, m.cqas) })
+        .toDF("sub", "cids", "cqas")
+
+    /** The published books `(cid, sub, pos, cq)`, `pos` the position in
+      * the whole vector. */
+    def books(spark: SparkSession): DataFrame = {
+      val subDim = Dim / subs.size
+      spark.createDataFrame(for {
+        (m, s) <- subs.zipWithIndex
+        (cid, pos, cq) <- m.cellRows
+      } yield (cid, s.toLong, s * subDim + pos, cq)).toDF("cid", "sub", "pos", "cq")
+    }
+
+    /** The codes `(vec_id, sub, cid)` of a packed corpus `(vec_id, vqa)`. */
+    def codes(vqp: DataFrame): DataFrame =
+      route(subVectors(vqp, subs.size), row(vqp.sparkSession)).select("vec_id", "sub", "cid")
   }
 
-  /** Position-ordered packed subvectors `(vec_id, sub, sva)` from
-    * exploded `(vec_id, sub, pos, vq)` rows. Grouping includes the
-    * corpus partitioning key (vec_id), so a vec_id-partitioned
-    * checkpoint packs without a new exchange.
-    */
-  private[graft] def packSubVectors(rows: DataFrame): DataFrame =
-    rows.groupBy("vec_id", "sub")
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("vq").as("v")))),
-        s => s.getField("v")).as("sva"))
+  private object PqBooks {
+    /** Books of `nSubs` subspaces from `(sub, cid, pos, cq)` rows in any
+      * order. */
+    def of(nSubs: Int, rows: Seq[(Long, Long, Long, Long)]): PqBooks = {
+      val bySub = rows.groupBy(_._1)
+      PqBooks(Vector.tabulate(nSubs)(s =>
+        CentModel.of(bySub.getOrElse(s.toLong, Nil).map(r => (r._2, r._3, r._4)))))
+    }
 
-  /** The per-subspace routing model `(sub, cids, cqas)` — nSubs rows,
-    * each carrying that subspace's whole codebook as index-aligned
-    * arrays (cid-sorted for determinism; the argmin tie-break is
-    * order-independent).
-    */
-  private def subCentModel(cents: DataFrame): DataFrame =
-    cents.groupBy("sub", "cid")
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("cq").as("v")))),
-        s => s.getField("v")).as("cqa"))
-      .groupBy("sub")
-      .agg(sort_array(collect_list(struct(col("cid"), col("cqa")))).as("cs"))
-      .select(col("sub"),
-        transform(col("cs"), s => s.getField("cid")).as("cids"),
-        transform(col("cs"), s => s.getField("cqa")).as("cqas"))
+    /** Collect published books `(cid, sub, pos, cq)`. */
+    def collect(books: DataFrame): PqBooks = {
+      val rows = books.select(col("sub").cast("bigint"), col("cid").cast("bigint"),
+          col("pos").cast("bigint"), col("cq").cast("bigint")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      of(if (rows.isEmpty) 0 else rows.map(_._1).max.toInt + 1, rows)
+    }
+  }
 
   private def pqArtifacts(spark: SparkSession, dir: String, nSubs: Int,
                           nCodes: Int, nQueries: Int): PqArtifacts = {
-    // integer micro-unit subvector rows; many consumers (two
-    // assignment passes, codebook update, query table, brute truth)
-    val (sq, _) = graft.Caches.trackedCheckpoint(
-      pqMicroUnits(Tables.embeddings(spark, dir), nSubs))
-    pqArtifactsFrom(sq, nCodes, nQueries)
+    val (vqp, _) = graft.Caches.trackedCheckpoint(packEmbeddings(Tables.embeddings(spark, dir)))
+    pqArtifactsFrom(vqp, subRows(vqp, nSubs), nSubs, nCodes, nQueries)
   }
 
-  /** The PQ trainer over ALREADY-MATERIALIZED micro-unit subvector
-    * rows — the seam that lets [[ivfPqRecall]] share the k-means
-    * fit's exploded-corpus checkpoint instead of materializing the
-    * same rows twice, and lets [[ivfPqResidualRecall]] train on
-    * residual rows with the identical scheme.
-    *
-    * Training: hash-spread seeding + two Lloyd rounds. Seeds are the
-    * `nCodes` vectors with the smallest (PolyHash(vec_id), vec_id) —
-    * a deterministic uniform sample spread across the corpus, where
-    * the previous first-`nCodes` seed took adjacent (crawl-correlated)
-    * vectors. The seed selection is a distributed top-k
-    * (TakeOrderedAndProject — no single-partition window), and each
-    * Lloyd round is the same broadcast-codebook assign + integer-mean
-    * update as the k-means trainer, checkpointed per round. All
-    * arithmetic stays BIGINT micro-units, so the trained scheme
-    * remains oracle-checkable end to end.
+  /** The PQ artifacts of a packed corpus `vqp` with its exploded rows
+    * `sq` — the seam that lets the IVF-PQ composites train on the
+    * k-means fit's own packed checkpoint: [[pqTrain]], the books
+    * published, the corpus encoded by the same [[route]], and the
+    * per-query exact distance to every (subspace, code) centroid (the
+    * ADC table, nQueries x nSubs x nCodes rows).
     */
-  private def pqArtifactsFrom(sq: DataFrame, nCodes: Int,
+  private def pqArtifactsFrom(vqp: DataFrame, sq: DataFrame, nSubs: Int, nCodes: Int,
                               nQueries: Int): PqArtifacts = {
-    val spark = sq.sparkSession
-    graft.functions.PolyHash.register(spark)
-    // hash-spread seeding: the nCodes vectors with the smallest
-    // (PolyHash(vec_id), vec_id) — a deterministic uniform sample, vs
-    // the first-nCodes seed whose members are adjacent in ingest
-    // order and correlated on any real crawl. Selection is a
-    // distributed top-k (TakeOrderedAndProject, no single-partition
-    // window). Measured at sf0.01/50 queries the two seeds converge
-    // to identical books after the Lloyd rounds (synthetic corpus);
-    // the hash seed is kept as the production-defensible default.
-    val seedIds = sq.select("vec_id").distinct()
-      .withColumn("h", call_function(graft.functions.PolyHash.Name,
-        col("vec_id").cast("string")))
-      .orderBy(col("h"), col("vec_id")).limit(nCodes)
-      .select("vec_id")
-    val c0 = sq.join(broadcast(seedIds), Seq("vec_id"))
-      .select(col("vec_id").cast("bigint").as("cid"),
-        col("sub"), col("pos"), col("vq").as("cq"))
-    def update(asg: DataFrame): DataFrame =
-      asg.join(sq, Seq("vec_id", "sub"))
-        .groupBy("cid", "sub", "pos")
-        .agg(round(sum(col("vq")).cast("double") / count(lit(1)))
-          .cast("bigint").as("cq"))
-    // the three assignment passes below (two Lloyd rounds + the final
-    // encoding) read the packed subvector view — pack it ONCE off the
-    // already-partitioned checkpoint
-    val (sqp, _) = graft.Caches.trackedCheckpoint(packSubVectors(sq))
-    // two Lloyd rounds: at sf0.01 with 50 queries the second round
-    // lifts raw ADC 0.248 -> 0.256, rerank 0.716 -> 0.748, IVF-PQ
-    // 0.408 -> 0.420 (a third round is not worth a bench-visible
-    // extra corpus pass per composite). Round 1 stays LAZY: it is
-    // consumed exactly once, inside the books checkpoint below, so
-    // both rounds evaluate in one action — the per-round checkpoint
-    // discipline is for UNBOUNDED loops (label propagation, the
-    // k-means trainer's `iters`), not a fixed two-round chain whose
-    // every downstream consumer reads only the final books.
-    val c1 = update(pqAssignPacked(sqp, c0))
-    val (books, _) = graft.Caches.trackedCheckpoint(update(pqAssignPacked(sqp, c1)))
-    val codes = pqAssignPacked(sqp, books) // encoding against the trained books
-    // per-query exact distance to every (subspace, code) centroid —
-    // the ADC table, nQueries x nSubs x nCodes rows
+    val trained = pqTrain(vqp, nSubs, nCodes)
+    val books = trained.books(vqp.sparkSession)
     val qd = sq.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("sub"), col("pos"),
         col("vq").as("qv"))
       .join(broadcast(books), Seq("sub", "pos"))
       .groupBy("query_id", "sub", "cid")
       .agg(sum((col("qv") - col("cq")) * (col("qv") - col("cq"))).as("d2q"))
-    PqArtifacts(sq, books, codes, qd)
+    PqArtifacts(sq, books, trained.codes(vqp), qd)
+  }
+
+  /** The PQ trainer: the k-means Lloyd loop run once per subspace, all
+    * subspaces in the same jobs. Seeds are the `nCodes` vectors with the
+    * smallest (PolyHash(vec_id), vec_id) — a deterministic uniform
+    * sample spread across the corpus (the first-`nCodes` seed would
+    * take adjacent, crawl-correlated vectors), selected by a
+    * distributed top-k (TakeOrderedAndProject) and collected. Each of
+    * the two rounds is one aggregate action: [[route]] every packed
+    * subvector against its subspace's codebook, then the integer means
+    * of [[lloydMeans]] with `sub` as one more key, collected into the
+    * next books; the books never leave the driver except as the
+    * broadcast routing frame. At sf0.01 with 50 queries the second
+    * round lifts raw ADC 0.248 -> 0.256, rerank 0.716 -> 0.748, IVF-PQ
+    * 0.408 -> 0.420; a third is not worth a corpus pass per composite.
+    * All arithmetic stays BIGINT micro-units, so the trained scheme
+    * remains oracle-checkable end to end.
+    */
+  private def pqTrain(vqp: DataFrame, nSubs: Int, nCodes: Int): PqBooks = {
+    val spark = vqp.sparkSession
+    graft.functions.PolyHash.register(spark)
+    val subDim = Dim / nSubs
+    val seeds = vqp
+      .orderBy(call_function(graft.functions.PolyHash.Name, col("vec_id").cast("string")),
+        col("vec_id"))
+      .limit(nCodes)
+      .select(col("vec_id").cast("bigint"), col("vqa")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toVector)).sortBy(_._1).toVector
+    val seed = PqBooks(Vector.tabulate(nSubs)(s =>
+      CentModel(seeds.map(_._1), seeds.map(_._2.slice(s * subDim, (s + 1) * subDim)))))
+    val subs = subVectors(vqp, nSubs)
+    (1 to 2).foldLeft(seed) { (books, _) =>
+      PqBooks.of(nSubs, lloydMeans(route(subs, books.row(spark)), "sub").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq)
+    }
   }
 
   /** Exact integer-L2 re-rank of a per-query candidate shortlist:
@@ -1650,35 +1654,31 @@ object Similarity {
 
   /** Train the coarse cells and the PQ books once and return every
     * published artifact; [[ivfPqRecall]] and the streaming
-    * vector-store lifecycle compose the same pieces. The PQ side's
-    * subvector rows are the SAME micro-unit rows the k-means fit
-    * checkpointed, plus a derived `sub` column — one corpus
-    * materialization feeds both trainings and every audit below.
+    * vector-store lifecycle compose the same pieces. The PQ trainer
+    * reads the SAME packed checkpoint the k-means fit trained on — one
+    * corpus materialization feeds both trainings and every audit below.
     */
   def ivfPqModel(spark: SparkSession, dir: String,
                  nQueries: Int = 10): IvfPqModel = {
     val fit = kmeansFit(spark, dir, k = 8, iters = 2)
-    // fit.vq is a derived VIEW over the packed checkpoint; the PQ
-    // trainer and the audits read these subvector rows many times
-    // (two assignment passes, codebook update, query table, brute
-    // truth), so materialize the exploded+sub projection ONCE —
-    // without this the explode recomputes per consumer (measured
-    // +45% on x_ivfpq at the N=100 probe point)
-    // route the corpus against the FINAL cells — the deployment
+    // the PQ trainer slices subvectors out of the fit's packed
+    // checkpoint; the query table and the audits read the exploded+sub
+    // rows many times (query table, exact re-rank, brute truth), so
+    // materialize that projection ONCE — recomputing the explode per
+    // consumer measured +45% on x_ivfpq at the N=100 probe point.
+    // Route the corpus against the FINAL cells — the deployment
     // convention (a FAISS index add() assigns against the trained
     // coarse quantizer), matching the codes-vs-final-books convention
     // of the PQ side. The training loop's own last assignment is vs
     // the PREVIOUS round's centroids — a training artifact, not what
     // a router computes — and using it here would make the batch
     // composite disagree with any router that ships `cells`.
-    // PQ training (over sq) and coarse routing (over the packed
-    // checkpoint) are independent given the finished fit — overlap
-    // them (opt guide §2.6).
+    // PQ training and coarse routing are independent given the
+    // finished fit — overlap them (opt guide §2.6).
     val ((sq, a), routing) = graft.Par.run2(
       {
-        val (sq0, _) = graft.Caches.trackedCheckpoint(
-          fit.vq.withColumn("sub", expr(s"pos div ${Dim / 8}")))
-        (sq0, pqArtifactsFrom(sq0, nCodes = 16, nQueries))
+        val (sq0, _) = graft.Caches.trackedCheckpoint(subRows(fit.vqp, 8))
+        (sq0, pqArtifactsFrom(fit.vqp, sq0, nSubs = 8, nCodes = 16, nQueries))
       },
       graft.Caches.trackedCheckpoint(fit.routing)._1)
     IvfPqModel(fit.model.cells(spark), routing, a.books, a.codes, a.qd, sq)
@@ -1740,44 +1740,37 @@ object Similarity {
     * query set and probe budget, never corpus-sized), and a
     * candidate is scored with the table of the cell it lives in.
     *
-    * Scale shape: residual rows derive from the SAME exploded-corpus
-    * checkpoint the coarse fit trained on (one corpus
-    * materialization feeds coarse training, residual encoding, exact
-    * re-rank, and the brute truth); the residual frame checkpoints
-    * once and feeds the PQ trainer's passes. Everything stays BIGINT
-    * micro-units (a difference of micro-units is a micro-unit), so
-    * the full residual scheme is oracle-checked end to end.
+    * Scale shape: residuals derive from the SAME packed checkpoint the
+    * coarse fit trained on (one corpus materialization feeds coarse
+    * training, residual encoding, exact re-rank, and the brute truth),
+    * in the projection that routes each vector to its final cell; that
+    * routing checkpoint feeds the PQ trainer's passes. Everything stays
+    * BIGINT micro-units (a difference of micro-units is a micro-unit),
+    * so the full residual scheme is oracle-checked end to end.
     */
   def ivfPqResidualRecall(spark: SparkSession, dir: String, nProbe: Int = 2,
                           rerankN: Int = 20, k: Int = 5,
                           nQueries: Int = 10): DataFrame = {
     val fit = kmeansFit(spark, dir, k = 8, iters = 2)
     val subDim = Dim / 8
-    // raw subvector rows (exact re-rank + truth): fit.vq is a derived
-    // view over the packed checkpoint — materialize the exploded+sub
-    // projection ONCE for this composite's many readers (the
-    // ivfPqModel lesson)
-    // the exploded+sub projection and the final-cell routing are
-    // independent given the finished fit — overlap (opt guide §2.6);
-    // residuals are vs the cell the vector is STORED in (the
-    // ivfPqModel deployment convention)
-    val (sq, routing) = graft.Par.run2(
-      graft.Caches.trackedCheckpoint(
-        fit.vq.withColumn("sub", expr(s"pos div $subDim")))._1,
-      graft.Caches.trackedCheckpoint(fit.routing)._1)
+    // the exploded+sub rows (exact re-rank + truth, materialized ONCE —
+    // the ivfPqModel lesson) and the final-cell routing are independent
+    // given the finished fit — overlap (opt guide §2.6). Residuals are
+    // vs the cell the vector is STORED in (the ivfPqModel deployment
+    // convention), so the routing checkpoint carries each packed
+    // residual too: one projection against the final model, the cell
+    // lookup of centD2.
+    val (sq, routed) = graft.Par.run2(
+      graft.Caches.trackedCheckpoint(subRows(fit.vqp, 8))._1,
+      graft.Caches.trackedCheckpoint(route(fit.vqp, fit.model.row(spark))
+        .select(col("vec_id"), col("cid"),
+          zip_with(col("vqa"), routedCentroid, (x, c) => x - c).as("vqa")))._1)
+    val routing = routed.select("vec_id", "cid")
     val cents = fit.model.cells(spark)
-    // residual rows: vector minus its routed cell's centroid
-    val (rsq, _) = graft.Caches.trackedCheckpoint(
-      sq.drop("sub").join(routing, Seq("vec_id"))
-        .join(broadcast(cents), Seq("cid", "pos"))
-        .select(col("vec_id"), col("pos"),
-          expr(s"pos div $subDim").as("sub"),
-          (col("vq") - col("cq")).as("vq")))
     // PQ trained on residuals — same seeding/rounds as the raw scheme
-    // (the trainer's own query table scores residuals against each
-    // query's OWN cell, which is not the serving shape — build the
-    // per-probed-cell table below instead)
-    val PqArtifacts(_, books, codes, _) = pqArtifactsFrom(rsq, nCodes = 16, nQueries)
+    // (the serving query table is per probed cell — built below)
+    val trained = pqTrain(routed, nSubs = 8, nCodes = 16)
+    val (books, codes) = (trained.books(spark), trained.codes(routed))
     // query -> nProbe nearest coarse cells (exact L2, broadcast cells)
     val qrows = sq.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("pos"), col("vq").as("qv"))

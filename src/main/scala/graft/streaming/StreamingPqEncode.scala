@@ -19,14 +19,16 @@ import graft.operators.Similarity
   * cross-batch state at all — so the union of per-batch rows over ANY
   * split equals the batch encoding/assignment exactly (stream==batch
   * asserted in StreamingSpec; the arithmetic is shared code, not a
-  * reimplementation: [[Similarity.pqMicroUnits]] +
-  * [[Similarity.pqAssign]] / [[Similarity.coarseAssign]]).
+  * reimplementation: [[Similarity.pqAssign]] /
+  * [[Similarity.coarseAssign]] pack the batch and route it with the
+  * trainers' own router against their driver-side models).
   *
-  * Scale shape: the codebook broadcast is 128 rows x 8 dims and the
-  * cell broadcast k x 64 rows; each batch contributes one
-  * (vec_id, sub, cid) row per subspace plus one (vec_id, cid) routing
-  * row — 8 small ints + one label per vector, which IS the
-  * compression. Exactly-once: [[StoreIO]]'s contract.
+  * Scale shape: the codebook broadcast is 8 rows (one per subspace,
+  * 16 codes x 8 dims each) and the cell broadcast one row of k x 64;
+  * each batch contributes one (vec_id, sub, cid) row per subspace plus
+  * one (vec_id, cid) routing row — 8 small ints + one label per
+  * vector, which IS the compression. Exactly-once: [[StoreIO]]'s
+  * contract.
   * The serve path needs nothing else: [[Similarity.ivfShortlist]]
   * over (routing, codes) is the same primitive the batch composite
   * runs.
@@ -58,7 +60,7 @@ object StreamingPqEncode {
     (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
       val books = spark.read.parquet(codebookPath)
-      StoreIO.writeBatch(Similarity.pqAssign(Similarity.pqMicroUnits(batch), books),
+      StoreIO.writeBatch(Similarity.pqAssign(batch, books),
         batchId, codesPath)
       ()
   }
@@ -71,7 +73,7 @@ object StreamingPqEncode {
     (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
       val cells = spark.read.parquet(cellsPath)
-      StoreIO.writeBatch(Similarity.coarseAssign(Similarity.pqMicroUnits(batch), cells),
+      StoreIO.writeBatch(Similarity.coarseAssign(batch, cells).select("vec_id", "cid"),
         batchId, routingPath)
       ()
   }

@@ -41,7 +41,6 @@ object StreamingSemanticDecontam {
   def readReport(spark: SparkSession, reportPath: String): DataFrame =
     StoreIO.readOrEmpty(spark, reportPath, ReportSchema)
       .select("vec_id", "bench_id", "d2")
-      .select("vec_id", "bench_id", "d2")
 
   /** Publish the benchmark index at `benchPath` from the benchmark
     * vectors (`(vec_id, embedding, ...)` rows) — run once when the

@@ -9,9 +9,8 @@ import graft.operators.Similarity
   * as vectors arrive: the batch trainer publishes its final cells
   * once, and every arriving batch is
   *   - ROUTED to its nearest cell and its micro-unit rows appended to
-  *     the vector store ([[Similarity.coarseAssign]], the same
-  *     arithmetic the batch operator and the vector-store router
-  *     use), then
+  *     the vector store ([[Similarity.coarseAssign]], the router the
+  *     batch operator and the vector-store router use), then
   *   - PAIRED against every stored vector of the same cell (including
   *     its own batch) under the `maxD2` threshold, appending new
   *     duplicate pairs to the pair store.
@@ -64,19 +63,18 @@ object StreamingSemanticDedup {
     (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
       val cells = spark.read.parquet(cellsPath)
-      val micro = Similarity.pqMicroUnits(batch).select("vec_id", "pos", "vq")
-      val routed = Similarity.coarseAssign(micro, cells)
-      StoreIO.writeBatch(micro.join(routed, Seq("vec_id"))
-          .select("vec_id", "cid", "pos", "vq"),
-        batchId, vecPath)
+      val routed = Similarity.coarseAssign(batch, cells)
+        .select(col("vec_id"), col("cid"), posexplode(col("vqa")))
+        .select(col("vec_id"), col("cid"), col("pos").cast("bigint").as("pos"),
+          col("col").as("vq"))
+      StoreIO.writeBatch(routed, batchId, vecPath)
       // new-vs-store pairing AFTER the append, so the store already
       // contains this batch (new-new pairs come out of the same join);
       // ordered (a.vec_id, b.vec_id) distances normalize to u < v and
       // dedup — a new-new pair is computed in both directions with the
       // same d2, a new-old pair in one
-      val a = micro.join(routed, Seq("vec_id"))
       val b = readVectors(spark, vecPath)
-      StoreIO.writeBatch(a.alias("a").join(b.alias("b"),
+      StoreIO.writeBatch(routed.alias("a").join(b.alias("b"),
             col("a.cid") === col("b.cid") && col("a.pos") === col("b.pos") &&
               col("a.vec_id") =!= col("b.vec_id"))
           .groupBy(col("a.cid").as("cid"), col("a.vec_id").as("x"),

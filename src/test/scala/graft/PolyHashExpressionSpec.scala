@@ -37,4 +37,23 @@ class PolyHashExpressionSpec extends SparkSuite {
     assert(plan.contains("*(1) Project"), s"plan lacks codegen span:\n$plan")
     assert(df.collect().map(_.getLong(0)).toSeq == Seq(PolyHash.hash("s0"), PolyHash.hash("s1")))
   }
+
+  test("GraftExtensions' one list holds all five native functions, each callable from SQL") {
+    val fns = graft.functions.GraftExtensions.Functions
+    assert(fns.map(_.Name).toSet == Set("graft_polyhash", "graft_dot", "graft_sqdist",
+      "graft_nearest_cid", "graft_nearest_cell"))
+    fns.foreach(_.register(spark))
+    val r = spark.sql(
+      """SELECT graft_polyhash('ab'),
+        |  graft_dot(array(1D, 2D), array(3D, 4D)),
+        |  graft_sqdist(array(1L, 2L), array(4L, 6L)),
+        |  graft_nearest_cid(array(0L, 0L), array(9L, 3L), array(array(1L, 1L), array(-1L, -1L))),
+        |  graft_nearest_cell(array(1D, 0D), 1D, array(5L, 7L),
+        |    array(array(0D, 1D), array(1D, 0D)), array(1D, 1D))""".stripMargin).head()
+    assert(r.getLong(0) == PolyHash.hash("ab"))
+    assert(r.getDouble(1) == 11.0)
+    assert(r.getLong(2) == 25L)
+    assert(r.getLong(3) == 3L, "equidistant centroids tie to the smaller cid")
+    assert(r.getLong(4) == 7L)
+  }
 }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The multi-pass formulations that the one-pass operators replaced,
-  * kept as test oracles: RefPipelineSpec, FinanceSpec, StreamingSpec
-  * and IvfSpec compare the shipped code against them row for row.
+  * kept as test oracles: RefPipelineSpec, FinanceSpec, StreamingSpec,
+  * IvfSpec and QuantizerSpec compare the shipped code against them row
+  * for row.
   */
 object ReplacedForms {
 
@@ -81,5 +82,75 @@ object ReplacedForms {
       .filter(col("rk") <= k)
       .select("query_id", "neighbor_id", "rk", "cos")
       .orderBy("query_id", "rk")
+  }
+
+  /** Exploded micro-unit rows `(vec_id, pos, vq)` of `(vec_id,
+    * embedding, ...)` rows. */
+  private def microUnits(rows: DataFrame): DataFrame =
+    rows.select(col("vec_id"), posexplode(col("embedding")))
+      .select(col("vec_id"), col("pos").cast("bigint").as("pos"),
+        round(col("col").cast("double") * 1e6).cast("bigint").as("vq"))
+
+  /** `StreamingKmeansStats.statsSink`'s statistics `(cid, pos, sum_vq,
+    * n)` of one batch as the exploded assignment: a pos-equi-join
+    * against the centroids `(cid, pos, cq)`, a BIGINT distance
+    * aggregate, `min(struct(d2, cid))` per vector, and a join back to
+    * the exploded rows for the sums. */
+  def kmeansStats(batch: DataFrame, cents: DataFrame): DataFrame = {
+    val vq = microUnits(batch)
+    val asg = vq.join(broadcast(cents), Seq("pos"))
+      .groupBy("vec_id", "cid")
+      .agg(sum((col("vq") - col("cq")) * (col("vq") - col("cq"))).as("d2"))
+      .groupBy("vec_id")
+      .agg(min(struct(col("d2"), col("cid"))).as("m"))
+      .select(col("vec_id"), col("m.cid").as("cid"))
+    asg.join(vq, Seq("vec_id"))
+      .groupBy("cid", "pos")
+      .agg(sum(col("vq")).as("sum_vq"), count(lit(1)).as("n"))
+  }
+
+  /** `Similarity.pqModel` over `dir` as DataFrame codebooks: exploded
+    * subvector rows `(vec_id, pos, vq, sub)`, the seed joined back from
+    * the 16 smallest (PolyHash(vec_id), vec_id), and two rounds whose
+    * codebook update joins the assignment back to the exploded rows.
+    * Each assignment packs the subvectors and aggregates a per-subspace
+    * model `(sub, cids, cqas)` from the books. Returns `(codebooks,
+    * codes, queryTable)`. */
+  def pqModel(spark: SparkSession, dir: String, nQueries: Int = 10): (DataFrame, DataFrame, DataFrame) = {
+    graft.functions.PolyHash.register(spark)
+    graft.functions.NearestCid.register(spark)
+    def packed(key: String, v: String, out: String) =
+      transform(array_sort(collect_list(struct(col(key), col(v).as("v")))),
+        s => s.getField("v")).as(out)
+    val sq = microUnits(Tables.embeddings(spark, dir)).withColumn("sub", expr("pos div 8"))
+    val sqp = sq.groupBy("vec_id", "sub").agg(packed("pos", "vq", "sva"))
+    def subCentModel(cents: DataFrame): DataFrame =
+      cents.groupBy("sub", "cid").agg(packed("pos", "cq", "cqa"))
+        .groupBy("sub")
+        .agg(sort_array(collect_list(struct(col("cid"), col("cqa")))).as("cs"))
+        .select(col("sub"),
+          transform(col("cs"), s => s.getField("cid")).as("cids"),
+          transform(col("cs"), s => s.getField("cqa")).as("cqas"))
+    def assign(cents: DataFrame): DataFrame =
+      sqp.join(broadcast(subCentModel(cents)), Seq("sub"))
+        .select(col("vec_id"), col("sub"),
+          call_function(graft.functions.NearestCid.Name, col("sva"), col("cids"), col("cqas")).as("cid"))
+    def update(asg: DataFrame): DataFrame =
+      asg.join(sq, Seq("vec_id", "sub"))
+        .groupBy("cid", "sub", "pos")
+        .agg(round(sum(col("vq")).cast("double") / count(lit(1))).cast("bigint").as("cq"))
+    val seedIds = sq.select("vec_id").distinct()
+      .withColumn("h", call_function(graft.functions.PolyHash.Name, col("vec_id").cast("string")))
+      .orderBy(col("h"), col("vec_id")).limit(16)
+      .select("vec_id")
+    val c0 = sq.join(broadcast(seedIds), Seq("vec_id"))
+      .select(col("vec_id").cast("bigint").as("cid"), col("sub"), col("pos"), col("vq").as("cq"))
+    val books = update(assign(update(assign(c0))))
+    val qd = sq.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("sub"), col("pos"), col("vq").as("qv"))
+      .join(broadcast(books), Seq("sub", "pos"))
+      .groupBy("query_id", "sub", "cid")
+      .agg(sum((col("qv") - col("cq")) * (col("qv") - col("cq"))).as("d2q"))
+    (books, assign(books), qd)
   }
 }

@@ -39,7 +39,8 @@ class VectorDistanceExpressionsSpec extends SparkSuite {
         col("a.pos") === col("b.pos") && col("a.vec_id") < col("b.vec_id"))
       .groupBy(col("a.vec_id").as("u"), col("b.vec_id").as("v"))
       .agg(sum((col("a.vq") - col("b.vq")) * (col("a.vq") - col("b.vq"))).as("d2"))
-    val packed = Similarity.packVectors(rows)
+    val packed = Similarity.packEmbeddings(
+      Tables.embeddings(spark, sfDir).filter(col("vec_id") < 20))
     val got = packed.alias("a").join(packed.alias("b"),
         col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("u"), col("b.vec_id").as("v"),
@@ -71,7 +72,8 @@ class VectorDistanceExpressionsSpec extends SparkSuite {
       val cents = rows.filter(col("vec_id") < k)
         .select(col("vec_id").cast("bigint").as("cid"), col("pos"), col("vq").as("cq"))
       val ref = explodedAssign(rows, cents)
-      val got = Similarity.coarseAssign(rows, cents)
+      val got = Similarity.coarseAssign(Tables.embeddings(spark, sfDir), cents)
+        .select("vec_id", "cid")
       assert(got.exceptAll(ref).isEmpty && ref.exceptAll(got).isEmpty,
         s"assignment diverged from the exploded oracle at k=$k")
     }
