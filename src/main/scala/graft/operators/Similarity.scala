@@ -1,12 +1,9 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
 import graft.Tables
 import graft.functions.VectorFunctions
@@ -175,10 +172,10 @@ object Similarity {
     * computed in the scan's projection (no posexplode, no checkpoint):
     * one collect brings the centroid and query rows to the driver
     * ([[IvfIndex]]), then [[cellAssign]] and [[ivfSearch]] build one
-    * plan — a projection against a one-row broadcast model and a
-    * cell-keyed broadcast hash join against the driver-built probe
-    * table. No cross product against the corpus, no per-vector window,
-    * no distinct; IvfSpec pins the job count.
+    * plan with no join: a projection that scores each vector against
+    * the model's literal arrays, then one that explodes its cell's
+    * probes out of a literal map. No cross product against the corpus,
+    * no per-vector window, no distinct; IvfSpec pins the job count.
     */
   def knnIvf(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10,
              nCells: Int = 16, nProbe: Int = 2): DataFrame = {
@@ -210,38 +207,40 @@ object Similarity {
 
   /** The driver side of an IVF search: the coarse model (centroid ids,
     * vectors widened to DOUBLE — exact — and norms, id-sorted) and the
-    * query vectors `(query_id, q_emb, q_nrm)`, collected in ONE job. The
-    * model reaches executors as one broadcast row; the queries come
-    * back as the probe table.
+    * query vectors `(query_id, q_emb, q_nrm)`, collected in ONE job.
+    * Both reach executors as literals (see [[CentModel.router]] for the
+    * cost): the model's three arrays and the queries as a cell-keyed
+    * probe map. Values stay boxed, so a NULL norm or component stays
+    * NULL.
     */
   private final class IvfIndex(cents: Seq[Row], queries: Seq[Row]) {
-    private val (cids, cembs, cnrms) =
-      (cents.map(_.getLong(0)), cents.map(_.getSeq[Any](1)), cents.map(_.get(2)))
-    private val model = (new GenericArrayData(cids),
-      new GenericArrayData(cembs.map(new GenericArrayData(_))), new GenericArrayData(cnrms))
+    private def doubles(v: Any): Vector[java.lang.Double] =
+      v.asInstanceOf[scala.collection.Seq[java.lang.Double]].toVector
+    private val (cids, cembs, cnrms) = (cents.map(_.getLong(0)).toVector,
+      cents.map(c => doubles(c.get(1))).toVector, cents.map(_.getAs[java.lang.Double](2)).toVector)
 
-    /** The model as one row `(cids, cembs, cnrms)` for
+    /** The model's literal arrays `(cids, cembs, cnrms)` for
       * [[graft.functions.NearestCell]]. */
-    def row(spark: SparkSession): DataFrame = spark.createDataFrame(
-      java.util.List.of(Row(cids, cembs, cnrms)),
-      StructType(Seq(StructField("cids", ArrayType(LongType)),
-        StructField("cembs", ArrayType(ArrayType(DoubleType))),
-        StructField("cnrms", ArrayType(DoubleType)))))
+    def model: Seq[Column] = Seq(typedLit(cids), typedLit(cembs), typedLit(cnrms))
 
-    /** The probe table `(query_id, q_emb, q_nrm, cell)`: each query once
-      * per probed cell, its `nProbe` best cells ranked on the driver by
-      * the executors' own score. */
-    def probes(spark: SparkSession, nProbe: Int): DataFrame = {
-      val rows = for {
+    /** The probes as a literal map `cell -> [(query_id, q_emb, q_nrm)]`:
+      * each query under each of its `nProbe` best cells, ranked on the
+      * driver by the executors' own score. */
+    def probes(nProbe: Int): Column = {
+      val (ids, embs, nrms) = (new GenericArrayData(cids),
+        new GenericArrayData(cembs.map(new GenericArrayData(_))), new GenericArrayData(cnrms))
+      typedLit((for {
         q <- queries
-        cell <- graft.functions.NearestCell.ranked(new GenericArrayData(q.getSeq[Any](1)),
-          vFloat = false, q.getAs[java.lang.Double](2), model._1, model._2, model._3).take(nProbe)
-      } yield Row(q.get(0), q.get(1), q.get(2), cell)
-      spark.createDataFrame(rows.asJava, StructType(Seq(
-        StructField("query_id", LongType), StructField("q_emb", ArrayType(DoubleType)),
-        StructField("q_nrm", DoubleType), StructField("cell", LongType))))
+        p = IvfProbe(q.getLong(0), doubles(q.get(1)), q.getAs[java.lang.Double](2))
+        cell <- graft.functions.NearestCell.ranked(new GenericArrayData(p.q_emb), vFloat = false,
+          p.q_nrm, ids, embs, nrms).take(nProbe)
+      } yield cell -> p).groupMap(_._1)(_._2))
     }
   }
+
+  /** One probe of an [[IvfIndex]]: a query and its vector. */
+  private final case class IvfProbe(query_id: Long, q_emb: Vector[java.lang.Double],
+                                    q_nrm: java.lang.Double)
 
   private object IvfIndex {
     /** Centroids and queries (`vec_id < nQueries` of `c`) in one collect. */
@@ -260,31 +259,31 @@ object Similarity {
   }
 
   /** Every corpus vector with its rank-1 cell `(vec_id, embedding, nrm,
-    * cell)`: one projection against the one-row broadcast model (the
-    * codegen'd [[graft.functions.NearestCell]] — n rows in, n rows out).
-    * Factored out so consumers that vary only the probe count
-    * ([[knnIvfProbeSweep]]) materialize it ONCE.
+    * cell)`: one projection that scores it against the model's literal
+    * arrays (the codegen'd [[graft.functions.NearestCell]] — n rows in,
+    * n rows out). Factored out so consumers that vary only the probe
+    * count ([[knnIvfProbeSweep]]) materialize it ONCE.
     */
   private def cellAssign(c: DataFrame, index: IvfIndex): DataFrame = {
     graft.functions.NearestCell.register(c.sparkSession)
-    c.crossJoin(broadcast(index.row(c.sparkSession)))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        call_function(graft.functions.NearestCell.Name, col("embedding"), col("nrm"),
-          col("cids"), col("cembs"), col("cnrms")).as("cell"))
+    c.select(col("vec_id"), col("embedding"), col("nrm"),
+      call_function(graft.functions.NearestCell.Name,
+        col("embedding") +: col("nrm") +: index.model: _*).as("cell"))
   }
 
-  /** Probe + exact re-rank over a [[cellAssign]]ed corpus: a cell-keyed
-    * broadcast hash join against the driver-built probe table. Each
-    * vector sits in exactly one cell and each query's probed cells are
-    * distinct, so no (query, neighbor) pair can repeat.
+  /** Probe + exact re-rank over a [[cellAssign]]ed corpus: each vector
+    * explodes the probes of its own cell out of the literal probe map —
+    * no join. Each vector sits in exactly one cell and each query's
+    * probed cells are distinct, so no (query, neighbor) pair can repeat.
     */
   private def ivfSearch(cells: DataFrame, index: IvfIndex, k: Int, nProbe: Int): DataFrame = {
-    val probes = index.probes(cells.sparkSession, nProbe)
-    val scored = cells.join(broadcast(probes),
-        cells("cell") === probes("cell") && col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dotN(col("embedding"), col("q_emb")) /
-              (col("nrm") * col("q_nrm")), 6).as("cos"))
+    val scored = cells
+      .select(col("vec_id"), col("embedding"), col("nrm"),
+        explode(element_at(index.probes(nProbe), col("cell"))).as("p"))
+      .filter(col("p.query_id") =!= col("vec_id"))
+      .select(col("p.query_id").as("query_id"), col("vec_id").as("neighbor_id"),
+        round(dotN(col("embedding"), col("p.q_emb")) /
+              (col("nrm") * col("p.q_nrm")), 6).as("cos"))
     rankTopK(scored, k)
   }
 
@@ -308,8 +307,8 @@ object Similarity {
 
   /** IVF ANN with TRAINED coarse centroids — the deploy step of the
     * [[kmeansCentroids]] trainer, completing the ANN story: the
-    * pipeline shape is identical to [[knnIvf]] (one-row broadcast model,
-    * cell equi-join), only the centroid table changes, exactly
+    * pipeline shape is identical to [[knnIvf]] (literal model, literal
+    * probe map, no join), only the centroid table changes, exactly
     * as the knnIvf scaladoc promises. The recall audit
     * ([[knnIvfTrainedRecall]]) measures what training buys.
     */
@@ -325,14 +324,14 @@ object Similarity {
     * run through the batched decode plumbing
     * ([[Multimodal.decodeBatched]] with the deterministic
     * [[Multimodal.exactBatchDecoder]]), and the decoded feature
-    * vectors become the ANN corpus for the SAME IVF cell-equi-join
+    * vectors become the ANN corpus for the SAME IVF cell-probe
     * pipeline as [[knnIvf]] — the image-embedding-search shape (decode
     * → embed → index → query) a multimodal training pipeline runs,
     * with only the codec behind the decoder stubbed. The decoded
     * corpus is checkpointed once and feeds the driver-side model, the
-    * cell assignment and the query rows; candidate generation stays an
-    * equi-join on cell id (plan-asserted — the only cross join is
-    * against the one-row broadcast model).
+    * cell assignment and the query rows; candidate generation stays a
+    * lookup of each vector's cell in the literal probe map
+    * (plan-asserted — no join, no cross product).
     */
   def mediaIvfKnn(spark: SparkSession, dir: String, k: Int = 5,
                   nQueries: Int = 10, nCells: Int = 8, nProbe: Int = 2): DataFrame =
@@ -346,7 +345,7 @@ object Similarity {
     * are valid BMP containers ([[Multimodal.withBmpPayload]]) and the
     * features come out of an actual `javax.imageio` decode
     * ([[Multimodal.imageBatchDecoder]]) — pixels in, pixels out, then
-    * the identical IVF cell-equi-join pipeline. Oracle-checkable
+    * the identical IVF cell-probe pipeline. Oracle-checkable
     * because the fixture pixels derive deterministically from the
     * text bytes and each decoded feature is a dyadic rational: the
     * oracle predicts the decode, so a codec regression (wrong channel
@@ -745,11 +744,11 @@ object Similarity {
     * micro-unit centroids, index-aligned and cid-sorted. */
   private[graft] final case class CentModel(cids: Vector[Long], cqas: Vector[Vector[Long]]) {
 
-    /** The ONE-ROW routing frame `(cids ARRAY<BIGINT>, cqas
-      * ARRAY<ARRAY<BIGINT>>)` that [[route]] scores against; it
-      * broadcasts, so task size does not grow with k. */
-    def row(spark: SparkSession): DataFrame =
-      spark.createDataFrame(Seq((cids, cqas))).toDF("cids", "cqas")
+    /** The model as the literal columns [[route]] scores against. A
+      * literal travels in the task binary, which Spark broadcasts once
+      * per stage: the same k x dim payload a one-row broadcast model
+      * frame carries, without the job that collects the broadcast. */
+    def router: Router = Router(typedLit(cids), typedLit(cqas))
 
     /** The exploded cell rows `(cid, pos, cq)`. */
     def cellRows: Seq[(Long, Long, Long)] = for {
@@ -795,7 +794,7 @@ object Similarity {
                                       model: CentModel, members: Map[Long, Long]) {
 
     /** Final-cells routing `(vec_id, cid)` of the corpus. */
-    def routing: DataFrame = route(vqp, model.row(vqp.sparkSession)).select("vec_id", "cid")
+    def routing: DataFrame = route(vqp, model.router).select("vec_id", "cid")
   }
 
   /** The Lloyd loop shared by [[kmeansCentroids]], [[kmeansInertia]],
@@ -819,7 +818,7 @@ object Similarity {
 
   /** The Lloyd loop over the packed corpus checkpoint `vqp`: one
     * collect for the seed, then one [[lloydRound]] collect per round —
-    * the model never leaves the driver except as a broadcast row.
+    * the model reaches executors only as [[route]]'s literals.
     */
   private def lloyd(vqp: DataFrame, vqIds: Set[Int], k: Int, iters: Int): KmeansFit = {
     var prev = CentModel.seed(vqp, k)
@@ -847,12 +846,12 @@ object Similarity {
   }
 
   /** One Lloyd round as one aggregate over the packed corpus: route
-    * every vector against the broadcast `model` row, then
-    * [[lloydMeans]]. Output `(cid, pos, cq, n)`, k x dim rows for the
-    * driver.
+    * every vector against `model`'s literals, then [[lloydMeans]]. No
+    * join, so the round is one action. Output `(cid, pos, cq, n)`,
+    * k x dim rows for the driver.
     */
   private[graft] def lloydRound(vqp: DataFrame, model: CentModel): DataFrame =
-    lloydMeans(route(vqp, model.row(vqp.sparkSession)))
+    lloydMeans(route(vqp, model.router))
 
   /** The sufficient statistics of a Lloyd update over [[route]]d rows:
     * per `(keys..., cid, pos)` the coordinate sum `sum_vq` and the
@@ -873,35 +872,33 @@ object Similarity {
     lloydSums(routed, keys: _*).select(keys.map(col) ++ Seq(col("cid"), col("pos"),
       round(col("sum_vq").cast("double") / col("n")).cast("bigint").as("cq"), col("n")): _*)
 
+  /** A quantizer model as the columns [[route]] scores against:
+    * index-aligned centroid ids `cids ARRAY<BIGINT>` and packed
+    * centroids `cqas ARRAY<ARRAY<BIGINT>>` — literals of one
+    * [[CentModel]], or of the codebook a row's `sub` selects
+    * ([[PqBooks]]). */
+  private[graft] final case class Router(cids: Column, cqas: Column)
+
   /** THE router of every vector quantizer here: packed rows `(vec_id,
     * vqa, ...)` with their nearest centroid `cid` under `model` (the
     * codegen'd [[graft.functions.NearestCid]] argmin — `min(struct(d2,
-    * cid))` semantics exactly), plus the model arrays `cids`, `cqas`
-    * for [[centD2]]. `model` is a routing frame `(keys..., cids,
-    * cqas)`: the one-row [[CentModel.row]], nested-loop joined (the
-    * one-row broadcast the plan pins allow), or one row per key value
-    * ([[PqBooks.row]], one codebook per `sub`), broadcast equi-joined on
-    * the keys. Either way n rows in, n rows out.
+    * cid))` semantics exactly). One projection, no join: n rows in, n
+    * rows out.
     */
-  private def route(packed: DataFrame, model: DataFrame): DataFrame = {
+  private def route(packed: DataFrame, model: Router): DataFrame = {
     graft.functions.NearestCid.register(packed.sparkSession)
-    val keys = model.columns.filterNot(Set("cids", "cqas")).toSeq
-    val joined =
-      if (keys.isEmpty) packed.crossJoin(broadcast(model))
-      else packed.join(broadcast(model), keys)
-    joined.withColumn("cid", call_function(graft.functions.NearestCid.Name,
-      col("vqa"), col("cids"), col("cqas")))
+    packed.withColumn("cid", call_function(graft.functions.NearestCid.Name,
+      col("vqa"), model.cids, model.cqas))
   }
 
-  /** A routed row's centroid: its `cid` looked up in the model arrays
-    * `cids`, `cqas`. */
-  private def routedCentroid: Column =
-    element_at(col("cqas"), array_position(col("cids"), col("cid")).cast("int"))
+  /** A routed row's centroid: its `cid` looked up in `model`. */
+  private def routedCentroid(model: Router): Column =
+    element_at(model.cqas, array_position(model.cids, col("cid")).cast("int"))
 
   /** Exact squared distance of a routed row's `vqa` to its cell's
-    * centroid. */
-  private def centD2: Column =
-    call_function(graft.functions.SqDistLong.Name, col("vqa"), routedCentroid)
+    * centroid in `model`. */
+  private def centD2(model: Router): Column =
+    call_function(graft.functions.SqDistLong.Name, col("vqa"), routedCentroid(model))
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
     * arXiv:2303.09540 — the embedding-space dedup a pretraining corpus
@@ -922,9 +919,10 @@ object Similarity {
     * against.
     *
     * Scale shape: a fixed handful of Spark jobs whatever the round
-    * count — the driver-side fit ([[kmeansFitFrom]]), then ONE
-    * projection that routes each packed vector against the final
-    * model row and measures its centrality, then ONE per-cell pass
+    * count — the driver-side fit ([[kmeansFitFrom]], one aggregate
+    * action per round), then ONE projection that routes each packed
+    * vector against the final model's literals and measures its
+    * centrality, then ONE per-cell pass
     * ([[semanticCells]]): pairs are never formed across cells, so the
     * quadratic term is (n/k)^2 per cell and a task holds one cell,
     * O(width x d). k is DERIVED as round(sqrt(n)) ([[semanticK]]) so
@@ -950,8 +948,8 @@ object Similarity {
     // streaming ingest can reproduce — the in-loop assignment is vs
     // the previous round's centroids, a training artifact)
     graft.functions.SqDistLong.register(embs.sparkSession)
-    val members = route(fit.vqp, fit.model.row(embs.sparkSession))
-      .select(col("cid"), col("vec_id"), centD2.as("cent_d2"), col("vqa"))
+    val members = route(fit.vqp, fit.model.router)
+      .select(col("cid"), col("vec_id"), centD2(fit.model.router).as("cent_d2"), col("vqa"))
     semanticCells(members, maxD2)
   }
 
@@ -1049,8 +1047,7 @@ object Similarity {
     * batch and streamed routing cannot drift.
     */
   private[graft] def coarseAssign(rows: DataFrame, cents: DataFrame): DataFrame =
-    route(packEmbeddings(rows), CentModel.collect(cents).row(rows.sparkSession))
-      .select("vec_id", "cid", "vqa")
+    route(packEmbeddings(rows), CentModel.collect(cents).router).select("vec_id", "cid", "vqa")
 
   /** Cluster-quality audit of the trained fit: per final centroid, the
     * member count and the inertia (sum of squared distances of members
@@ -1067,7 +1064,7 @@ object Similarity {
     * VARCHAR, SURVEY §4b lesson 9).
     *
     * Scale shape: one projection over the checkpointed corpus against
-    * two broadcast model rows, then a k-row aggregate — auditing
+    * the literals of two models, then a k-row aggregate — auditing
     * costs one corpus pass, nothing new shuffles.
     */
   def kmeansInertia(spark: SparkSession, dir: String,
@@ -1076,10 +1073,7 @@ object Similarity {
     // the last round's membership (routed against `prev`), each member
     // measured against its UPDATED centroid in the final model
     graft.functions.SqDistLong.register(spark)
-    val d2 = route(fit.vqp, fit.prev.row(spark))
-      .select(col("cid"), col("vqa"))
-      .crossJoin(broadcast(fit.model.row(spark)))
-      .select(col("cid"), centD2.as("d2"))
+    val d2 = route(fit.vqp, fit.prev.router).select(col("cid"), centD2(fit.model.router).as("d2"))
     d2.groupBy("cid")
       .agg(count(lit(1)).as("n_members"),
            sum(col("d2").cast("decimal(38,0)")).cast("string").cast("double")
@@ -1347,10 +1341,11 @@ object Similarity {
     *
     * Scale shape: training is the k-means Lloyd loop per subspace on a
     * driver-side model ([[pqTrain]]); encoding is one projection of
-    * the packed corpus against the books, broadcast equi-joined on the
-    * subspace — no window over corpus rows except the per-query top-k
-    * ranks. The brute-force side is the audit's oracle truth, bounded
-    * by the fixed query count, not a production path.
+    * the packed corpus against the books' literals, each subvector
+    * scored against its subspace's codebook — no window over corpus
+    * rows except the per-query top-k ranks. The brute-force side is
+    * the audit's oracle truth, bounded by the fixed query count, not a
+    * production path.
     */
   def pqRecall(spark: SparkSession, dir: String, nSubs: Int = 8,
                nCodes: Int = 16, k: Int = 5, nQueries: Int = 10): DataFrame =
@@ -1433,11 +1428,13 @@ object Similarity {
     * `subs(s)` routing subvector `s`. */
   private final case class PqBooks(subs: Vector[CentModel]) {
 
-    /** The routing frame `(sub, cids, cqas)`, one row per subspace:
-      * [[route]] broadcast equi-joins it on `sub`. */
-    def row(spark: SparkSession): DataFrame =
-      spark.createDataFrame(subs.zipWithIndex.map { case (m, s) => (s.toLong, m.cids, m.cqas) })
-        .toDF("sub", "cids", "cqas")
+    /** The books as [[route]]'s literals: a row's `sub` picks its
+      * subspace's codebook. */
+    def router: Router = {
+      val sub = (col("sub") + 1).cast("int")
+      Router(element_at(typedLit(subs.map(_.cids)), sub),
+        element_at(typedLit(subs.map(_.cqas)), sub))
+    }
 
     /** The published books `(cid, sub, pos, cq)`, `pos` the position in
       * the whole vector. */
@@ -1451,7 +1448,7 @@ object Similarity {
 
     /** The codes `(vec_id, sub, cid)` of a packed corpus `(vec_id, vqa)`. */
     def codes(vqp: DataFrame): DataFrame =
-      route(subVectors(vqp, subs.size), row(vqp.sparkSession)).select("vec_id", "sub", "cid")
+      route(subVectors(vqp, subs.size), router).select("vec_id", "sub", "cid")
   }
 
   private object PqBooks {
@@ -1507,8 +1504,8 @@ object Similarity {
     * the two rounds is one aggregate action: [[route]] every packed
     * subvector against its subspace's codebook, then the integer means
     * of [[lloydMeans]] with `sub` as one more key, collected into the
-    * next books; the books never leave the driver except as the
-    * broadcast routing frame. At sf0.01 with 50 queries the second
+    * next books; the books reach executors only as [[route]]'s
+    * literals. At sf0.01 with 50 queries the second
     * round lifts raw ADC 0.248 -> 0.256, rerank 0.716 -> 0.748, IVF-PQ
     * 0.408 -> 0.420; a third is not worth a corpus pass per composite.
     * All arithmetic stays BIGINT micro-units, so the trained scheme
@@ -1528,7 +1525,7 @@ object Similarity {
       CentModel(seeds.map(_._1), seeds.map(_._2.slice(s * subDim, (s + 1) * subDim)))))
     val subs = subVectors(vqp, nSubs)
     (1 to 2).foldLeft(seed) { (books, _) =>
-      PqBooks.of(nSubs, lloydMeans(route(subs, books.row(spark)), "sub").collect()
+      PqBooks.of(nSubs, lloydMeans(route(subs, books.router), "sub").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq)
     }
   }
@@ -1762,9 +1759,9 @@ object Similarity {
     // lookup of centD2.
     val (sq, routed) = graft.Par.run2(
       graft.Caches.trackedCheckpoint(subRows(fit.vqp, 8))._1,
-      graft.Caches.trackedCheckpoint(route(fit.vqp, fit.model.row(spark))
+      graft.Caches.trackedCheckpoint(route(fit.vqp, fit.model.router)
         .select(col("vec_id"), col("cid"),
-          zip_with(col("vqa"), routedCentroid, (x, c) => x - c).as("vqa")))._1)
+          zip_with(col("vqa"), routedCentroid(fit.model.router), (x, c) => x - c).as("vqa")))._1)
     val routing = routed.select("vec_id", "cid")
     val cents = fit.model.cells(spark)
     // PQ trained on residuals — same seeding/rounds as the raw scheme
@@ -2164,7 +2161,7 @@ object Similarity {
     * integers. Missing neighbors contribute 0 on both engines.
     *
     * Same plan shape as [[knnIvfRecall]]: one checkpointed corpus
-    * feeds both paths, candidate generation is a cell equi-join, the
+    * feeds both paths, candidate generation is a cell-probe lookup, the
     * eval joins run on (nQueries x k)-bounded shortlists.
     */
   /** Micro-unit RRF rank weights `round(1e12 / (60 + rank))` for rank
@@ -2219,7 +2216,7 @@ object Similarity {
     * only double is the final round-6 recall ratio of exact counts.
     *
     * Scale shape: the three retrievers share ONE checkpointed corpus
-    * (each a one-row model broadcast assign + cell equi-join, the
+    * (each a literal-model cell assign + literal probe-map lookup, the
     * knnIvf shape); fusion and the recall joins run on (retrievers × nQueries
     * × k)-bounded shortlists — never corpus-sized. The one crossJoin
     * broadcasts a 1-row count aggregate (the documented pattern).

@@ -40,13 +40,13 @@ class KmeansSpec extends SparkSuite {
     assert(Caches.isEmpty(spark))
   }
 
-  test("a Lloyd round adds at most 3 Spark jobs, the same number every round") {
+  test("a Lloyd round adds at most 2 Spark jobs, the same number every round") {
     def jobs(iters: Int): Int =
       try jobsRun(Similarity.kmeansInertia(spark, sfDir, k = 8, iters = iters).collect())
       finally Caches.releaseAll(spark)
     val counts = Seq(2, 3, 4).map(jobs)
     val perRound = counts.zip(counts.tail).map { case (a, b) => b - a }
-    assert(perRound.distinct.size == 1 && perRound.head <= 3,
+    assert(perRound.distinct.size == 1 && perRound.head <= 2,
       s"jobs at iters 2/3/4: ${counts.mkString("/")}")
   }
 

@@ -65,37 +65,25 @@ class PlanSpec extends SparkSuite {
     assert(exchanges <= 1, s"chunking must not shuffle before the output sort:\n$plan")
   }
 
-  test("kmeans broadcasts a one-row model; its result reads no corpus") {
-    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
-    import org.apache.spark.sql.execution.LocalTableScanExec
-    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+  test("a Lloyd round has no join and no broadcast; the kmeans result reads no corpus") {
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     // the centroid table is built on the driver from the fitted model
     val result = Similarity.kmeansCentroids(spark, sfDir).queryExecution.sparkPlan
     assert(result.collectLeaves().forall(_.isInstanceOf[LocalTableScanExec]), result)
-    // a round routes the packed corpus against ONE model row: the only
-    // nested-loop join, and its broadcast side is that row
+    // a round routes the packed corpus against the model's literals: a
+    // projection, so neither a join nor a BroadcastExchange job
     val fit = Similarity.kmeansFitFrom(Tables.embeddings(spark, sfDir), k = 8, iters = 1)
-    val round = Similarity.lloydRound(fit.vqp, fit.model).queryExecution.sparkPlan
-    assert(round.collect { case c: CartesianProductExec => c }.isEmpty, round)
-    val nlj = round.collect { case j: BroadcastNestedLoopJoinExec => j }
-    assert(nlj.size == 1, round)
-    val built = nlj.head.buildSide match {
-      case BuildLeft => nlj.head.left
-      case BuildRight => nlj.head.right
-    }
-    assert(built.collectLeaves().map {
-      case l: LocalTableScanExec => l.rows.size
-      case _ => -1
-    } == Seq(1), round)
+    val round = physical(Similarity.lloydRound(fit.vqp, fit.model))
+    assert(round.collect { case j: BaseJoinExec => j }.isEmpty, round)
+    assert(round.collect { case b: BroadcastExchangeExec => b }.isEmpty, round)
     Caches.release(spark, fit.vqIds)
   }
 
-  test("media->ANN composition keeps the IVF cell equi-join (broadcast centroids only)") {
+  test("media->ANN composition generates IVF candidates without a join") {
     val plan = formatted(graft.operators.Similarity.mediaIvfKnn(spark, sfDir))
-    // candidate generation must be the hash equi-join on cell id; the
-    // only nested-loop join allowed is the broadcast against the
-    // one-row model
-    assert(plan.contains("BroadcastHashJoin"), plan)
+    // each vector looks its cell up in the literal probe map: no join,
+    // so no cross product either
+    assert(!plan.contains("Join"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
@@ -241,9 +229,9 @@ class PlanSpec extends SparkSuite {
   }
 
   test("rrf fusion: cell equi-joins + bounded-shortlist fusion — no cartesian") {
-    // each retriever is the knnIvf shape (one-row model broadcast
-    // assign, cell-keyed hash join); the only nested loops are the
-    // one-row broadcasts (the model, the denominator aggregate)
+    // each retriever is the knnIvf shape (literal-model cell assign,
+    // literal probe-map lookup, no join); the only nested loop is the
+    // one-row denominator aggregate's broadcast
     val plan = formatted(Similarity.rrfFusion(spark, sfDir))
     assert(!plan.contains("CartesianProduct"), plan)
   }
@@ -446,10 +434,9 @@ class PlanSpec extends SparkSuite {
     case p => p
   }
 
-  test("IVF knn: no cross product, per-vector window or distinct; only local broadcasts") {
+  test("IVF knn: no cross product, per-vector window, distinct or broadcast") {
     def shape(df: DataFrame): (Boolean, Boolean, Boolean, Boolean) = {
       val plan = physical(df)
-      val broadcasts = plan.collect { case b: BroadcastExchangeExec => b.child }
       (plan.exists(_.isInstanceOf[CartesianProductExec]),
         plan.exists {
           case w: WindowExec => w.partitionSpec.exists(_.references.exists(_.name == "vec_id"))
@@ -459,16 +446,15 @@ class PlanSpec extends SparkSuite {
           case a: HashAggregateExec => a.aggregateExpressions.isEmpty
           case _ => false
         },
-        broadcasts.nonEmpty &&
-          broadcasts.forall(_.collectLeaves().forall(_.isInstanceOf[LocalTableScanExec])))
+        !plan.exists(_.isInstanceOf[BroadcastExchangeExec]))
     }
     val plan = formatted(Similarity.knnIvf(spark, sfDir))
-    val (cartesian, vecWindow, distinct, localBroadcasts) = shape(Similarity.knnIvf(spark, sfDir))
+    val (cartesian, vecWindow, distinct, noBroadcast) = shape(Similarity.knnIvf(spark, sfDir))
     assert(!cartesian, plan)
     assert(!vecWindow, s"per-vector rank window in:\n$plan")
     assert(!distinct, s"distinct aggregate in:\n$plan")
-    assert(localBroadcasts, s"a broadcast side is not a driver-built local table:\n$plan")
-    // the checks see the replaced row_number form's window, distinct and scanned broadcasts
+    assert(noBroadcast, s"a broadcast exchange (one more job) in:\n$plan")
+    // the checks see the replaced row_number form's window, distinct and broadcasts
     assert(shape(ReplacedForms.knnIvf(spark, sfDir, 5, 10, 16, 2)) == ((false, true, true, false)))
   }
 

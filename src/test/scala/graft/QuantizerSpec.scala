@@ -76,11 +76,11 @@ class QuantizerSpec extends SparkSuite {
 
   test("pqModel runs a fixed number of Spark jobs, one aggregate action per Lloyd round") {
     val jobs = try jobsRun(Similarity.pqModel(spark, sfDir)) finally Caches.releaseAll(spark)
-    // 4 to read, pack and checkpoint the corpus and collect the seed,
-    // then 3 per Lloyd round (the books' broadcast, the aggregate's map
-    // stage, its result); a per-round checkpoint or books join-back
-    // would add jobs
-    assert(jobs == 4 + 2 * 3, s"pqModel ran $jobs Spark jobs")
+    // 3 to pack and checkpoint the corpus and collect the seed, then 2
+    // per Lloyd round (the aggregate's map stage, its result); a books
+    // broadcast, a per-round checkpoint or a books join-back would add
+    // jobs
+    assert(jobs == 3 + 2 * 2, s"pqModel ran $jobs Spark jobs")
   }
 
   /** The main sources. */
